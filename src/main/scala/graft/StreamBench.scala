@@ -23,20 +23,14 @@ object StreamBench {
     val nEvents = args.headOption.map(_.toInt).getOrElse(2_000_000)
     val nFiles = 10 // one file ≈ one micro-batch
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // State-store instances = shuffle partitions; the aggregate has ~10
-    // keys, so a narrow shuffle keeps per-batch state commits cheap
-    // (measured: 16 instances cost ~3.3 s/batch even for 0 rows).
-    // SPARK_GRAFT_STREAM_PARTITIONS widens it for the sizing experiments
-    // in SCALE.md; SPARK_GRAFT_STATE_STORE=rocksdb swaps the in-memory-
-    // HashMap-with-HDFS-snapshots default for the RocksDB provider — the
-    // one that holds when per-instance state outgrows executor heap
-    // (dedup keys, session windows at 100 TB), at a per-batch commit cost
-    // this bench quantifies.
-    val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4")
+    // SPARK_GRAFT_STATE_STORE=rocksdb swaps the in-memory-HashMap-with-
+    // HDFS-snapshots default for the RocksDB provider — the one that holds
+    // when per-instance state outgrows executor heap (dedup keys, session
+    // windows at 100 TB), at a per-batch commit cost this bench quantifies.
+    // RidePipeline sets the state-store width itself.
     val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", streamParts)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     if (stateStore == "rocksdb") builder.config(
@@ -84,7 +78,7 @@ object StreamBench {
       query.recentProgress.foreach(p => System.err.println(
         s"[sbench] batch=${p.batchId} rows=${p.numInputRows} durationMs=${p.durationMs}"))
     val totalTrips = sink.cityMetrics.values.map(_.total_trips).sum
-    println(s"""{"metric":"stream_events_per_sec","value":${(nEvents / secs).round},"unit":"events/sec","events":$nEvents,"seconds":$secs,"trips_in_sink":$totalTrips,"source":"file","state_store":"$stateStore","partitions":$streamParts}""")
+    println(s"""{"metric":"stream_events_per_sec","value":${(nEvents / secs).round},"unit":"events/sec","events":$nEvents,"seconds":$secs,"trips_in_sink":$totalTrips,"source":"file","state_store":"$stateStore"}""")
     spark.stop()
   }
 }

@@ -25,7 +25,10 @@ object Metrics {
       idCol: String = "trip_id",
       valueCol: String = "fare_amount",
       windowDuration: String = "1 minute",
-      lateness: String = "10 minutes")
+      lateness: String = "10 minutes") {
+    /** The input columns the aggregate reads. */
+    def columns: Seq[String] = Seq(timeCol, keyCol, idCol, valueCol)
+  }
 
   /** A1–A3 + W1–W2 + P4: watermark (streaming only) → tumbling window ×
     * key → count(id), avg(value) → flatten with `window.end` as

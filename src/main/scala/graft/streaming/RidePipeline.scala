@@ -3,8 +3,9 @@ package graft.streaming
 import graft.model.Schemas
 import graft.ops.{Ingest, Metrics}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** The reference's end-to-end streaming job re-expressed Spark-first
   * (reference: spark_jobs/streaming_job.py:63-135):
@@ -21,11 +22,16 @@ import org.apache.spark.sql.Row
 object RidePipeline {
 
   /** The analytic plan from a raw frame with a `value` payload column to
-    * per-(window, city) metrics. Works on batch and streaming frames. */
+    * per-(window, city) metrics. Works on batch and streaming frames.
+    * Parses only the wire fields the aggregate reads (`spec.columns`):
+    * `from_json` stays whole when its struct feeds several fields, so
+    * pruning has to happen in the schema. Rows come out as with the full
+    * schema — a malformed field outside the four is never parsed, and a
+    * malformed one inside yields the same nulls (StreamingSpec pins this). */
   def metricsPlan(raw: DataFrame, streaming: Boolean): DataFrame = {
     val spec = Metrics.WindowSpec()
-    val parsed = Ingest.consume(Schemas.rideEventSchema)(raw)
-    Metrics.windowedMetrics(spec, streaming)(parsed)
+    val read = StructType(Schemas.rideEventSchema.filter(f => spec.columns.contains(f.name)))
+    Metrics.windowedMetrics(spec, streaming)(Ingest.consume(read)(raw))
   }
 
   /** Kafka source, production shape (unexercised in the test env — no
@@ -39,20 +45,43 @@ object RidePipeline {
       .option("startingOffsets", "earliest")
       .load()
 
+  /** State-store partitions of the (window, city) aggregate on a fresh
+    * checkpoint. Every batch commits every state-store instance, even one
+    * with no rows, and the live keys are at most cities × open windows
+    * (~10 × 11), pre-aggregated per input split before the exchange. So
+    * one instance holds them all, and each further one only adds a commit. */
+  private val StatePartitions = 1
+
   /** Wire the metrics stream into a foreachBatch upsert sink, update mode,
     * 1-minute processing-time trigger (reference: streaming_job.py:128-132),
     * plus a checkpoint dir (proper practice the reference omits —
-    * SURVEY.md §2.6.6). */
+    * SURVEY.md §2.6.6).
+    *
+    * A fresh checkpoint runs the aggregate at `StatePartitions`, so the
+    * sink gets each batch in that many partitions; a checkpoint that exists
+    * keeps the width its offset log records. The query snapshots its
+    * session's conf when it is constructed, so the shuffle width is set
+    * only around `start()` and the caller's value restored after; the query
+    * stays in the caller's `spark.streams`. The lock keeps concurrent starts
+    * from restoring each other's value. */
   def start(metrics: DataFrame, sink: UpsertSink, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    metrics.writeStream
+      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery = {
+    val writer = metrics.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         sink.merge(batch, epochId)
       }
-      .start()
+    val conf = metrics.sparkSession.conf
+    val key = SQLConf.SHUFFLE_PARTITIONS.key
+    synchronized {
+      val callers = conf.getAll.get(key)
+      conf.set(key, StatePartitions.toLong)
+      try writer.start()
+      finally callers.fold(conf.unset(key))(conf.set(key, _))
+    }
+  }
 }
 
 /** Keyed upsert sink with exactly-once *intent* semantics (SURVEY.md
@@ -184,9 +213,14 @@ class JdbcUpsertSink(url: String, table: String) extends UpsertSink {
     try f(conn) finally conn.close()
   }
 
-  /** Create the target once; tolerate "already exists" so restarts and
-    * multiple sinks against one database are safe. */
-  def ensureTarget(): Unit = withConn { conn =>
+  /** Stage table of this sink instance: two sinks on one database must not
+    * overwrite each other's stage between its write and its MERGE. */
+  private val stage =
+    s"${table}_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+
+  /** Create the target; tolerate "already exists" so restarts and multiple
+    * sinks against one database are safe. */
+  private lazy val target: Unit = withConn { conn =>
     try conn.createStatement().executeUpdate(
       s"""CREATE TABLE $table ("city" VARCHAR(64) NOT NULL,
          |  "window_end" TIMESTAMP NOT NULL, "total_trips" BIGINT,
@@ -194,9 +228,13 @@ class JdbcUpsertSink(url: String, table: String) extends UpsertSink {
     catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
   }
 
+  /** Creates the target on the first call only. */
+  def ensureTarget(): Unit = target
+
+  /** Stage the batch, MERGE it into the target, and drop the stage in the
+    * same connection, so no per-instance stage outlives its merge. */
   override def merge(batch: DataFrame, epochId: Long): Unit = {
     ensureTarget()
-    val stage = s"${table}_stage"
     batch.select(MergeSql.sourceCols.zip(MergeSql.targetCols)
         .map { case (s, t) => col(s).as(t) }: _*)
       .write.mode(SaveMode.Overwrite).format("jdbc")
@@ -204,6 +242,10 @@ class JdbcUpsertSink(url: String, table: String) extends UpsertSink {
       // can't be compared in the MERGE's ON clause — pin a VARCHAR key
       .option("createTableColumnTypes", "city VARCHAR(64)")
       .option("url", url).option("dbtable", stage).save()
-    withConn(_.createStatement().executeUpdate(MergeSql.ansiMergeStatement(table, stage)))
+    withConn { conn =>
+      val st = conn.createStatement()
+      st.executeUpdate(MergeSql.ansiMergeStatement(table, stage))
+      st.executeUpdate(s"DROP TABLE $stage")
+    }
   }
 }

@@ -443,6 +443,141 @@ class StreamingSpec extends SparkSuite {
       back.toString)
   }
 
+  test("two JDBC sinks merging concurrently into one database leave the union of their rows") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val url = "jdbc:derby:memory:graftdb_two_sinks;create=true"
+    // each sink owns one city; every merge updates the previous window and
+    // adds the next, so MATCHED and NOT MATCHED both run on both sinks
+    def batch(city: String, i: Int) = Seq(i, i + 1).map { w =>
+      (city, new java.sql.Timestamp(((t0 + 60 * w) * 1000).toLong), (i + w).toLong, 10.0 * i + w)
+    }.toDF("city", "last_updated", "total_trips", "average_fare")
+    val cities = Seq("nyc", "sf")
+    val merges = 6
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(cities.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val runs = cities.map { city =>
+        val sink = new graft.streaming.JdbcUpsertSink(url, "city_metrics")
+        Future((0 until merges).foreach(i => sink.merge(batch(city, i), i.toLong)))
+      }
+      Await.result(Future.sequence(runs), 5.minutes)
+    } finally pool.shutdown()
+    val back = spark.read.format("jdbc").option("url", url).option("dbtable", "city_metrics")
+      .load().as[(String, java.sql.Timestamp, Long, Double)].collect().toSet
+    // window w holds the values of the last merge that wrote it
+    val want = cities.flatMap { city =>
+      (0 to merges).map { w =>
+        val i = math.min(w, merges - 1)
+        (city, new java.sql.Timestamp(((t0 + 60 * w) * 1000).toLong), (i + w).toLong, 10.0 * i + w)
+      }
+    }.toSet
+    assert(back == want, s"${back.diff(want)} vs ${want.diff(back)}")
+    val conn = java.sql.DriverManager.getConnection(url)
+    val stages = try {
+      val rs = conn.getMetaData.getTables(null, null, "CITY_METRICS_STAGE%", null)
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList
+    } finally conn.close()
+    assert(stages.isEmpty, s"stage tables left behind: $stages")
+  }
+
+  test("a fresh checkpoint runs the aggregate on one state store; an existing one keeps its width") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+    val key = "spark.sql.shuffle.partitions"
+    def widths(q: StreamingQuery): Set[Long] =
+      q.recentProgress.flatMap(_.stateOperators).map(_.numStateStoreInstances.toLong).toSet
+    val first = Seq(rideJson("nyc", t0 + 10, 10.0, "a"), rideJson("sf", t0 + 70, 20.0, "b"))
+    val second = Seq(rideJson("nyc", t0 + 20, 30.0, "c"), rideJson("la", t0 + 130, 40.0, "d"))
+    val want = runBatches(Seq(first, second)).cityMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft-width").toString
+
+    // fresh checkpoint on a session eight partitions wide
+    val wide = spark.newSession()
+    wide.conf.set(key, "8")
+    (first ++ second).toDF("value").write.parquet(s"$dir/fresh")
+    val freshSink = new InMemoryUpsertSink
+    val q = RidePipeline.start(
+      RidePipeline.metricsPlan(wide.readStream.schema("value STRING").parquet(s"$dir/fresh"),
+        streaming = true), freshSink, s"$dir/ckpt-fresh", Trigger.ProcessingTime(0))
+    try {
+      assert(wide.conf.get(key) == "8")
+      assert(wide.streams.active.exists(_.id == q.id))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(widths(q) == Set(1L))
+    assert(freshSink.cityMetrics == want)
+
+    // a checkpoint written at width 4 by a plain writeStream, restarted
+    // through RidePipeline: the offset log's width wins, state carries over
+    val sink = new InMemoryUpsertSink
+    def source = spark.readStream.schema("value STRING").parquet(s"$dir/old")
+    first.toDF("value").write.mode("append").parquet(s"$dir/old")
+    val old = RidePipeline.metricsPlan(source, streaming = true).writeStream
+      .outputMode(OutputMode.Update()).option("checkpointLocation", s"$dir/ckpt-old")
+      .trigger(Trigger.ProcessingTime(0))
+      .foreachBatch { (b: DataFrame, id: Long) => sink.merge(b, id) }
+      .start()
+    try old.processAllAvailable() finally old.stop()
+    assert(widths(old) == Set(4L))
+    second.toDF("value").write.mode("append").parquet(s"$dir/old")
+    val restarted = RidePipeline.start(RidePipeline.metricsPlan(source, streaming = true),
+      sink, s"$dir/ckpt-old", Trigger.ProcessingTime(0))
+    try restarted.processAllAvailable() finally restarted.stop()
+    assert(widths(restarted) == Set(4L))
+    assert(sink.cityMetrics == want, s"${sink.cityMetrics} vs $want")
+  }
+
+  test("the pipeline parses only the four fields it reads, with the full schema's results") {
+    import graft.model.Schemas
+    import graft.ops.{Ingest, Metrics}
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.types.StructType
+    // Spark 4.1's default; the equivalence below holds because a field
+    // that fails to parse nulls only itself
+    assert(spark.conf.get("spark.sql.json.enablePartialResults") == "true")
+    val payloads = Seq(
+      rideJson("nyc", t0 + 10, 10.0, "a"),
+      s"""{"trip_id":"b","city":"nyc","fare_amount":20.0,"tip_amount":"n/a","event_timestamp":${t0 + 20}}""",
+      s"""{"trip_id":"c","pickup_location":"oops","city":"sf","fare_amount":30.0,"event_timestamp":${t0 + 30}}""",
+      s"""{"trip_id":"d","city":"sf","fare_amount":"x","event_timestamp":${t0 + 40}}""",
+      rideJson("la", t0 + 50, 5.0, "e").dropRight(1), // truncated: no closing brace
+      s"""{"trip_id":"f","city":"la","fare_amount":7.0,"event_timestamp":${t0 + 60},"tip_amo""")
+    val raw = payloads.toDF("value")
+    val full = Ingest.consume(Schemas.rideEventSchema)(raw)
+    val spec = Metrics.WindowSpec()
+
+    // batch: the same per-window rows as the full-schema twin
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Long, Option[Double], java.sql.Timestamp)].collect().toSet
+    val got = rows(RidePipeline.metricsPlan(raw, streaming = false))
+    assert(got == rows(Metrics.windowedMetrics(spec, streaming = false)(full)))
+    assert(got.toSeq.map(_._2).sum >= 4, got) // rows with a malformed field still count
+
+    // stream: one parse per row (the window's null-time filter stays above
+    // the watermark node; a batch plan pushes it below the parse and parses
+    // event_timestamp twice), and the sink equals the full-schema twin
+    val dir = java.nio.file.Files.createTempDirectory("graft-parse").toString
+    raw.write.text(s"$dir/in")
+    val oneBatch = spark.newSession() // so the last execution is the data batch
+    oneBatch.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val sink = new InMemoryUpsertSink
+    val q = RidePipeline.start(
+      RidePipeline.metricsPlan(oneBatch.readStream.text(s"$dir/in"), streaming = true),
+      sink, s"$dir/ckpt", Trigger.ProcessingTime(0))
+    try q.processAllAvailable() finally q.stop()
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+    val parses = plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+    assert(parses.size == 1, plan)
+    assert(parses.head.dataType.asInstanceOf[StructType].fieldNames.toSet ==
+      Set("trip_id", "fare_amount", "city", "event_timestamp"))
+    val twin = Metrics.accumulatedMetrics(spec)(full)
+      .as[(String, Long, Double, java.sql.Timestamp)].collect()
+      .map { case (c, n, avg, ts) => c -> graft.model.CityMetric(c, n, avg, ts) }.toMap
+    assert(sink.cityMetrics == twin, s"${sink.cityMetrics} vs $twin")
+  }
+
   test("PG upsert string is generated from the Derby-proven clause lists") {
     import graft.streaming.MergeSql
     // Both dialect strings derive from the same keyCols/valCols/sourceCols,
