@@ -9,16 +9,29 @@ import org.apache.spark.sql.execution.ExplainMode
   * WholeStageCodegen spans can be reviewed. `sbt "runMain graft.Explain
   * [sfDir] [out.md]"`. */
 object Explain {
+  /** The formatted physical plan of SparkEntry query `name` at `sfDir`,
+    * or `ERROR: <message>` when building it throws. The query's
+    * construction-time caches are cleared afterwards (see `main`). Plans
+    * can embed raw control bytes in expression literals (the ustar NUL
+    * padding in mm_tar_shards' concat tree turned the whole file "binary"
+    * for grep/diff); they are rendered as `\xNN` escapes so every receipt
+    * stays a text file. */
+  def plan(spark: SparkSession, name: String, sfDir: String): String = {
+    val text =
+      try SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.explainString(ExplainMode.fromString("formatted"))
+      catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
+      finally spark.catalog.clearCache()
+    text.map {
+      case c if c == '\n' || c == '\t' || c >= ' ' => c.toString
+      case c => f"\\x${c.toInt}%02x"
+    }.mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4)
     val sb = new StringBuilder
     sb.append(s"# Physical plans (sf dir: $sfDir)\n\n")
     sb.append("Audit artifact — regenerate with `sbt \"runMain graft.Explain\"`.\n")
@@ -27,17 +40,15 @@ object Explain {
     // fragment prints the InMemoryRelation's full child tree at every
     // reference, and the textual expansion compounds — graph_leiden's
     // caches once inflated graph_louvain_multilevel's section to 1.2M
-    // lines. Clear between queries (the gate-boundary behavior), and cap
-    // any still-pathological section loudly instead of flooding the file.
+    // lines. `plan` clears between queries (the gate-boundary behavior);
+    // cap any still-pathological section loudly instead of flooding the
+    // file.
     val maxLines = 4000
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan =
-        try fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
-        catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
-        finally spark.catalog.clearCache()
-      val lines = plan.linesIterator.toSeq
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+      val text = plan(spark, name, sfDir)
+      val lines = text.linesIterator.toSeq
       val capped =
-        if (lines.size <= maxLines) plan
+        if (lines.size <= maxLines) text
         else lines.take(maxLines).mkString("", "\n",
           s"\n... TRUNCATED: ${lines.size - maxLines} more lines " +
             "(pathological textual expansion — audit interactively)\n")
@@ -59,24 +70,12 @@ object Explain {
     if (auditSf.isDirectory) {
       Seq("sql_entrypoint", "dedup_minhash_lsh", "dedup_groups",
           "decon_ngram", "pack_sequences", "rel_bloom_semi_join").foreach { name =>
-        val plan =
-          try SparkEntry.queries(name)(spark, auditSf.getPath)
-            .queryExecution.explainString(ExplainMode.fromString("formatted"))
-          catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
-        sb.append(s"\n## scale-audit:$name (sf0.1)\n\n```\n$plan```\n")
+        sb.append(s"\n## scale-audit:$name (sf0.1)\n\n```\n${plan(spark, name, auditSf.getPath)}```\n")
       }
     } else {
       sb.append(s"\n(scale-audit section skipped: no sf0.1 sibling of $sfDir)\n")
     }
-    // Plans can embed raw control bytes in expression literals (the ustar
-    // NUL padding in mm_tar_shards' concat tree turned the whole file
-    // "binary" for grep/diff); render them as escapes so the artifact
-    // stays a text file.
-    val text = sb.toString.map {
-      case c if c == '\n' || c == '\t' || c >= ' ' => c.toString
-      case c => f"\\x${c.toInt}%02x"
-    }.mkString
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), text)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
     println(s"wrote $out")
     spark.stop()
   }

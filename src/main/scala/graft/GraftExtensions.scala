@@ -10,7 +10,9 @@ import graft.functions._
   * into every session built with
   * `spark.sql.extensions=graft.GraftExtensions` — the standard way a
   * Spark-native library ships cluster-wide (no per-session register()
-  * call). Injected functions resolve in SQL text and survive into views. */
+  * call). Injected functions resolve in SQL text and survive into views.
+  * This is the engine's one SQL function table; a session that is already
+  * running gets it through `GraftBridge.applyFunctionExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")

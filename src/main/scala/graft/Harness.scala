@@ -1,0 +1,22 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one session builder: Bench, Verify, Explain, the tools and the
+  * test suites all take their session from here, each passing the core
+  * count it runs with. */
+object Harness {
+  /** `local[cpus]` with one shuffle partition per core, UTC session time,
+    * no UI, WARN logging. A session already running in this JVM is
+    * returned with the SQL settings applied (`getOrCreate`). */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -6,6 +6,7 @@ import graft.sources.Sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Driver contract (SURVEY.md §7): one `queries` entry per operator of the
   * engine's inventory, each with DuckDB-equivalent `oracleSql` where the
@@ -1314,9 +1315,11 @@ object SparkEntry {
       Skew.saltedCountSum(t(s, dir, "orders"), "o_orderpriority", "o_totalprice",
         salts = 8, idCols = Seq("o_orderkey"))),
 
-    // Native expressions through the SQL surface (FunctionRegistry).
+    // Native expressions through the SQL surface (FunctionRegistry). The
+    // query installs them itself: a session built without
+    // spark.sql.extensions=graft.GraftExtensions has none.
     "sql_native_funcs" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
+      GraftBridge.applyFunctionExtensions(new GraftExtensions, s)
       t(s, dir, "embeddings").createOrReplaceTempView("embeddings")
       s.sql(
         """SELECT e.vec_id,
@@ -1333,7 +1336,7 @@ object SparkEntry {
     // access on text_repetition, array result of shingle_md5_keys) — the
     // same codepaths as the Column API, resolved by name via the registry.
     "sql_text_funcs" -> { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
+      GraftBridge.applyFunctionExtensions(new GraftExtensions, s)
       t(s, dir, "documents").createOrReplaceTempView("documents")
       s.sql(
         """SELECT doc_id,
@@ -1687,10 +1690,11 @@ object SparkEntry {
     // corpus-sized stage) feeds the SAME Q×C-bounded re-rank frames.
     // IVF candidates are approximate, so the gate is per-query
     // containment of the IVF-MMR picks in the brute-force-MMR picks
-    // (the ann_ivf_recall convention; RecallProbe measured per-query
-    // 6–8 of 8 at sf0.01 and 5–8 at sf0.1 → floor 4). The left join
-    // (not left_semi + groupBy) keeps a row for a 0-hit query, so a
-    // recall collapse turns the gate red instead of dropping the row.
+    // (the ann_ivf_recall convention; tools/RecallProbe, source at commit
+    // b627139, measured per-query 6–8 of 8 at sf0.01 and 5–8 at sf0.1 →
+    // floor 4). The left join (not left_semi + groupBy) keeps a row for a
+    // 0-hit query, so a recall collapse turns the gate red instead of
+    // dropping the row.
     "ann_mmr_ivf" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings")
       val qs = emb.filter(col("vec_id") < 8)
@@ -3968,9 +3972,10 @@ object SparkEntry {
   // (graph_cc_twostars, graph_bipartite) measured +11 %/+25 % with the
   // skip and keep the default: this cached frame is 32-partitioned, so
   // without the dedup's AQE-sized exchange the closure's round-0
-  // checkpoint lands as 32/96 fixture-tiny partitions (PartProbe: 96 vs
-  // 1 on the bipartite union) and the per-round scheduling overhead
-  // outweighs the saved shuffle at the measured scale (r16 receipt).
+  // checkpoint lands as 32/96 fixture-tiny partitions (tools/PartProbe,
+  // source at commit b627139: 96 vs 1 on the bipartite union) and the
+  // per-round scheduling overhead outweighs the saved shuffle at the
+  // measured scale (r16 receipt).
   private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
     coPurchaseWeighted(s, dir)
       .select(col("a"), col("b"))

@@ -735,9 +735,9 @@ object Similarity {
       // favor of aggregator-side dedupe alone read 2.8 s faster at sf0.1
       // (pure exchange overhead at fixture scale) but the candidate
       // stream's duplicate multiplicity is 3.05 even on this near-uniform
-      // fixture (DupProbe; shared-mid pairs) and worse on clustered data
-      // — without the dedupe every downstream exchange and cosine pays
-      // that factor at 100 TB. Map-side partial aggregation already
+      // fixture (tools/DupProbe, source at commit b627139; shared-mid
+      // pairs) and worse on clustered data — without the dedupe every
+      // downstream exchange and cosine pays that factor at 100 TB. Map-side partial aggregation already
       // dedupes before this shuffle, so its scale cost is one exchange
       // of the already-deduped pairs.
       val cands = und.select(col("node").as("src"), col("cand").as("mid"))

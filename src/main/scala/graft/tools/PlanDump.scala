@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
-
 /** Dumps `.explain("formatted")` for a comma-separated list of SparkEntry
   * queries to `<outDir>/<query>_<suffix>.txt` — the per-change plan
   * receipts the optimization rounds commit under plans/r<N>/.
@@ -14,25 +11,10 @@ object PlanDump {
     val suffix = args(2)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(4)
     names.foreach { name =>
-      val plan =
-        try graft.SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.explainString(ExplainMode.fromString("formatted"))
-        catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
-        finally spark.catalog.clearCache()
-      // control bytes render as escapes (the Explain.scala lesson)
-      val text = plan.map {
-        case c if c == '\n' || c == '\t' || c >= ' ' => c.toString
-        case c => f"\\x${c.toInt}%02x"
-      }.mkString
-      java.nio.file.Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), text)
+      java.nio.file.Files.writeString(outDir.resolve(s"${name}_$suffix.txt"),
+        graft.Explain.plan(spark, name, sfDir))
       println(s"wrote ${name}_$suffix.txt")
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Offline 10× scale-up receipt — NOT part of the gated surface.
@@ -31,13 +31,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_scaleprobe"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("scaleprobe").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.Harness.session(32)
 
     val shift = 10000000L
     def replicate(t: String, f: (DataFrame, Int) => DataFrame): String = {

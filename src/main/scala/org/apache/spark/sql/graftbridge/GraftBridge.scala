@@ -14,8 +14,9 @@ object GraftBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Apply a session-extension installer to an existing session's function
-    * registry (tests: `spark.sql.extensions` is a static conf, unusable
-    * once a context exists). */
+    * registry (`spark.sql.extensions` is a static conf, unusable once a
+    * context exists): how the SQL-surface queries and the tests install
+    * `GraftExtensions`' functions. */
   def applyFunctionExtensions(
       f: org.apache.spark.sql.SparkSessionExtensions => Unit,
       spark: org.apache.spark.sql.SparkSession): Unit = {

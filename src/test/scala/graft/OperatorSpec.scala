@@ -470,7 +470,8 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("registered SQL functions match the Column API expressions") {
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftBridge
+      .applyFunctionExtensions(new graft.GraftExtensions, spark)
     val viaSql = spark.sql(
       "SELECT cosine_sim(CAST(array(1.0, 0.0) AS ARRAY<DOUBLE>), CAST(array(1.0, 1.0) AS ARRAY<DOUBLE>))")
       .as[Double].head()
@@ -527,6 +528,16 @@ class OperatorSpec extends SparkSuite {
       "SELECT dot_product(CAST(array(2.0, 3.0) AS ARRAY<DOUBLE>), CAST(array(4.0, 5.0) AS ARRAY<DOUBLE>)) AS d")
       .collect().head.getDouble(0)
     assert(v == 23.0)
+    // The whole table, on a session whose registry holds none of it yet
+    // (newSession shares no temporary functions with `spark`).
+    val names = Seq("cosine_sim", "dot_product", "sig_agreement",
+      "jaccard_sorted", "shingle_hashes", "text_simhash", "hamming_bits",
+      "text_stats", "text_repetition", "shingle_md5_keys", "quantize_int8")
+    val fresh = spark.newSession()
+    assert(names.filter(fresh.catalog.functionExists).isEmpty)
+    org.apache.spark.sql.graftbridge.GraftBridge
+      .applyFunctionExtensions(new graft.GraftExtensions, fresh)
+    assert(names.filterNot(fresh.catalog.functionExists).isEmpty)
   }
 
   test("consistent sampling is stable, partition-independent, and nests") {
