@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import scala.collection.immutable.ListMap
 
 /** Driver-run benchmark: wall time per SparkEntry query over
   * SPARK_GRAFT_SF_DIR to its full result, one JSON line on stdout (the
@@ -63,20 +64,13 @@ object Bench {
     // A query that threw has no time: it is listed under "failed" and
     // left out of the per-query map and the total.
     val results = queries.indices.filterNot(failed).map(i => queries(i)._1 -> best(i))
-    // JSON string escape for interpolated paths (ADVICE r14): a quote or
-    // backslash in sfDir/fullOut must not break the contract lines.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v) => q(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val failedNames = queries.indices.filter(failed).map(i => q(queries(i)._1))
-      .mkString("[", ",", "]")
+    val failedNames = queries.indices.filter(failed).map(i => queries(i)._1)
     val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedNames,"sf":${q(sfDir)},"runs_per_query":$runs,"agg":"min"}"""
+    // Field order is part of the contract lines, hence ListMap; the
+    // encoder escapes any quote or backslash in sfDir/fullOut (ADVICE r14).
+    val line = Harness.json.writeValueAsString(ListMap("metric" -> "total",
+      "value" -> total, "unit" -> "sec", "queries" -> ListMap(results: _*),
+      "failed" -> failedNames, "sf" -> sfDir, "runs_per_query" -> runs, "agg" -> "min"))
     println(line)
     // Persist the COMPLETE per-query map too: the driver's stdout capture
     // has truncated the front of the alphabetical tail in past rounds
@@ -94,7 +88,10 @@ object Bench {
     // contract-shaped: metric/value/unit/sf present) survives ANY >=2 KB
     // tail capture; the per-query map lives in the full line above and in
     // the artifact file.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failedNames,"sf":${q(sfDir)},"runs_per_query":$runs,"agg":"min","artifact":${q(fullOut)}}""")
+    println(Harness.json.writeValueAsString(ListMap("metric" -> "total",
+      "value" -> total, "unit" -> "sec", "n_queries" -> results.size,
+      "failed" -> failedNames, "sf" -> sfDir, "runs_per_query" -> runs, "agg" -> "min",
+      "artifact" -> fullOut)))
     spark.stop()
   }
 }

@@ -1,11 +1,17 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder: Bench, Verify, Explain, the tools and the
   * test suites all take their session from here, each passing the core
-  * count it runs with. */
+  * count it runs with. Also the one JSON encoder of the mains' output. */
 object Harness {
+  /** Renders Scala maps, sequences and options; a `ListMap` keeps its
+    * field order, as the tail-proof contract lines need. */
+  val json: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
   /** `local[cpus]` with one shuffle partition per core, UTC session time,
     * no UI, WARN logging. A session already running in this JVM is
     * returned with the SQL settings applied (`getOrCreate`). */

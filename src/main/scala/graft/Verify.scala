@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -84,59 +85,42 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def write(file: String, value: Any): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"), Harness.json.writeValueAsString(value))
+    write("oracle_sql.json",
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) })
     // UN-narrowed dump for the oracle-side output-dtype sweep
     // (tools/check.py --dtypes-only): the sweep DESCRIBEs every oracle SQL
     // without needing the Spark outputs, so it must see the full map even
     // under SPARK_GRAFT_VERIFY_ONLY.
-    val jsonFull = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql_full.json"), jsonFull)
+    write("oracle_sql_full.json", SparkEntry.oracleSql)
     // The GENERATED upsert dialect strings, dumped for execution-level
     // validation: Derby executes the ANSI MERGE in StreamingSpec; the
     // Postgres ON CONFLICT string (no Postgres/H2/pgjdbc in the sandbox)
     // is executed by tools/pg_dialect_check.py against DuckDB's
     // PG-flavored ON CONFLICT implementation — the exact string the
     // generator emits, so dialect drift cannot hide behind a copy.
-    val merge = Seq(
+    write("merge_sql.json", ListMap(
       "pg_upsert" -> graft.streaming.MergeSql.upsertStatement("ride_metrics"),
       "ansi_merge" -> graft.streaming.MergeSql
-        .ansiMergeStatement("ride_metrics", "ride_metrics_stage"))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/merge_sql.json"), merge)
+        .ansiMergeStatement("ride_metrics", "ride_metrics_stage")))
     // Correctness-shaped per-query skeleton (VERDICT r14 #6): one entry
     // per attempted query; rows/schema/hash start null ("produced, not
     // yet oracled") and tools/check.py REWRITES this file in place with
     // the filled verdicts. A failed produce carries its error here, so
     // the artifact dir alone distinguishes "never ran" from "red".
-    val skel = produced.map { case (name, err) =>
-      val e = err.map(m => q(m.take(300))).getOrElse("null")
-      s"${q(name)}: {\"rows_match\": null, \"schema_match\": null, " +
-        s"\"hash_match\": null, \"err\": $e}"
-    }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/correctness.json"), skel)
+    write("correctness.json", produced.map { case (name, err) =>
+      name -> ListMap("rows_match" -> None, "schema_match" -> None,
+        "hash_match" -> None, "err" -> err.map(_.take(300)))
+    })
     // Tail-proof LAST stdout line (VERDICT r13 #1): the driver's
     // correctness capture arrived empty two rounds running; a short
     // machine-parseable exit summary makes pass/fail recoverable from any
     // stdout tail window even if the per-query artifacts are lost.
-    // outDir is q()-escaped (ADVICE r14): a quote/backslash in the path
+    // outDir is JSON-escaped (ADVICE r14): a quote/backslash in the path
     // must not break the machine-parseable contract line.
-    println(s"""{"n_queries":${nOk + nFail},"n_ok":$nOk,"n_fail":$nFail,"out_dir":${q(outDir)}}""")
+    println(Harness.json.writeValueAsString(ListMap("n_queries" -> (nOk + nFail),
+      "n_ok" -> nOk, "n_fail" -> nFail, "out_dir" -> outDir)))
     spark.stop()
   }
 }

@@ -182,7 +182,7 @@ object ScaleProbe {
     // log of the LONGEST series, frames with series count).
     val ev10 = replicate("events", (d, i) => d
       .withColumn("event_type", concat(col("event_type"), lit(s"_r$i"))))
-    // raw fixture ts is TIMESTAMP_NTZ (SparkEntry.t normalizes; this
+    // raw fixture ts is TIMESTAMP_NTZ (queries.Fixtures.t normalizes; this
     // probe reads raw parquet, so cast here)
     def holt(ev: DataFrame): Long =
       graft.ops.TimeSeries.holt(

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops._
+import graft.queries.GraphQueries
 import org.apache.spark.sql.functions._
 
 /** Operator-level correctness on crafted inputs (the DuckDB oracle gate
@@ -22,9 +23,20 @@ class OperatorSpec extends SparkSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("registry: 319 distinct names, non-blank oracles, None only for signature rows") {
+    val cases = SparkEntry.cases
+    val names = cases.map(_.name)
+    assert(names.size == 319 && names.distinct.size == names.size,
+      s"${names.size} cases, ${names.distinct.size} distinct names")
+    // A family val read by `cases` before its own initializer ran is null.
+    val blank = cases.collect {
+      case c if c.oracle.exists(o => o == null || o.trim.isEmpty) => c.name
+    }
+    assert(blank.isEmpty, s"null or blank oracle: $blank")
+    assert(cases.filter(_.oracle.isEmpty).map(_.name).toSet ==
+      Set("dedup_minhash_lsh", "dedup_simhash", "ann_ivf_topk"))
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.size == 316)
   }
 
   test("gate boundary: no DECIMAL/ARRAY/FLOAT32 column crosses a query output") {
@@ -2964,7 +2976,7 @@ class OperatorSpec extends SparkSuite {
       } yield ((a, b), ca * cb)
     }.toSeq.groupBy(_._1).view.mapValues(_.map(_._2).sum)
       .filter(_._2 >= 2).keySet.toSeq.sorted
-    val got = SparkEntry.coPurchaseEdges(spark, sfDir)
+    val got = GraphQueries.coPurchaseEdges(spark, sfDir)
       .as[(Long, Long)].collect().toSeq.sorted
     assert(got == expect,
       s"fused edge build diverged: ${got.take(5)}... vs ${expect.take(5)}...")
@@ -2973,7 +2985,7 @@ class OperatorSpec extends SparkSuite {
     // multiplicity stage
     spark.catalog.clearCache()
     withoutAqe {
-      val plan = SparkEntry.coPurchaseEdges(spark, sfDir)
+      val plan = GraphQueries.coPurchaseEdges(spark, sfDir)
         .queryExecution.executedPlan.toString
       val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).size
       assert(shuffles == 2,
@@ -4069,11 +4081,11 @@ class OperatorSpec extends SparkSuite {
     // the headline property on a real graph: the second level only ever
     // coarsens, and partition quality does not regress
     def q(labels: org.apache.spark.sql.DataFrame): Double = {
-      val ed = SparkEntry.coPurchaseEdges(spark, sfDir)
+      val ed = GraphQueries.coPurchaseEdges(spark, sfDir)
       Graph.modularity(ed, labels.select($"node", $"lbl"))
         .select($"q_total").as[Double].head()
     }
-    val ed = SparkEntry.coPurchaseEdges(spark, sfDir)
+    val ed = GraphQueries.coPurchaseEdges(spark, sfDir)
     val l1 = Graph.louvainMoveLabels(ed)
     val l2 = Graph.louvainTwoLevelLabels(ed)
     val (q1, q2) = (q(l1), q(l2))

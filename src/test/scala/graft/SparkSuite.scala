@@ -18,7 +18,7 @@ trait SparkSuite extends AnyFunSuite {
     * threads. Safe by construction: temp-view names always register the
     * same table, scratch paths are per-query under a per-process root,
     * and the bucketed-table names belong to a single query (the
-    * layoutRoot/tableSuffix scaladocs). Results keep query order, so
+    * Fixtures.layoutRoot/tableSuffix scaladocs). Results keep query order, so
     * assertion messages are deterministic. */
   def sweepQueries[T](threads: Int = 8)(
       f: (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)

@@ -481,6 +481,65 @@ class StreamingSpec extends SparkSuite {
     assert(stages.isEmpty, s"stage tables left behind: $stages")
   }
 
+  test("a restart replays the failed epoch; city_metrics equals an uninterrupted run") {
+    import graft.streaming.{JdbcUpsertSink, UpsertSink}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    // Merges through the real sink, records each epoch, and throws once
+    // after merging `failAt`: Spark has not committed that epoch yet.
+    class FailAfterMerge(inner: UpsertSink, failAt: Long) extends UpsertSink {
+      val epochs = scala.collection.mutable.Buffer.empty[Long]
+      override def merge(batch: DataFrame, epochId: Long): Unit = {
+        inner.merge(batch, epochId)
+        epochs += epochId
+        if (epochId == failAt && epochs.count(_ == failAt) == 1)
+          throw new IllegalStateException(s"injected failure after merging epoch $epochId")
+      }
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    // one file per epoch: the second updates nyc's first window, adds la
+    // and a second nyc window; the third adds a later sf window
+    Seq(Seq(rideJson("nyc", t0 + 10, 10.0, "a"), rideJson("sf", t0 + 20, 30.0, "b")),
+      Seq(rideJson("nyc", t0 + 30, 30.0, "c"), rideJson("la", t0 + 40, 7.0, "d"),
+        rideJson("nyc", t0 + 70, 20.0, "e")),
+      Seq(rideJson("sf", t0 + 130, 5.0, "f")))
+      .foreach(_.toDF("value").coalesce(1).write.mode("append").parquet(s"$dir/in"))
+    def run(sink: UpsertSink, ckpt: String): Unit = {
+      val src = spark.readStream.schema("value STRING")
+        .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
+      val q = RidePipeline.start(RidePipeline.metricsPlan(src, streaming = true),
+        sink, ckpt, Trigger.ProcessingTime(0))
+      try q.processAllAvailable() finally q.stop()
+    }
+    def table(url: String) = spark.read.format("jdbc").option("url", url)
+      .option("dbtable", "city_metrics").load()
+      .as[(String, java.sql.Timestamp, Long, Double)].collect().toSet
+
+    val refUrl = "jdbc:derby:memory:graftdb_replay_ref;create=true"
+    run(new JdbcUpsertSink(refUrl, "city_metrics"), s"$dir/ckpt-ref")
+
+    val url = "jdbc:derby:memory:graftdb_replay;create=true"
+    val failing = new FailAfterMerge(new JdbcUpsertSink(url, "city_metrics"), failAt = 1L)
+    intercept[StreamingQueryException](run(failing, s"$dir/ckpt"))
+    assert(failing.epochs == Seq(0L, 1L))
+    // restart on the same checkpoint with a new sink, as a new process would
+    val restarted = new FailAfterMerge(new JdbcUpsertSink(url, "city_metrics"), failAt = -1L)
+    run(restarted, s"$dir/ckpt")
+    assert(restarted.epochs.headOption.contains(1L),
+      s"epoch 1 was not replayed: ${restarted.epochs}")
+
+    val want = table(refUrl)
+    assert(want.size == 5, want.toString)
+    val got = table(url)
+    assert(got == want, s"${got.diff(want)} vs ${want.diff(got)}")
+    val conn = java.sql.DriverManager.getConnection(url)
+    val stages = try {
+      val rs = conn.getMetaData.getTables(null, null, "CITY_METRICS_STAGE%", null)
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList
+    } finally conn.close()
+    assert(stages.isEmpty, s"stage tables left behind: $stages")
+  }
+
   test("a fresh checkpoint runs the aggregate on one state store; an existing one keeps its width") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
