@@ -10,7 +10,7 @@ object Verify {
     * This format exists for human diffing of a red row, not for gating —
     * the gate itself compares only scalar integer/string/double cells
     * (see the query-boundary rules in SparkEntry). */
-  private def canonCell(v: Any): String = v match {
+  private[graft] def canonCell(v: Any): String = v match {
     case null => "NULL"
     case d: Double =>
       if (d.isNaN) "NaN"

@@ -46,43 +46,6 @@ class BoundedCollectAggregator(cap: Int)
   */
 object Dedup {
 
-  /** How a subtree that feeds several plan branches (the MinHash
-    * signature frame) is materialized for reuse. The two strategies trade
-    * fault tolerance against storage lifecycle — neither dominates:
-    *
-    *  - [[LocalCheckpoint]] (default): blocks live on executor-local
-    *    storage with lineage TRUNCATED. Leak-free in a long-lived session
-    *    (the ContextCleaner frees the blocks once the plan is
-    *    unreachable, with no unpersist obligation on the caller), but an
-    *    executor loss — preemption, OOM kill, dynamic-allocation
-    *    decommission — fails the job unrecoverably: there is no lineage
-    *    to recompute the lost blocks from. Right for local runs and
-    *    clusters with static, reliable executors.
-    *  - [[Persist]]: `persist(MEMORY_AND_DISK)` with lineage RETAINED —
-    *    lost blocks are recomputed, so the job survives executor churn.
-    *    The entry stays registered in the CacheManager until the caller
-    *    unpersists it (or the session ends); a fire-and-forget library
-    *    call accumulates cache entries. Right for 1000-executor clusters
-    *    with dynamic allocation — pair with an explicit
-    *    `spark.catalog.clearCache()` / `unpersist` at pipeline
-    *    boundaries.
-    *  - [[NoReuse]]: no materialization; the signature pass recomputes
-    *    per branch (4×). Zero storage footprint, maximum redundant work —
-    *    for memory-constrained executors where neither storage form fits.
-    */
-  sealed trait ReuseStrategy
-  case object LocalCheckpoint extends ReuseStrategy
-  case object Persist extends ReuseStrategy
-  case object NoReuse extends ReuseStrategy
-
-  private def materialize(df: DataFrame, reuse: ReuseStrategy): DataFrame =
-    reuse match {
-      case LocalCheckpoint => df.localCheckpoint(eager = false)
-      case Persist =>
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case NoReuse => df
-    }
-
   /** Exact duplicate groups: one row per distinct key with the keeper
     * (min id) and the multiplicity. */
   def exactGroups(df: DataFrame, keyCol: String, idCol: String): DataFrame =
@@ -175,22 +138,20 @@ object Dedup {
     * Output: (left_id, right_id, est_jaccard) with left < right, distinct. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       bands: Int = 16, rowsPerBand: Int = 4, shingleSize: Int = 3,
-      threshold: Double = 0.5, reuse: ReuseStrategy = LocalCheckpoint): DataFrame =
+      threshold: Double = 0.5): DataFrame =
     pairsFromSigs(
       minhashSigs(df, idCol, textCol, bands, rowsPerBand, shingleSize),
-      bands, murmurBandKey(rowsPerBand), threshold, reuse)
+      bands, murmurBandKey(rowsPerBand), threshold)
 
   private def pairsFromSigs(sigs: DataFrame, bands: Int,
-      bandKey: Column => Column, threshold: Double,
-      reuse: ReuseStrategy = LocalCheckpoint): DataFrame = {
+      bandKey: Column => Column, threshold: Double): DataFrame = {
     // The sigs subtree feeds four plan branches (both band self-join
     // sides + both signature re-attach joins); without materialization
     // the corpus scan and the fused text_minhash pass re-run per branch
-    // (exchange reuse only merges the two band sides). Materialized per
-    // the caller's ReuseStrategy — see its scaladoc for the
-    // fault-tolerance vs storage-lifecycle trade (the LocalCheckpoint
-    // default is leak-free but NOT recomputable on executor loss).
-    val s = materialize(sigs, reuse)
+    // (exchange reuse only merges the two band sides). A lazy
+    // localCheckpoint: leak-free but NOT recomputable on executor loss
+    // (the trade in the Rounds scaladoc).
+    val s = sigs.localCheckpoint(eager = false)
     lshCandidatesFromSigs(s, bands, bandKey)
       .join(s.select(col("doc_id").as("left_id"), col("sig").as("left_sig")), Seq("left_id"))
       .join(s.select(col("doc_id").as("right_id"), col("sig").as("right_sig")), Seq("right_id"))
@@ -214,7 +175,7 @@ object Dedup {
     * all-prime signatures would spuriously pair all short docs). */
   def minhashLshPairsMd5(df: DataFrame, idCol: String, textCol: String,
       bands: Int = 16, rowsPerBand: Int = 4, shingleSize: Int = 3,
-      threshold: Double = 0.0, reuse: ReuseStrategy = LocalCheckpoint): DataFrame = {
+      threshold: Double = 0.0): DataFrame = {
     val sigs = df
       .filter(size(split(trim(col(textCol)), "\\s+")) >= shingleSize)
       .select(col(idCol).as("doc_id"),
@@ -222,7 +183,7 @@ object Dedup {
           hashFamily(bands * rowsPerBand), mersennePrime, md5Base = true).as("sig"))
     pairsFromSigs(sigs, bands,
       b => concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))),
-      threshold, reuse)
+      threshold)
   }
 
   /** 64-bit SimHash of the token stream: per-bit vote sum of each token's
@@ -409,31 +370,19 @@ object Dedup {
     * (at 100 TB and deep components an unbounded plan re-executes or blows
     * analysis time), and each superseded round's checkpoint blocks are
     * unpersisted so executor storage holds at most two label snapshots.
-    * The [[ReuseStrategy]] executor-loss caveat applies: a lost executor
-    * mid-closure fails the job (no lineage to recompute from) — on
-    * dynamic-allocation clusters run the closure with `spark.checkpoint`
-    * to reliable storage instead, or accept the restart (each round is
-    * one join+agg; the whole closure is cheap to rerun relative to the
-    * candidate generation that feeds it).
+    * The executor-loss caveat in the [[Rounds]] scaladoc applies: a lost
+    * executor mid-closure fails the job (no lineage to recompute from);
+    * accepting the restart is cheap here (each round is one join+agg;
+    * the whole closure is cheap to rerun relative to the candidate
+    * generation that feeds it).
     * Throws if the loop exits via `maxIters` without converging — silent
     * partially-propagated labels would be wrong groups. */
   def duplicateGroups(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // localCheckpoint registers its blocks as persistent RDDs but outside
-    // the cache manager, so DataFrame.unpersist can't free them; track the
-    // RDD ids each checkpoint adds and unpersist those when superseded.
-    def checkpoint(df: DataFrame): (DataFrame, Set[Int]) = {
-      val out = df.localCheckpoint() // eager: materializes now
-      (out, Rounds.ckptIds(out)) // ids off the frame itself (see Rounds)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
-    val (edges, edgeIds) = checkpoint(
+    val edges = Rounds.checkpoint(
       pairs.select(col("left_id").as("a"), col("right_id").as("b"))
         .union(pairs.select(col("right_id").as("a"), col("left_id").as("b")))
         .distinct())
-    var (labels, labelIds) = checkpoint(
+    var labels = Rounds.checkpoint(
       edges.select(col("a").as("id")).distinct()
         .select(col("id"), col("id").as("label")))
     var converged = false
@@ -450,21 +399,20 @@ object Dedup {
         .join(labels, edges("b") === labels("id"))
         .select(col("a").as("nid"), col("label"), lit(false).as("self"))
         .union(labels.select(col("id").as("nid"), col("label"), lit(true).as("self")))
-      val (updated, updatedIds) = checkpoint(
+      val updated = Rounds.checkpoint(
         contributions.groupBy(col("nid").as("id"))
           .agg(min(col("label")).as("label"),
             (min(col("label")) <
               max(when(col("self"), col("label")))).as("__changed")))
       val changed = updated.filter(col("__changed")).limit(1).count()
-      free(labelIds)
+      Rounds.free(labels)
       labels = updated.drop("__changed")
-      labelIds = updatedIds
       converged = changed == 0
       i += 1
     }
-    free(edgeIds)
+    Rounds.free(edges)
     if (!converged) {
-      free(labelIds)
+      Rounds.free(labels)
       throw new IllegalStateException(
         s"duplicateGroups did not converge within $maxIters iterations " +
           "(component diameter exceeds maxIters); raise maxIters")
@@ -1230,18 +1178,6 @@ object Dedup {
     require(cap >= minLen, "cap >= minLen")
     require(maxLevels >= 1 && maxLevels <= 64, "maxLevels in [1,64]")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sc = docs.sparkSession.sparkContext
-    // checkpoint-and-free: localCheckpoint the new round, drop the blocks
-    // of the round it supersedes
-    var prevIds = Set.empty[Int]
-    def cycle(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint()
-      val newIds = Rounds.ckptIds(out) // ids off the frame (see Rounds)
-      prevIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevIds = newIds
-      out
-    }
     val K = math.max(1, 32 - Integer.numberOfLeadingZeros(cap - 1)) // ceil(log2 cap)
     // Rank arrays are SEEDED at width 2^K0 (K0 = floor(log2 minLen)), not
     // width 1 (r15 perf pass): no tested length is ever below minLen, so
@@ -1287,20 +1223,21 @@ object Dedup {
       .select(col("doc"), col("pos"), col("len"),
         array(md5(concat_ws(" ",
           slice(col("tk"), col("pos") + 1, lit(1 << K0))))).as("rks"))
-    ranks = cycle(ranks)
+    ranks = Rounds.checkpoint(ranks)
     for (k <- (K0 + 1) to K) {
       val off = 1 << (k - 1)
       val right = ranks.select(col("doc"), (col("pos") - off).as("pos"),
         element_at(col("rks"), k - K0).as("__rr"))
-      ranks = cycle(ranks.join(right, Seq("doc", "pos"), "left")
+      val next = Rounds.checkpoint(ranks.join(right, Seq("doc", "pos"), "left")
         .select(col("doc"), col("pos"), col("len"),
           concat(col("rks"), array(md5(concat(
             element_at(col("rks"), k - K0), lit("|"),
             coalesce(col("__rr"), lit("E")))))).as("rks")))
+      Rounds.free(ranks)
+      ranks = next
     }
-    // ranks must outlive the loops below: pin it out of the cycle chain
+    // ranks must outlive the loops below: the last round is never freed
     val rankT = ranks.persist(lvl)
-    prevIds = Set.empty
     // 3. per-member window-id ARRAY for every depth in [minLen, cap] —
     // the r15 search rewrite. The r14 lockstep binary search paid
     // levels x ceil(log2 range) JOBS, each a g x rankT join plus a gid
@@ -1368,7 +1305,7 @@ object Dedup {
     val withIds = gath.select(col("doc"), col("pos"), col("len"),
       array((minLen to cap).map(idAt): _*).as("ids"))
     // level-0 groups: occurrence classes of the minLen-window id
-    var g = cycle(withIds.select(
+    var g = Rounds.checkpoint(withIds.select(
       md5(concat(element_at(col("ids"), 1), lit("#"), lit(minLen)))
         .as("gid"),
       col("doc"), col("pos"), col("len"), col("ids")))
@@ -1399,7 +1336,7 @@ object Dedup {
           when(col("__j0") === 0, lit(cap))
             .otherwise(col("__j0") + lit(minLen - 2)).cast("int").as("__ls"),
           col("__minR"), col("__maxR"))
-      // deliberately OUTSIDE the cycle chain and never unpersisted: the
+      // deliberately never freed (unlike the g rounds): the
       // per-level annotated frames back emitAll lazily for the rest of
       // the op (the same lifetime the per-level emitted checkpoints had)
       val annC = ann.localCheckpoint()
@@ -1432,12 +1369,14 @@ object Dedup {
             element_at(col("ids"), col("__ls") - lit(minLen) + 2))
         val wk = org.apache.spark.sql.expressions.Window
           .partitionBy(col("gid"), col("__idc"))
-        g = cycle(kids
+        val next = Rounds.checkpoint(kids
           .withColumn("__n", count(lit(1)).over(wk))
           .filter(col("__n") >= 2)
           .select(md5(concat(col("__idc"), lit("#"),
               (col("__ls") + 1).cast("string"))).as("gid"),
             col("doc"), col("pos"), col("len"), col("ids")))
+        Rounds.free(g)
+        g = next
         level += 1
       }
     }

@@ -30,40 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Eagerly truncate a frame's lineage (localCheckpoint) and return the
-    * RDD ids the checkpoint registered, so a superseded round's blocks
-    * can be freed. Fixed-round recurrences that reference the previous
-    * frame MORE THAN ONCE per round need this, not persist: persist
-    * bounds recomputation but the LOGICAL plan still grows
-    * refs^rounds — the k-core peel (3 refs/round) OOM'd explain at
-    * rounds=8 before this (same checkpoint pattern as
-    * [[graft.ops.Dedup.duplicateGroups]]). */
-  private def checkpointRound(df: DataFrame): (DataFrame, Set[Int]) = {
-    val out = df.localCheckpoint()
-    (out, Rounds.ckptIds(out)) // ids off the frame itself (see Rounds)
-  }
-
-  private def freeRound(df: DataFrame, ids: Set[Int]): Unit = {
-    val sc = df.sparkSession.sparkContext
-    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-  }
-
-  /** [[checkpointRound]] fused with the round's convergence probe: the
-    * checkpoint is LAZY and the probe's aggregate is the action that
-    * materializes it — one job per round where the eager form paid two
-    * (materialize, then probe), halving the per-round fixed cost that
-    * dominates converged loops on small frames (r14 perf pass). The
-    * probe MUST run before the caller frees the previous round's blocks
-    * (a lazily-checkpointed frame still reads its parent's blocks until
-    * its own are written); returning the probe value enforces that
-    * order by construction. */
-  private def checkpointRoundWith[T](df: DataFrame)(probe: DataFrame => T)
-      : (DataFrame, Set[Int], T) = {
-    val out = df.localCheckpoint(eager = false)
-    val t = probe(out)
-    (out, Rounds.ckptIds(out), t) // ids off the frame itself (see Rounds)
-  }
-
   /** Distinct undirected edges in canonical (a < b) orientation from a
     * possibly-duplicated, possibly-bidirectional raw pair stream. */
   def canonicalEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
@@ -260,16 +226,12 @@ object Graph {
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 10, "rounds in [1,10]")
     val init = seeds.select(col("node"), lit(0L).as("dist"))
-    val (fin, _) = (1 to rounds).foldLeft((init, Set.empty[Int])) {
-      case ((dist, prevIds), _) =>
-        val (d, ids) = checkpointRound(dist)
-        freeRound(d, prevIds)
-        (d.unionAll(
-            d.join(sym, col("node") === col("src"))
-              .select(col("dst").as("node"), (col("dist") + 1).as("dist")))
-          .groupBy(col("node")).agg(min(col("dist")).as("dist")), ids)
+    Rounds.fixed(init, rounds) { d =>
+      d.unionAll(
+          d.join(sym, col("node") === col("src"))
+            .select(col("dst").as("node"), (col("dist") + 1).as("dist")))
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
     }
-    fin
   }
 
   /** Minimum spanning forest by Borůvka rounds — the distributable MST
@@ -300,7 +262,7 @@ object Graph {
     // counts ride each checkpoint's materializing job — full-scan
     // count(), never limit(1) (a partial first action would leave
     // missing partitions for doCheckpoint's extra job)
-    var (ce, ceIds, ceN) = checkpointRoundWith(canon)(_.count())
+    var (ce, ceN) = Rounds.checkpointWith(canon)(_.count())
     val forest = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var i = 0
     var done = ceN == 0L
@@ -312,7 +274,7 @@ object Graph {
           col("w"), col("oa"), col("ob"))
         .unionAll(ce.select(col("cb").as("comp"), col("ca"), col("cb"),
           col("w"), col("oa"), col("ob")))
-      val (grouped, _) = checkpointRound(sym.groupBy(col("comp"))
+      val grouped = Rounds.checkpoint(sym.groupBy(col("comp"))
         .agg(min_by(struct(col("ca"), col("cb"), col("w"), col("oa"), col("ob")),
           struct(col("w"), col("oa"), col("ob"))).as("e")))
       forest += grouped
@@ -336,7 +298,7 @@ object Graph {
           when(col("q.pp") === col("p.comp"),
             least(col("p.comp"), col("p.parent"))).otherwise(col("p.parent"))
             .as("parent"))
-      var (par, parIds) = checkpointRound(rooted)
+      var par = Rounds.checkpoint(rooted)
       var stable = false
       var j = 0
       while (!stable && j < maxRounds) {
@@ -345,15 +307,15 @@ object Graph {
             col("x.parent") === col("y.hc"))
           .select(col("x.comp").as("comp"), col("hp").as("parent"),
             (col("hp") =!= col("x.parent")).as("__moved"))
-        val (nextPar, nextParIds, moved) =
-          checkpointRoundWith(hop)(_.filter(col("__moved")).count())
+        val (nextPar, moved) =
+          Rounds.checkpointWith(hop)(_.filter(col("__moved")).count())
         stable = moved == 0L
-        freeRound(nextPar, parIds)
-        par = nextPar.drop("__moved"); parIds = nextParIds
+        Rounds.free(par)
+        par = nextPar.drop("__moved")
         j += 1
       }
       if (!stable) {
-        freeRound(par, parIds)
+        Rounds.free(par)
         throw new IllegalStateException(
           s"mstBoruvka contraction did not converge within $maxRounds doublings")
       }
@@ -375,16 +337,16 @@ object Graph {
         .agg(min_by(struct(col("w"), col("oa"), col("ob")),
           struct(col("w"), col("oa"), col("ob"))).as("e"))
         .select(col("ca"), col("cb"), col("e.w"), col("e.oa"), col("e.ob"))
-      val (next, nextIds, nextN) = checkpointRoundWith(projected)(_.count())
+      val (next, nextN) = Rounds.checkpointWith(projected)(_.count())
       // sel's checkpoint blocks stay live: the returned forest reads
       // them (≤ maxRounds small frames); only superseded ce rounds free
-      freeRound(next, ceIds)
-      ce = next; ceIds = nextIds
+      Rounds.free(ce)
+      ce = next
       done = nextN == 0L
       i += 1
     }
     if (!done) {
-      freeRound(ce, ceIds)
+      Rounds.free(ce)
       throw new IllegalStateException(
         s"mstBoruvka did not converge within $maxRounds rounds")
     }
@@ -431,23 +393,19 @@ object Graph {
     * no better distributed primitive — delta-stepping batches the same
     * relaxation by distance range). Each round is one equi-join on the
     * frontier + one keyed min — two narrow shuffles over (node, BIGINT)
-    * rows — with the [[checkpointRound]] lineage discipline. Weights
+    * rows — with the [[Rounds.fixed]] lineage discipline. Weights
     * must be non-negative integers (exact min-plus arithmetic; a
     * negative weight would need the full n−1 rounds to be meaningful).
     * Callers pass a symmetrized frame for undirected semantics. */
   def ssspBounded(adj: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 10, "rounds in [1,10]")
     val init = seeds.select(col("node"), lit(0L).as("dist"))
-    val (fin, _) = (1 to rounds).foldLeft((init, Set.empty[Int])) {
-      case ((dist, prevIds), _) =>
-        val (d, ids) = checkpointRound(dist)
-        freeRound(d, prevIds)
-        (d.unionAll(
-            d.join(adj, col("node") === col("src"))
-              .select(col("dst").as("node"), (col("dist") + col("w")).as("dist")))
-          .groupBy(col("node")).agg(min(col("dist")).as("dist")), ids)
+    Rounds.fixed(init, rounds) { d =>
+      d.unionAll(
+          d.join(adj, col("node") === col("src"))
+            .select(col("dst").as("node"), (col("dist") + col("w")).as("dist")))
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
     }
-    fin
   }
 
   /** Diameter lower bound by the classic double-sweep: BFS from the
@@ -496,18 +454,13 @@ object Graph {
       rounds: Int): DataFrame = {
     val init = seeds.select(col("node").as("seed"), col("node"),
       lit(0L).as("dist"))
-    val (fin, _) = (1 to rounds).foldLeft((init, Set.empty[Int])) {
-      case ((dist, prevIds), _) =>
-        val (d, ids) = checkpointRound(dist)
-        freeRound(d, prevIds)
-        (d.unionAll(
-            d.join(sym, col("node") === col("src"))
-              .select(col("seed"), col("dst").as("node"),
-                (col("dist") + 1).as("dist")))
-          .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist")),
-          ids)
+    Rounds.fixed(init, rounds) { d =>
+      d.unionAll(
+          d.join(sym, col("node") === col("src"))
+            .select(col("seed"), col("dst").as("node"),
+              (col("dist") + 1).as("dist")))
+        .groupBy(col("seed"), col("node")).agg(min(col("dist")).as("dist"))
     }
-    fin
   }
 
   def closenessBounded(edges: DataFrame, seeds: DataFrame,
@@ -550,7 +503,7 @@ object Graph {
     // alone leaves the optimizer re-analyzing the whole chain at every
     // downstream action — superlinear in rounds (the graph_hits/BPE
     // lesson). Values are exact either way. Unlike the freed-per-round
-    // loops (checkpointRound/freeRound), NO frame here is superseded —
+    // loops (Rounds.checkpoint/free), NO frame here is superseded —
     // every σ layer feeds the later δ backward pass — so all 6 bounded
     // frames stay pinned until the job ends; the recompute-on-executor-
     // loss trade is accepted for the flat plans.
@@ -606,7 +559,7 @@ object Graph {
     * induced degrees. */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 10, "rounds in [1,10]")
-    var (sym, symIds) = checkpointRound(
+    var sym = Rounds.checkpoint(
       edges.select(col("a").as("n"), col("b").as("m"))
         .unionAll(edges.select(col("b").as("n"), col("a").as("m"))))
     for (_ <- 1 to rounds) {
@@ -614,13 +567,12 @@ object Graph {
       // checkpoint keeps the plan linear instead of 3^rounds
       val keep = sym.groupBy(col("n")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("n"))
-      val (next, ids) = checkpointRound(
+      val next = Rounds.checkpoint(
         sym.join(keep, Seq("n"))
           .join(keep.select(col("n").as("m")), Seq("m"))
           .select(col("n"), col("m")))
-      freeRound(next, symIds)
+      Rounds.free(sym)
       sym = next
-      symIds = ids
     }
     sym.groupBy(col("n")).agg(count(lit(1)).as("degree"))
       .select(col("n").as("node"), col("degree"))
@@ -663,15 +615,14 @@ object Graph {
           greatest(col("u"), col("v")).as("b")))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
     }
-    var (e, eIds) = checkpointRound(edges.select(col("a"), col("b")))
+    var e = Rounds.checkpoint(edges.select(col("a"), col("b")))
     for (_ <- 1 to rounds) {
-      val (next, ids) = checkpointRound(
+      val next = Rounds.checkpoint(
         e.join(support(e), Seq("a", "b"), "left")
           .filter(coalesce(col("support"), lit(0L)) >= k - 2)
           .select(col("a"), col("b")))
-      freeRound(next, eIds)
+      Rounds.free(e)
       e = next
-      eIds = ids
     }
     e.join(support(e), Seq("a", "b"), "left")
       .select(col("a"), col("b"),
@@ -766,7 +717,7 @@ object Graph {
     * minima. Each half is one grouped min + one equi-join — two narrow
     * shuffles on (node, node) rows, the same envelope as a pagerank
     * iteration. Rounds are `localCheckpoint`ed (lineage O(1), superseded
-    * blocks freed — the [[checkpointRound]] discipline), and convergence
+    * blocks freed — the [[Rounds]] discipline), and convergence
     * is read as (count, xxhash64-sum) of the round's already-materialized
     * edge frame — a scan, not an extra shuffle. Throws if `maxRounds`
     * passes without a fixpoint: silently-partial stars would be wrong
@@ -829,19 +780,19 @@ object Graph {
     // doubled unmaterialized plan costs AQE more than the saved fixed
     // overhead, and fixpoint detection lands up to a round-pair later.
     // One round per action stays.)
-    var (e, eIds, prev) = checkpointRoundWith(canon)(stats)
+    var (e, prev) = Rounds.checkpointWith(canon)(stats)
     var converged = prev._1 == 0L
     var i = 0
     while (!converged && i < maxRounds) {
-      val (next, nextIds, cur) = checkpointRoundWith(starRound(e))(stats)
-      freeRound(next, eIds)
-      e = next; eIds = nextIds
+      val (next, cur) = Rounds.checkpointWith(starRound(e))(stats)
+      Rounds.free(e)
+      e = next
       converged = cur == prev
       prev = cur
       i += 1
     }
     if (!converged) {
-      freeRound(e, eIds)
+      Rounds.free(e)
       throw new IllegalStateException(
         s"ccTwoStarsNodes did not converge within $maxRounds rounds")
     }
@@ -897,10 +848,11 @@ object Graph {
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct()
-    var (e, eIds) = checkpointRound(canon)
+    var e = Rounds.checkpoint(canon)
+    // round 0's `active` is derived from `e`, not pinned: freeing it
+    // frees only `e` again
     var active = e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node"))).distinct()
-    var aIds = Set.empty[Int]
     var decided: DataFrame = null
     var r = 0
     var nActive = active.count()
@@ -941,7 +893,7 @@ object Graph {
       // kept for the result's lifetime, the same lifetime the old merged
       // checkpoint had). Measured at sf0.1 (isolated
       // A/B, rows bit-identical): graph_mis 6.12 → 4.10 s.
-      val (ro2, _) = checkpointRound(roundOut)
+      val ro2 = Rounds.checkpoint(roundOut)
       val retired2 = ro2.select(col("node"))
       val nextActive = active.join(retired2, Seq("node"), "left_anti")
       val nextE = e
@@ -951,16 +903,16 @@ object Graph {
       // checkpoint the successors BEFORE freeing the round's blocks; the
       // survivor count rides the active frame's checkpoint job (fused
       // probe) instead of a separate count action.
-      val (e2, e2Ids) = checkpointRound(nextE)
-      val (a2, a2Ids, n2) = checkpointRoundWith(nextActive)(_.count())
-      freeRound(e2, eIds); freeRound(a2, aIds)
-      e = e2; eIds = e2Ids
-      active = a2; aIds = a2Ids
+      val e2 = Rounds.checkpoint(nextE)
+      val (a2, n2) = Rounds.checkpointWith(nextActive)(_.count())
+      Rounds.free(e); Rounds.free(active)
+      e = e2
+      active = a2
       decided = if (decided == null) ro2 else decided.unionAll(ro2)
       nActive = n2
       r += 1
     }
-    freeRound(e, eIds); freeRound(active, aIds)
+    Rounds.free(e); Rounds.free(active)
     if (decided == null)
       canon.select(col("a").as("node"), lit(false).as("in_mis"),
         lit(0).as("round")).limit(0)
@@ -999,16 +951,16 @@ object Graph {
     val P = 1000000007L
     def pri(v: Column): Column = (v % P) * 2654435761L % P
     val canon = canonicalEdges(edges, "a", "b")
-    val (full, fullIds) = checkpointRound(canon)
+    val full = Rounds.checkpoint(canon)
     val fullSym = full.select(col("a").as("u"), col("b").as("w"))
       .unionAll(full.select(col("b").as("u"), col("a").as("w")))
+    // in round 0, e is `full`, active is derived from it and colors is
+    // null: none is pinned by this loop (full's blocks are freed once, at
+    // the end), so the loop frees them only from round 1 on
     var e = full
-    var eIds = Set.empty[Int] // full's blocks are freed once, at the end
     var active = full.select(col("a").as("node"))
       .unionAll(full.select(col("b").as("node"))).distinct()
-    var aIds = Set.empty[Int]
     var colors: DataFrame = null
-    var cIds = Set.empty[Int]
     var r = 0
     var nActive = active.count()
     while (nActive > 0) {
@@ -1056,7 +1008,7 @@ object Graph {
       // cheap union of two materialized frames instead of a third run of
       // the chain. Measured at sf0.1 (isolated A/B,
       // rows bit-identical): graph_coloring 9.24 → 6.62 s.
-      val (nc2, nc2Ids) = checkpointRound(newColors)
+      val nc2 = Rounds.checkpoint(newColors)
       val merged = if (colors == null) nc2 else colors.unionAll(nc2)
       val nextActive = active.join(nc2.select(col("node")), Seq("node"),
         "left_anti")
@@ -1064,18 +1016,18 @@ object Graph {
         .join(nextActive.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(nextActive.select(col("node").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-      val (e2, e2Ids) = checkpointRound(nextE)
-      val (a2, a2Ids, n2) = checkpointRoundWith(nextActive)(_.count())
-      val (c2, c2Ids) = checkpointRound(merged)
-      freeRound(e2, eIds); freeRound(a2, aIds)
-      freeRound(c2, cIds ++ nc2Ids)
-      e = e2; eIds = e2Ids
-      active = a2; aIds = a2Ids
-      colors = c2; cIds = c2Ids
+      val e2 = Rounds.checkpoint(nextE)
+      val (a2, n2) = Rounds.checkpointWith(nextActive)(_.count())
+      val c2 = Rounds.checkpoint(merged)
+      if (r > 0) { Rounds.free(e); Rounds.free(active); Rounds.free(colors) }
+      Rounds.free(nc2)
+      e = e2
+      active = a2
+      colors = c2
       nActive = n2
       r += 1
     }
-    freeRound(full, eIds ++ fullIds); freeRound(active, aIds)
+    Rounds.free(e); Rounds.free(full); Rounds.free(active)
     if (colors == null)
       canon.select(col("a").as("node"), lit(0L).as("color"),
         lit(0).as("round")).limit(0)
@@ -1181,17 +1133,13 @@ object Graph {
     val pushAdj = adj.withColumnRenamed("src", "node")
     // each round reads the PREVIOUS label frame twice (self ∪ neighbor
     // push): checkpoint per round keeps both recompute AND the logical
-    // plan linear in rounds (see checkpointRound)
-    val (fin, _) = (1 to rounds).foldLeft((init, Set.empty[Int])) {
-      case ((lbls, prevIds), _) =>
-        val (l, ids) = checkpointRound(lbls)
-        freeRound(l, prevIds)
-        (l.unionAll(
-            l.join(pushAdj, keys)
-              .select((tags.map(col) :+ col("dst").as("node") :+ col("lbl")): _*))
-          .groupBy(keys.map(col): _*).agg(min(col("lbl")).as("lbl")), ids)
+    // plan linear in rounds (see Rounds)
+    Rounds.fixed(init, rounds) { l =>
+      l.unionAll(
+          l.join(pushAdj, keys)
+            .select((tags.map(col) :+ col("dst").as("node") :+ col("lbl")): _*))
+        .groupBy(keys.map(col): _*).agg(min(col("lbl")).as("lbl"))
     }
-    fin
   }
 
   /** Bounded-round strongly-connected-component coloring over a DIRECTED
@@ -1815,7 +1763,8 @@ object Graph {
     // upstream edge construction (often a join+aggregate itself) re-runs
     // for every reference — measured 82 s → 3 s at sf0.1 from these three
     // persists alone. MEMORY_AND_DISK keeps lineage (recomputable on
-    // executor loss — the Dedup.ReuseStrategy trade); blocks are freed by
+    // executor loss, unlike a checkpoint — the trade in the Rounds
+    // scaladoc); blocks are freed by
     // the ContextCleaner when the plan is collected.
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val ed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -1989,7 +1938,7 @@ object Graph {
     // round and each broadcast-max job re-optimizes the whole growing
     // tree — measured 60 s for 3 iterations at sf0.1, superlinear in
     // iters; checkpointing makes plan and optimizer cost linear.
-    var prevIds = Set.empty[Int]
+    var pinned = Seq.empty[DataFrame]
     // Zero-score nodes are carried IMPLICITLY through the iteration: a
     // node with no in-edges has auth 0 forever, and a 0-score node's
     // contribution to the other side's sum is +0.0 — the additive
@@ -2000,14 +1949,14 @@ object Graph {
     // envelope (same non-zero sum terms; order variation was already
     // absorbed by the round, per the scaladoc above).
     for (_ <- 1 to iters) {
-      val (aFull, aIds) = checkpointRound(ed
+      val aFull = Rounds.checkpoint(ed
         .join(hub.withColumnRenamed("node_id", "src"), "src")
         .groupBy(col("dst").as("node_id"))
         .agg(sum(col("hub")).as("__a")))
       val aMax = broadcast(aFull.agg(max(col("__a")).as("__amx")))
       auth = aFull.crossJoin(aMax)
         .select(col("node_id"), (col("__a") / col("__amx")).as("auth"))
-      val (hFull, hIds) = checkpointRound(ed
+      val hFull = Rounds.checkpoint(ed
         .join(auth.withColumnRenamed("node_id", "dst"), "dst")
         .groupBy(col("src").as("node_id"))
         .agg(sum(col("auth")).as("__h")))
@@ -2016,8 +1965,8 @@ object Graph {
         .select(col("node_id"), (col("__h") / col("__hmx")).as("hub"))
       // the superseded round's blocks are no longer reachable once this
       // round's checkpoints exist (the last round's stay live for output)
-      freeRound(hFull, prevIds)
-      prevIds = aIds ++ hIds
+      pinned.foreach(Rounds.free)
+      pinned = Seq(aFull, hFull)
     }
     nodes
       .join(auth, Seq("node_id"), "left")

@@ -210,7 +210,9 @@ object Similarity {
         .filter(col("__rn") === 1)
         .select(col("query_id"), lit(s).as("step"), col("neighbor_id"),
           col("sim"), col("redundancy"), col("mmr"))
-      selected = (if (s == 1) pick else selected.union(pick)).localCheckpoint()
+      val next = Rounds.checkpoint(if (s == 1) pick else selected.union(pick))
+      if (s > 1) Rounds.free(selected)
+      selected = next
     }
     selected
   }
@@ -675,8 +677,9 @@ object Similarity {
     *    is bit-identical, so first-wins dedupe in the buffer equals the
     *    former max()-collapse pre-pass while retiring its dedicated
     *    exchange every round).
-    *  - The per-round graph is localCheckpoint'ed (the bpeLoop
-    *    discipline), keeping the logical plan linear in rounds.
+    *  - The per-round graph is localCheckpoint'ed and the superseded
+    *    round freed (the bpeLoop discipline), keeping the logical plan
+    *    linear in rounds and executor storage O(1) in rounds.
     *
     * One driver-side scalar (count, sizing the init groups) is the only
     * non-distributed step. Deterministic end-to-end: seeded hash init,
@@ -714,12 +717,11 @@ object Similarity {
         explode(sequence(lit(1), lit(k))).as("__j"))
       .select(col("node"), col("v"),
         pmod(xxhash64(lit("nnd-init"), col("node"), col("__j")), lit(n)).as("__tr"))
-    var knn = topkAgg(draws
-        .join(byRank, Seq("__tr"))
-        .filter(col("node") =!= col("cand"))
-        .select(col("node"), col("cand"), cosine(col("v"), col("cv")).as("sim"))
-        .filter(col("sim").isNotNull))
-      .localCheckpoint()
+    var knn = Rounds.checkpoint(topkAgg(draws
+      .join(byRank, Seq("__tr"))
+      .filter(col("node") =!= col("cand"))
+      .select(col("node"), col("cand"), cosine(col("v"), col("cv")).as("sim"))
+      .filter(col("sim").isNotNull)))
     for (_ <- 1 to rounds) {
       val cur = edges(knn)
       val rev = edges(topkAgg(
@@ -750,7 +752,9 @@ object Similarity {
         .join(emb.select(col("node").as("cand"), col("v").as("cv")), Seq("cand"))
         .select(col("node"), col("cand"), cosine(col("v"), col("cv")).as("sim"))
         .filter(col("sim").isNotNull)
-      knn = topkAgg(cur.unionAll(scored)).localCheckpoint()
+      val next = Rounds.checkpoint(topkAgg(cur.unionAll(scored)))
+      Rounds.free(knn)
+      knn = next
       und.unpersist(blocking = false)
     }
     knn.select(col("node").as("node_id"), posexplode(col("top")))
@@ -1138,7 +1142,6 @@ object Similarity {
   def kCenterQuantized(vecs: DataFrame, k: Int): DataFrame = {
     require(k >= 2 && k <= 16, "k in [2,16] (one unrolled round per center)")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sc = vecs.sparkSession.sparkContext
     val base = vecs.select(col("vec_id"),
         graft.functions.vectornative
           .quantize_int8(col("embedding").cast("array<double>")).as("qv"))
@@ -1153,14 +1156,11 @@ object Similarity {
     val outs = Seq.newBuilder[DataFrame]
     outs += c1.select(lit(1L).as("sel_order"), col("cid").as("center_id"),
       lit(0L).as("picked_dist"))
-    var cur = base.crossJoin(broadcast(c1))
-      .select(col("vec_id"), col("qv"), d2(col("qv"), col("cv")).as("mind"))
-      .localCheckpoint()
     // only THIS loop's superseded round frames are ever freed — never
     // base, never another query's caches, and never the 1-row center
-    // checkpoints the final union still references; ids come off the
-    // frame itself (see Rounds — the registry diff raced)
-    var prevIds = Rounds.ckptIds(cur)
+    // checkpoints the final union still references
+    var cur = Rounds.checkpoint(base.crossJoin(broadcast(c1))
+      .select(col("vec_id"), col("qv"), d2(col("qv"), col("cv")).as("mind")))
     for (r <- 2 to k) {
       // farthest-first argmax: highest mind, ties → lowest vec_id
       val next = cur.groupBy()
@@ -1172,14 +1172,12 @@ object Similarity {
       outs += next.select(lit(r.toLong).as("sel_order"),
         col("cid").as("center_id"),
         col("picked_dist").cast("long").as("picked_dist"))
-      cur = cur.crossJoin(broadcast(next.select(col("cv"))))
-        .select(col("vec_id"), col("qv"),
-          least(col("mind"), d2(col("qv"), col("cv"))).as("mind"))
-        .localCheckpoint()
-      val curIds = Rounds.ckptIds(cur)
-      prevIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevIds = curIds
+      val nextCur = Rounds.checkpoint(
+        cur.crossJoin(broadcast(next.select(col("cv"))))
+          .select(col("vec_id"), col("qv"),
+            least(col("mind"), d2(col("qv"), col("cv"))).as("mind")))
+      Rounds.free(cur)
+      cur = nextCur
     }
     val cov = broadcast(cur.agg(
       max(col("mind")).cast("long").as("radius"),

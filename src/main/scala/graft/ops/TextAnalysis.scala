@@ -836,10 +836,6 @@ object TextAnalysis {
     import org.apache.spark.storage.StorageLevel
     val byWord = Window.partitionBy(col("word")).orderBy(col("pos"))
     var toks = toks0.persist(StorageLevel.MEMORY_AND_DISK)
-    // ids of the PREVIOUS round's checkpointed blocks — superseded once
-    // the next round materializes, freed so executor storage stays O(1)
-    // in iterations (the Graph.checkpointRound/freeRound discipline)
-    var prevRoundIds = Set.empty[Int]
     val outs = Seq.newBuilder[DataFrame]
     for (it <- 1 to iterations) {
       val m = toks
@@ -870,19 +866,16 @@ object TextAnalysis {
       // checkpointed block is not recomputable from lineage (an executor
       // loss fails the job instead of recomputing) — acceptable for a
       // bounded 5-round vocab-scale loop; superseded rounds' blocks are
-      // freed below so executor storage stays O(1) in iterations (the
-      // Graph.checkpointRound/freeRound discipline).
-      val sc = toks.sparkSession.sparkContext
-      toks = sel.filter(!coalesce(col("prev_sel"), lit(false)))
-        .withColumn("tok", when(coalesce(col("sel"), lit(false)),
-          concat(col("tok"), col("mb"))).otherwise(col("tok")))
-        .withColumn("pos", row_number().over(byWord).cast("long"))
-        .select(col("word"), col("freq"), col("pos"), col("tok"))
-        .localCheckpoint()
-      val newIds = Rounds.ckptIds(toks) // ids off the frame (see Rounds)
-      prevRoundIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevRoundIds = newIds
+      // freed below so executor storage stays O(1) in iterations (round
+      // 1 supersedes the persisted toks0, which is not a checkpoint).
+      val next = Rounds.checkpoint(
+        sel.filter(!coalesce(col("prev_sel"), lit(false)))
+          .withColumn("tok", when(coalesce(col("sel"), lit(false)),
+            concat(col("tok"), col("mb"))).otherwise(col("tok")))
+          .withColumn("pos", row_number().over(byWord).cast("long"))
+          .select(col("word"), col("freq"), col("pos"), col("tok")))
+      if (it > 1) Rounds.free(toks)
+      toks = next
     }
     (outs.result(), toks)
   }
@@ -1079,10 +1072,8 @@ object TextAnalysis {
         .select(col("word"), col("fpos").as("pos"), col("tpos"),
           col("tok"), col("lp"))
         .persist(lvl)
-      val sc = wf.sparkSession.sparkContext
-      var prevIds = Set.empty[Int]
-      var st = wf.select(col("word"), lit(0).as("pos"),
-        lit(0.0).as("score"), lit("").as("path")).localCheckpoint()
+      var st = Rounds.checkpoint(wf.select(col("word"), lit(0).as("pos"),
+        lit(0.0).as("score"), lit("").as("path")))
       // (r15 optimization receipt: a fixpoint EARLY EXIT — lazy
       // checkpoint + (count, xor-hash) probe per round, the
       // ccTwoStarsNodes shape — was tried and measured WORSE at sf0.1:
@@ -1096,16 +1087,13 @@ object TextAnalysis {
           .select(col("word"), col("tpos").as("pos"),
             (col("score") + col("lp")).as("score"),
             concat(col("path"), lit(sep), col("tok")).as("path"))
-        st = st.unionAll(nxt)
+        val next = Rounds.checkpoint(st.unionAll(nxt)
           .groupBy(col("word"), col("pos"))
           .agg(max(struct(col("score"), col("path"))).as("m"))
           .select(col("word"), col("pos"), col("m.score").as("score"),
-            col("m.path").as("path"))
-          .localCheckpoint()
-        val newIds = Rounds.ckptIds(st) // ids off the frame (see Rounds)
-        prevIds.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-        prevIds = newIds
+            col("m.path").as("path")))
+        Rounds.free(st)
+        st = next
       }
       val segged = st.join(wf, Seq("word"))
         .filter(col("pos") === length(col("word")))

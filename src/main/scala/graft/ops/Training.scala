@@ -66,10 +66,10 @@ object Training {
     * The bucket-totals branch re-scans the (pruned) id+text columns and
     * re-tokenizes — two passes over the corpus. At 100 TB, materialize
     * the tokenized `(id, bucket, n_tokens)` frame once (24 bytes/doc;
-    * persist or localCheckpoint — the [[Dedup.ReuseStrategy]] trade
-    * applies verbatim) and feed both branches from it. Left
-    * unmaterialized here so the operator has no storage side effects by
-    * default. */
+    * persist or localCheckpoint — the executor-loss trade in the
+    * [[Rounds]] scaladoc applies verbatim) and feed both branches from
+    * it. Left unmaterialized here so the operator has no storage side
+    * effects by default. */
   def packSequences(df: DataFrame, idCol: String, textCol: String,
       capacity: Int = 512, bucketSize: Int = 64): DataFrame = {
     val base = df.select(

@@ -8,18 +8,26 @@ import scala.jdk.CollectionConverters._
   * Bench and Prof sample with. */
 class HarnessSpec extends SparkSuite {
   test("Harness.scala is the only place a session is built") {
+    def filesWith(needle: String, roots: Seq[String]): Seq[String] =
+      roots.flatMap { root =>
+        val dir = Paths.get(root)
+        assert(Files.isDirectory(dir), s"$root not found under ${Paths.get("").toAbsolutePath}")
+        val files = Files.walk(dir)
+        try files.iterator.asScala
+          .filter(p => Files.isRegularFile(p) && Files.readString(p).contains(needle))
+          .map(_.toString).toList
+        finally files.close()
+      }
     // Split so this file does not match itself.
     val needle = "SparkSession" + ".builder()"
-    val hits = Seq("src/main/scala", "src/test/scala").flatMap { root =>
-      val dir = Paths.get(root)
-      assert(Files.isDirectory(dir), s"$root not found under ${Paths.get("").toAbsolutePath}")
-      val files = Files.walk(dir)
-      try files.iterator.asScala
-        .filter(p => Files.isRegularFile(p) && Files.readString(p).contains(needle))
-        .map(_.toString).toList
-      finally files.close()
-    }
-    assert(hits == Seq("src/main/scala/graft/Harness.scala"))
+    assert(filesWith(needle, Seq("src/main/scala", "src/test/scala")) ==
+      Seq("src/main/scala/graft/Harness.scala"))
+    // Likewise one owner for freeing round checkpoints: no other program
+    // file reads the session's persistent-RDD registry or checkpoint ids
+    // (the tests still read the registry for their leak bounds).
+    for (n <- Seq("getPersistent" + "RDDs", "ckpt" + "Ids"))
+      assert(filesWith(n, Seq("src/main/scala")) ==
+        Seq("src/main/scala/graft/ops/Rounds.scala"), n)
   }
 
   test("Harness.session(k): master local[k], k shuffle partitions, UTC") {

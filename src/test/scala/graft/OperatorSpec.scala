@@ -19,6 +19,28 @@ class OperatorSpec extends SparkSuite {
     assert(empties.isEmpty, s"empty results: $empties")
   }
 
+  test("round-loop queries: concurrent runs on one session equal the sequential run") {
+    // The iterative operators pin and free a checkpoint per round
+    // (ops/Rounds). A free that reached another query's frames — the r16
+    // registry-diff race — fails or changes a query running beside it,
+    // so each runs twice from the pool against its sequential result.
+    val names = Seq("graph_kcore", "graph_ktruss", "graph_cc_twostars",
+      "graph_hits", "graph_mst_boruvka", "graph_mis", "graph_coloring",
+      "graph_diameter", "dedup_groups", "dedup_max_repeats",
+      "text_bpe_merges", "text_unigram_encode", "sample_kcenter",
+      "ann_nndescent_planted", "ann_mmr_rerank")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().toSeq.map(_.toSeq.map(Verify.canonCell).mkString(" | ")).sorted
+    try {
+      val sequential = names.map(n => n -> rows(SparkEntry.queries(n)(spark, sfDir))).toMap
+      assert(sequential.forall(_._2.nonEmpty), sequential.filter(_._2.isEmpty).keys)
+      val differ = sweepQueries(names = names ++ names) { (name, fn) =>
+        if (rows(fn(spark, sfDir)) == sequential(name)) Nil else Seq(name)
+      }
+      assert(differ.isEmpty, s"concurrent result differs from sequential: $differ")
+    } finally spark.catalog.clearCache() // see the gate-boundary test
+  }
+
   test("entry flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -374,15 +396,50 @@ class OperatorSpec extends SparkSuite {
     assert(groups == Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 7L -> 7L, 9L -> 7L), groups.toString)
   }
 
+  /** How many RDDs `body` persisted that are still persisted when it
+    * returns. The session's persistent-RDD registry holds RDDs weakly,
+    * so a GC during `body` can drop a leaked checkpoint before it is
+    * counted. Every persisted RDD a job start sees is held strongly
+    * until the count is taken, so only an explicit unpersist removes
+    * one. */
+  private def leftPersisted(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val held = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[org.apache.spark.rdd.RDD[_]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.values.foreach(held.add)
+    }
+    sc.addSparkListener(listener)
+    try body finally sc.removeSparkListener(listener)
+    val live = sc.getPersistentRDDs.keySet
+    (held.asScala.map(_.id).toSet -- before).count(live)
+  }
+
   test("duplicate groups: deep chain converges, frees checkpoints, throws past maxIters") {
     // a 12-node path needs ~11 label-propagation rounds — exercises the
     // per-iteration localCheckpoint path well beyond typical LSH cliques
     val chain = (1L until 12L).map(i => (i, i + 1)).toDF("left_id", "right_id")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val groups = Dedup.duplicateGroups(chain).as[(Long, Long)].collect().toMap
+    var groups = Map.empty[Long, Long]
+    val left = leftPersisted {
+      groups = Dedup.duplicateGroups(chain).as[(Long, Long)].collect().toMap
+    }
     assert(groups.size == 12 && groups.values.toSet == Set(1L), groups.toString)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before + 3, s"leaked checkpoint blocks: $before -> $after persistent RDDs")
+    assert(left <= 3, s"leaked checkpoint blocks: $left persistent RDDs left")
+    // the unigram Viterbi rounds free their superseded state, the seed
+    // round included: what stays is the six persisted frames (wf, vocab,
+    // candidates, the first pass's reweighted vocab, each pass's edge
+    // frame) and each pass's final state
+    val words = (Seq.fill(20)("ab") ++ Seq.fill(20)("cd") ++ Seq("abcd", "abcz"))
+      .map(Tuple1(_)).toDF("text")
+    val viterbiLeft = leftPersisted {
+      TextAnalysis.unigramWordPaths(words, maxTokLen = 3, topSubs = 8,
+        rounds = 4).count()
+    }
+    assert(viterbiLeft <= 8, s"Viterbi leaked rounds: $viterbiLeft persistent RDDs left")
     // partially-propagated labels must fail loudly, not return wrong groups
     intercept[IllegalStateException] {
       Dedup.duplicateGroups(chain, maxIters = 3).count()
@@ -2155,10 +2212,20 @@ class OperatorSpec extends SparkSuite {
       Graph.ccTwoStarsNodes(edges, maxRounds = 1).count()
     }
     // checkpoint blocks from superseded rounds are freed
-    val before = spark.sparkContext.getPersistentRDDs.size
-    Graph.ccTwoStarsNodes(edges).count()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before + 2, s"leaked checkpoint blocks: $before -> $after")
+    val left = leftPersisted(Graph.ccTwoStarsNodes(edges).count())
+    assert(left <= 2, s"leaked checkpoint blocks: $left persistent RDDs left")
+    // so are NN-descent's superseded k-NN graphs (what stays: the
+    // persisted embeddings and the final graph) and MMR's superseded
+    // selections (what stays: the candidate and pair frames and the
+    // final selection)
+    val rnd = new scala.util.Random(29)
+    val vecs = (0L until 120L).map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val nnLeft = leftPersisted(Similarity.nnDescent(vecs, k = 5, rounds = 5).count())
+    assert(nnLeft <= 2, s"NN-descent leaked rounds: $nnLeft persistent RDDs left")
+    val mmrLeft = leftPersisted(Similarity.mmrRerank(vecs,
+      vecs.filter($"vec_id" % 30 === 0), candK = 16, k = 6).count())
+    assert(mmrLeft <= 3, s"MMR leaked steps: $mmrLeft persistent RDDs left")
   }
 
   test("two-star CC: duplicate (m,w) rows from large-star resolve correctly without its distinct") {

@@ -9,7 +9,8 @@ trait SparkSuite extends AnyFunSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Run `f` over every SparkEntry query from a small thread pool (guide
+  /** Run `f` over SparkEntry queries (default: every one, by name; a
+    * name listed twice runs twice) from a small thread pool (guide
     * §2.6 — actions are only sequential because a driver calls them
     * sequentially): the three all-query sweeps dominated the suite's
     * wall time (5:24 + 3:18 + 2:37 of it, r16 measurement) and their
@@ -20,7 +21,8 @@ trait SparkSuite extends AnyFunSuite {
     * and the bucketed-table names belong to a single query (the
     * Fixtures.layoutRoot/tableSuffix scaladocs). Results keep query order, so
     * assertion messages are deterministic. */
-  def sweepQueries[T](threads: Int = 8)(
+  def sweepQueries[T](threads: Int = 8,
+      names: Seq[String] = SparkEntry.queries.keys.toSeq.sorted)(
       f: (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)
         => Seq[T]): Seq[T] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -28,8 +30,7 @@ trait SparkSuite extends AnyFunSuite {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
-      val futs = SparkEntry.queries.toSeq.sortBy(_._1)
-        .map { case (name, fn) => Future(f(name, fn)) }
+      val futs = names.map(name => Future(f(name, SparkEntry.queries(name))))
       Await.result(Future.sequence(futs), Duration.Inf).flatten
     } finally pool.shutdown()
   }
