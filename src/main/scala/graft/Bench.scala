@@ -13,11 +13,14 @@ object Bench {
     * materialized result, or the exception building or running it threw.
     * The result goes to the `noop` sink, so every column the oracle checks
     * is computed; a `count()` would let Catalyst prune projections and
-    * aggregates it does not need. */
+    * aggregates it does not need. Everything the query pinned is freed
+    * when the sample ends (`Harness.materialize`), so the next sample of
+    * the same query recomputes it rather than reading a warm cache: the
+    * CacheManager matches frames by canonical plan across runs. */
   def timeFullResult(query: => DataFrame): Either[Throwable, Double] = {
     val t0 = System.nanoTime()
     try {
-      query.write.format("noop").mode("overwrite").save()
+      Harness.materialize(query)(_.write.format("noop").mode("overwrite").save())
       Right((System.nanoTime() - t0) / 1e9)
     } catch { case e: Throwable => Left(e) }
   }
@@ -46,13 +49,6 @@ object Bench {
     val best = Array.fill(queries.size)(Double.MaxValue)
     val failed = Array.fill(queries.size)(false)
     for (r <- 0 until runs; i <- queries.indices if !failed(i)) {
-      // Clear BEFORE every sample, not just between queries: iterative
-      // operators (pagerank, triangles, walks) persist frames, and
-      // Spark's CacheManager reuses them across re-runs via canonicalized
-      // plans — without this, runs 2..n of a persisting query measure a
-      // warm cache and min() reports the warm number as per-query cost.
-      // It also bounds local-mode heap pressure from accumulated blocks.
-      spark.catalog.clearCache()
       val (name, fn) = queries(i)
       timeFullResult(fn(spark, sfDir)) match {
         case Right(t) => best(i) = best(i) min t

@@ -10,18 +10,21 @@ import org.apache.spark.sql.execution.ExplainMode
   * [sfDir] [out.md]"`. */
 object Explain {
   /** The formatted physical plan of SparkEntry query `name` at `sfDir`,
-    * or `ERROR: <message>` when building it throws. The query's
-    * construction-time caches are cleared afterwards (see `main`). Plans
-    * can embed raw control bytes in expression literals (the ustar NUL
-    * padding in mm_tar_shards' concat tree turned the whole file "binary"
-    * for grep/diff); they are rendered as `\xNN` escapes so every receipt
-    * stays a text file. */
+    * or `ERROR: <message>` when building it throws. The caches and
+    * checkpoints the query pinned while it was built are freed once its
+    * plan is printed (`Harness.materialize`): a later plan that matched a
+    * live cached fragment would print the InMemoryRelation's full child
+    * tree at every reference, and the textual expansion compounds —
+    * graph_leiden's caches once inflated graph_louvain_multilevel's
+    * section to 1.2M lines. Plans can embed raw control bytes in
+    * expression literals (the ustar NUL padding in mm_tar_shards' concat
+    * tree turned the whole file "binary" for grep/diff); they are rendered
+    * as `\xNN` escapes so every receipt stays a text file. */
   def plan(spark: SparkSession, name: String, sfDir: String): String = {
     val text =
-      try SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
+      try Harness.materialize(SparkEntry.queries(name)(spark, sfDir))(
+        _.queryExecution.explainString(ExplainMode.fromString("formatted")))
       catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
-      finally spark.catalog.clearCache()
     text.map {
       case c if c == '\n' || c == '\t' || c >= ' ' => c.toString
       case c => f"\\x${c.toInt}%02x"
@@ -35,14 +38,8 @@ object Explain {
     val sb = new StringBuilder
     sb.append(s"# Physical plans (sf dir: $sfDir)\n\n")
     sb.append("Audit artifact — regenerate with `sbt \"runMain graft.Explain\"`.\n")
-    // One query's construction-time caches must not leak into the NEXT
-    // query's printed plan: a later plan that matches a live cached
-    // fragment prints the InMemoryRelation's full child tree at every
-    // reference, and the textual expansion compounds — graph_leiden's
-    // caches once inflated graph_louvain_multilevel's section to 1.2M
-    // lines. `plan` clears between queries (the gate-boundary behavior);
-    // cap any still-pathological section loudly instead of flooding the
-    // file.
+    // `plan` frees each query's pins before the next is built; cap any
+    // still-pathological section loudly instead of flooding the file.
     val maxLines = 4000
     SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       val text = plan(spark, name, sfDir)

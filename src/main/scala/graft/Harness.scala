@@ -2,11 +2,12 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one session builder: Bench, Verify, Explain, the tools and the
   * test suites all take their session from here, each passing the core
-  * count it runs with. Also the one JSON encoder of the mains' output. */
+  * count it runs with. Also the one way those run a query to its result,
+  * and the one JSON encoder of the mains' output. */
 object Harness {
   /** Renders Scala maps, sequences and options; a `ListMap` keeps its
     * field order, as the tail-proof contract lines need. */
@@ -25,4 +26,12 @@ object Harness {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Builds `query`, runs `sink` on it (a noop or parquet write, an
+    * explain string, a collect) and then frees every cache entry and
+    * checkpoint the build and the sink pinned: one query scope of
+    * `ops.Rounds`. Other queries' pins stay, unless they share one of
+    * these cache entries; a plan still reading it then rebuilds it. */
+  def materialize[T](query: => DataFrame)(sink: DataFrame => T): T =
+    graft.ops.Rounds.scoped(sink(query))
 }

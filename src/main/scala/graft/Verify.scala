@@ -44,8 +44,8 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        Harness.materialize(fn(spark, sfDir))(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
         nOk += 1
         produced(name) = None
         // Divergence-capture artifact: the WRITTEN parquet (exactly what

@@ -151,7 +151,7 @@ object Dedup {
     // (exchange reuse only merges the two band sides). A lazy
     // localCheckpoint: leak-free but NOT recomputable on executor loss
     // (the trade in the Rounds scaladoc).
-    val s = sigs.localCheckpoint(eager = false)
+    val s = Rounds.checkpoint(sigs, eager = false)
     lshCandidatesFromSigs(s, bands, bandKey)
       .join(s.select(col("doc_id").as("left_id"), col("sig").as("left_sig")), Seq("left_id"))
       .join(s.select(col("doc_id").as("right_id"), col("sig").as("right_sig")), Seq("right_id"))
@@ -646,10 +646,9 @@ object Dedup {
     // window stream, and the explode's output reaches the exchange
     // map-side-combined (a doc's windows are co-located in its input
     // partition).
-    val dk = spanWindows(docs, idCol, textCol, n)
+    val dk = Rounds.persist(spanWindows(docs, idCol, textCol, n)
       .select(col(idCol), spanKey(col("span")).as("__h"))
-      .groupBy(col(idCol), col("__h")).agg(count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col(idCol), col("__h")).agg(count(lit(1)).as("__c")))
     val heavy = dk
       .groupBy(col("__h")).agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") >= minDocs)
@@ -689,9 +688,8 @@ object Dedup {
     // persist the fixed-width (id, wpos, key) rows so the explode+md5
     // pass runs once, not per consumer (columnar-cached longs — a
     // fraction of the source text it would otherwise re-scan).
-    val wins = posSpanWindows(docs, idCol, textCol, n)
-      .select(col(idCol), col("wpos"), spanKey(col("span")).as("__h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val wins = Rounds.persist(posSpanWindows(docs, idCol, textCol, n)
+      .select(col(idCol), col("wpos"), spanKey(col("span")).as("__h")))
     val heavy = wins.select(col(idCol), col("__h")).distinct()
       .groupBy(col("__h")).agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") >= minDocs)
@@ -756,12 +754,11 @@ object Dedup {
     // and n_a counts informative rows (duplicates included) in both.
     require(maxDf < Int.MaxValue, "maxDf must fit an Int buffer cap")
     val boundedCollect = udaf(new BoundedCollectAggregator((maxDf + 1).toInt))
-    val g = docs.select(col(idCol).cast("long").as("doc_id"),
+    val g = Rounds.persist(docs.select(col(idCol).cast("long").as("doc_id"),
         explode(graft.functions.textnative
           .shingle_md5_keys(col(textCol), n)).as("k"))
       .groupBy(col("k")).agg(boundedCollect(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) <= maxDf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(size(col("ds")) <= maxDf))
     val sizes = g.select(explode(col("ds")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_a"))
     val ds = col("ds")
@@ -808,11 +805,9 @@ object Dedup {
       n: Int = 3, minJaccard: Double = 0.5): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1, "minJaccard in (0,1]")
     import org.apache.spark.sql.expressions.Window
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val toks = docs.select(col(idCol).cast("long").as("doc_id"),
+    val toks = Rounds.persist(docs.select(col(idCol).cast("long").as("doc_id"),
         explode(array_distinct(graft.functions.textnative
-          .shingle_md5_keys(col(textCol), n))).as("tok"))
-      .persist(lvl)
+          .shingle_md5_keys(col(textCol), n))).as("tok")))
     val dfq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val byDoc = Window.partitionBy(col("doc_id"))
       .orderBy(col("df"), col("tok"))
@@ -828,9 +823,8 @@ object Dedup {
       .join(pfx.select(col("tok"), col("doc_id").as("b")), Seq("tok"))
       .filter(col("a") < col("b"))
       .select(col("a"), col("b")).distinct()
-    val sigs = docs.select(col(idCol).cast("long").as("doc_id"),
-        graft.functions.textnative.shingle_hashes(col(textCol), n).as("sh"))
-      .persist(lvl)
+    val sigs = Rounds.persist(docs.select(col(idCol).cast("long").as("doc_id"),
+        graft.functions.textnative.shingle_hashes(col(textCol), n).as("sh")))
     cand
       .join(sigs.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
       .join(sigs.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
@@ -887,8 +881,7 @@ object Dedup {
         "envelope [0,180]")
     require(k >= 1 && iters >= 1, "k and iters must be >= 1")
     require(maxClusterSize >= 2, "maxClusterSize must be >= 2")
-    val assigned = Similarity.kmeansAssignments(emb, k, iters)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assigned = Rounds.persist(Similarity.kmeansAssignments(emb, k, iters))
     val dups =
       semanticDupPairs(assigned, tauNum, tauDen, maxClusterSize, dim)
         .groupBy(col("idb")).agg(count(lit(1)).as("n_dup_lower"))
@@ -950,8 +943,7 @@ object Dedup {
       // persisted: b, aSmall, and reps all read this frame — without it
       // the LSH projection + size join recompute once per branch (the
       // bm25 lesson this file already cites)
-      val sized = cells.join(cellSizes, Seq("cid", "__sub"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sized = Rounds.persist(cells.join(cellSizes, Seq("cid", "__sub")))
       val b = sized.select(col("cid"), col("__sub"), col("__sn"),
         col("vec_id").as("idb"), col("qv").as("qb"))
       // in-cap cells: exact all-pairs, as in the unguarded path
@@ -1177,7 +1169,6 @@ object Dedup {
     require(minLen >= 2, "minLen >= 2")
     require(cap >= minLen, "cap >= minLen")
     require(maxLevels >= 1 && maxLevels <= 64, "maxLevels in [1,64]")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val K = math.max(1, 32 - Integer.numberOfLeadingZeros(cap - 1)) // ceil(log2 cap)
     // Rank arrays are SEEDED at width 2^K0 (K0 = floor(log2 minLen)), not
     // width 1 (r15 perf pass): no tested length is ever below minLen, so
@@ -1196,21 +1187,19 @@ object Dedup {
     // element_at(rks, j) = rank identifying tokens [pos, pos + 2^(K0+j-1))
     val nRk = K - K0 + 1 // top entry: width 2^K, the E-coded suffix id
     // 1. prune to positions whose minLen-window recurs, and their docs
-    val wins = posSpanWindows(docs, idCol, textCol, minLen)
+    val wins = Rounds.persist(posSpanWindows(docs, idCol, textCol, minLen)
       .select(col(idCol).as("doc"), col("wpos").as("pos"),
-        spanKey(col("span")).as("__h"))
-      .persist(lvl)
+        spanKey(col("span")).as("__h")))
     val heavy = wins.groupBy(col("__h")).agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= 2).select(col("__h"))
-    val p0 = wins.join(heavy, Seq("__h"), "left_semi")
-      .select(col("doc"), col("pos")).localCheckpoint()
-    wins.unpersist(blocking = false)
+    val p0 = Rounds.checkpoint(wins.join(heavy, Seq("__h"), "left_semi")
+      .select(col("doc"), col("pos")))
+    Rounds.free(wins)
     val candDocs = p0.select(col("doc")).distinct()
-    val tk = docs
+    val tk = Rounds.persist(docs
       .select(col(idCol).as("doc"), split(trim(col(textCol)), "\\s+").as("tk"))
       .join(candDocs, Seq("doc"), "left_semi")
-      .select(col("doc"), col("tk"), size(col("tk")).as("len"))
-      .persist(lvl)
+      .select(col("doc"), col("tk"), size(col("tk")).as("len")))
     val toks = tk.select(col("doc"), col("len"),
       posexplode(col("tk")).as(Seq("pos", "tok")))
     // 2. rank tables, seeded at width 2^K0 directly from the token arrays
@@ -1237,7 +1226,7 @@ object Dedup {
       ranks = next
     }
     // ranks must outlive the loops below: the last round is never freed
-    val rankT = ranks.persist(lvl)
+    val rankT = Rounds.persist(ranks)
     // 3. per-member window-id ARRAY for every depth in [minLen, cap] —
     // the r15 search rewrite. The r14 lockstep binary search paid
     // levels x ceil(log2 range) JOBS, each a g x rankT join plus a gid
@@ -1309,7 +1298,7 @@ object Dedup {
       md5(concat(element_at(col("ids"), 1), lit("#"), lit(minLen)))
         .as("gid"),
       col("doc"), col("pos"), col("len"), col("ids")))
-    rankT.unpersist(blocking = false) // gather was its last consumer
+    Rounds.free(rankT) // gather was its last consumer
     val wg = org.apache.spark.sql.expressions.Window.partitionBy(col("gid"))
     val emittedLevels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var level = 0
@@ -1339,7 +1328,7 @@ object Dedup {
       // deliberately never freed (unlike the g rounds): the
       // per-level annotated frames back emitAll lazily for the rest of
       // the op (the same lifetime the per-level emitted checkpoints had)
-      val annC = ann.localCheckpoint()
+      val annC = Rounds.checkpoint(ann)
       val chk = annC.agg(count(lit(1)),
         max(when(col("__ls") === cap && col("__maxR") > cap, 1)
           .otherwise(0))).first()
@@ -1432,8 +1421,8 @@ object Dedup {
         countDistinct(col("__prev")).as("__ndp"))
       .filter(col("__atStart") || col("__ndp") >= 2)
       .select(col("gid"))
-    val occ = emitAll.join(lm, Seq("gid"), "left_semi")
-      .localCheckpoint() // composition boundary: occ feeds two consumers
+    // composition boundary: occ feeds two consumers
+    val occ = Rounds.checkpoint(emitAll.join(lm, Seq("gid"), "left_semi"))
     val firsts = occ.groupBy(col("gid"))
       .agg(min(struct(col("doc"), col("pos"))).as("__w"))
     val covered = occ.join(firsts, Seq("gid"))
@@ -1482,10 +1471,8 @@ object Dedup {
     * Output: (idCol, text_clean, n_tokens, n_removed) for every doc. */
   def keepFirstSpans(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 8): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val wins = posSpanWindows(docs, idCol, textCol, n)
-      .select(col(idCol), col("wpos"), spanKey(col("span")).as("__h"))
-      .persist(lvl)
+    val wins = Rounds.persist(posSpanWindows(docs, idCol, textCol, n)
+      .select(col(idCol), col("wpos"), spanKey(col("span")).as("__h")))
     val firsts = wins.groupBy(col("__h"))
       .agg(count(lit(1)).as("__occ"),
         min(struct(col(idCol), col("wpos"))).as("__w"))

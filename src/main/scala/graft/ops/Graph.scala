@@ -56,8 +56,7 @@ object Graph {
     // five plan references to the edge list (three join legs + two
     // tallies): materialize once so an expensive upstream edge build
     // (join + support aggregate) doesn't re-run per branch
-    val e = edges
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = Rounds.persist(edges)
     val e1 = e.select(col("a").as("x"), col("b").as("y"))
     val e2 = e.select(col("a").as("y"), col("b").as("z"))
     val e3 = e.select(col("a").as("x"), col("b").as("z"))
@@ -77,8 +76,7 @@ object Graph {
     * keyed count — no per-node neighborhood materialization. Integer
     * counts, one IEEE division → hash-gates. */
   def clusteringCoefficient(edges: DataFrame): DataFrame = {
-    val e = edges
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = Rounds.persist(edges)
     val e1 = e.select(col("a").as("x"), col("b").as("y"))
     val e2 = e.select(col("a").as("y"), col("b").as("z"))
     val e3 = e.select(col("a").as("x"), col("b").as("z"))
@@ -132,8 +130,7 @@ object Graph {
     * (x→u, x→v) take u before v in (degree, id) order; the closing edge
     * u→v is then guaranteed to be oriented u→v, one equi-join away. */
   def triangleCountByDegree(edges: DataFrame): DataFrame = {
-    val o = orientByDegree(edges)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val o = Rounds.persist(orientByDegree(edges))
     val e1 = o.select(col("x"), col("y").as("u"), col("dy").as("du"))
     val e2 = o.select(col("x"), col("y").as("v"), col("dy").as("dv"))
     val wedges = e1.join(e2, "x")
@@ -161,11 +158,10 @@ object Graph {
     * small at any corpus size. */
   def randomWalks(edges: DataFrame, len: Int, seed: Long): DataFrame = {
     require(len >= 1 && len <= 16, "len in [1,16] (plan grows per step)")
-    val adj = edges.select(col("a").as("node"), col("b").as("nbr"))
+    val adj = Rounds.persist(edges.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(edges.select(col("b").as("node"), col("a").as("nbr")))
       .groupBy(col("node"))
-      .agg(sort_array(collect_list(col("nbr"))).as("nbrs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(sort_array(collect_list(col("nbr"))).as("nbrs")))
     var walks = adj.select(col("node").as("start"), col("node").as("cur"),
       col("node").cast("string").as("path"))
     for (step <- 1 to len) {
@@ -212,10 +208,8 @@ object Graph {
     * keep lineage linear). */
   def bfsDistances(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    bfsOverSym(edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
-      .persist(lvl), seeds, rounds)
+    bfsOverSym(Rounds.persist(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))), seeds, rounds)
   }
 
   /** [[bfsDistances]] over an already-symmetrized (and ideally
@@ -421,10 +415,8 @@ object Graph {
     * bounded recurrence either way). Output is one row of exact
     * integers: (start_node, far_node, diameter_lb, n_reached). */
   def diameterDoubleSweep(edges: DataFrame, rounds: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
-      .persist(lvl)
+    val sym = Rounds.persist(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))))
     val u = edges.agg(least(min(col("a")), min(col("b"))).as("node"))
     val d1 = bfsOverSym(sym, u, rounds)
     // farthest node, tie to the smallest id: max over (dist, -node)
@@ -466,10 +458,8 @@ object Graph {
   def closenessBounded(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 10, "rounds in [1,10]")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
-      .persist(lvl)
+    val sym = Rounds.persist(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))))
     perSeedDistances(sym, seeds, rounds).groupBy(col("seed"))
       .agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("sum_dist"))
       .select(col("seed"), col("n_reached"), col("sum_dist"),
@@ -494,10 +484,8 @@ object Graph {
     * no per-source sequential pass, no all-pairs. Seeds bound total cost
     * linearly (the sampling IS the estimator); depth bounds the ball. */
   def betweennessBounded(edges: DataFrame, seeds: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
-      .persist(lvl)
+    val sym = Rounds.persist(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))))
     // localCheckpoint (not persist) on every per-round frame: each σ/δ
     // round stacks joins on the previous round's lineage, and persist
     // alone leaves the optimizer re-analyzing the whole chain at every
@@ -507,19 +495,17 @@ object Graph {
     // every σ layer feeds the later δ backward pass — so all 6 bounded
     // frames stay pinned until the job ends; the recompute-on-executor-
     // loss trade is accepted for the flat plans.
-    val dist = perSeedDistances(sym, seeds, rounds = 3).localCheckpoint()
+    val dist = Rounds.checkpoint(perSeedDistances(sym, seeds, rounds = 3))
     def layer(d: Int) = dist.filter(col("dist") === d)
-    val s0 = layer(0).select(col("seed"), col("node"), lit(1L).as("sigma"))
-      .localCheckpoint()
+    val s0 = Rounds.checkpoint(layer(0).select(col("seed"), col("node"), lit(1L).as("sigma")))
     def fwd(prev: DataFrame, d: Int): DataFrame = {
       val p = prev.select(col("seed").as("pseed"), col("node").as("pnode"),
         col("sigma").as("psigma"))
-      layer(d).select(col("seed"), col("node"))
+      Rounds.checkpoint(layer(d).select(col("seed"), col("node"))
         .join(sym, col("node") === col("dst"))
         .join(p, col("pseed") === col("seed") && col("pnode") === col("src"))
         .groupBy(col("seed"), col("node"))
-        .agg(sum(col("psigma")).as("sigma"))
-        .localCheckpoint()
+        .agg(sum(col("psigma")).as("sigma")))
     }
     val s1 = fwd(s0, 1)
     val s2 = fwd(s1, 2)
@@ -534,10 +520,9 @@ object Graph {
         .groupBy(col("seed"), col("node"))
         .agg(sum((col("sigma") / col("nsigma")) * (lit(1.0) + col("ndelta")))
           .as("d"))
-      cur.join(contrib, Seq("seed", "node"), "left")
+      Rounds.checkpoint(cur.join(contrib, Seq("seed", "node"), "left")
         .select(col("seed"), col("node"), col("sigma"),
-          coalesce(col("d"), lit(0.0)).as("delta"))
-        .localCheckpoint()
+          coalesce(col("d"), lit(0.0)).as("delta")))
     }
     val b2 = bwd(b3, s2)
     val b1 = bwd(b2, s1)
@@ -598,8 +583,7 @@ object Graph {
     require(k >= 3 && k <= 16, "k in [3,16]")
     require(rounds >= 1 && rounds <= 8, "rounds in [1,8]")
     def support(e: DataFrame): DataFrame = {
-      val o = orientByDegree(e)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val o = Rounds.persist(orientByDegree(e))
       val e1 = o.select(col("x"), col("y").as("u"), col("dy").as("du"))
       val e2 = o.select(col("x"), col("y").as("v"), col("dy").as("dv"))
       val tri = e1.join(e2, "x")
@@ -643,11 +627,9 @@ object Graph {
     * before anything leaves the aggregate. */
   def neighborJaccard(edges: DataFrame, minCommon: Long = 2,
       minJaccard: Double = 0.25): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("a").as("n"), col("b").as("m"))
-      .unionAll(edges.select(col("b").as("n"), col("a").as("m")))
-      .persist(lvl)
-    val deg = sym.groupBy(col("n")).agg(count(lit(1)).as("d")).persist(lvl)
+    val sym = Rounds.persist(edges.select(col("a").as("n"), col("b").as("m"))
+      .unionAll(edges.select(col("b").as("n"), col("a").as("m"))))
+    val deg = Rounds.persist(sym.groupBy(col("n")).agg(count(lit(1)).as("d")))
     val common = sym.select(col("n"), col("m").as("x"))
       .join(sym.select(col("n").as("n2"), col("m").as("y")), col("n") === col("n2"))
       .filter(col("x") < col("y"))
@@ -684,10 +666,8 @@ object Graph {
     * assignment [[labelPropagation]] aggregates and [[modularity]]
     * scores. */
   def labelPropagationNodes(edges: DataFrame, rounds: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
-      .persist(lvl)
+    val sym = Rounds.persist(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))))
     val nodes = sym.select(col("src").as("node")).distinct()
     minLabelRounds(sym, nodes, rounds)
   }
@@ -1164,21 +1144,18 @@ object Graph {
     * state. */
   def sccBounded(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .persist(lvl)
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct().persist(lvl)
+    val e = Rounds.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val nodes = Rounds.persist(e.select(col("src").as("node"))
+      .unionAll(e.select(col("dst").as("node"))).distinct())
     val adj = e.select(lit(0).as("t"), col("src"), col("dst"))
       .unionAll(e.select(lit(1).as("t"),
         col("dst").as("src"), col("src").as("dst")))
     val tagged = nodes.select(lit(0).as("t"), col("node"))
       .unionAll(nodes.select(lit(1).as("t"), col("node")))
-    val joined = minLabelRounds(adj, tagged, rounds, tags = Seq("t"))
+    val joined = Rounds.persist(minLabelRounds(adj, tagged, rounds, tags = Seq("t"))
       .groupBy(col("node"))
       .agg(min(when(col("t") === 0, col("lbl"))).as("f"),
-        min(when(col("t") === 1, col("lbl"))).as("b"))
-      .persist(lvl)
+        min(when(col("t") === 1, col("lbl"))).as("b")))
     val unresolved = broadcast(joined.filter(col("f") =!= col("b"))
       .agg(count(lit(1)).as("n_unresolved")))
     joined.filter(col("f") === col("b"))
@@ -1211,10 +1188,9 @@ object Graph {
   def sccConverge(edges: DataFrame, srcCol: String, dstCol: String,
       maxPeels: Int = 64, maxRounds: Int = 200): DataFrame = {
     val spark = edges.sparkSession
-    var e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
-    var nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    var e = Rounds.checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    var nodes = Rounds.checkpoint(e.select(col("src").as("node"))
+      .unionAll(e.select(col("dst").as("node"))).distinct())
     val results = Seq.newBuilder[DataFrame]
     var peel = 0
     while (!nodes.isEmpty) {
@@ -1227,10 +1203,9 @@ object Graph {
         .unionAll(e.select(lit(1).as("t"),
           col("dst").as("src"), col("src").as("dst")))
       val pushAdj = adj.withColumnRenamed("src", "node")
-      var st = nodes.select(lit(0).as("t"), col("node"))
+      var st = Rounds.checkpoint(nodes.select(lit(0).as("t"), col("node"))
         .unionAll(nodes.select(lit(1).as("t"), col("node")))
-        .select(col("t"), col("node"), col("node").as("lbl"))
-        .localCheckpoint(eager = false)
+        .select(col("t"), col("node"), col("node").as("lbl")), eager = false)
       def lblSum(df: DataFrame): java.math.BigDecimal =
         df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0)
       var prev = lblSum(st)
@@ -1252,7 +1227,7 @@ object Graph {
         // rounds. One extra same-size keyed join per round buys
         // exponentially fewer rounds — the §2 log-round argument
         // ccTwoStarsNodes already makes for the undirected case.
-        st = st.unionAll(
+        st = Rounds.checkpoint(st.unionAll(
             st.join(pushAdj, Seq("t", "node"))
               .select(col("t"), col("dst").as("node"), col("lbl")))
           .unionAll(
@@ -1260,17 +1235,15 @@ object Graph {
               .join(st.select(col("t"), col("node").as("__p"),
                 col("lbl").as("__pl")), Seq("t", "__p"))
               .select(col("t"), col("node"), col("__pl").as("lbl")))
-          .groupBy(col("t"), col("node")).agg(min(col("lbl")).as("lbl"))
-          .localCheckpoint(eager = false)
+          .groupBy(col("t"), col("node")).agg(min(col("lbl")).as("lbl")), eager = false)
         val cur = lblSum(st)
         stable = cur.compareTo(prev) == 0
         prev = cur
         round += 1
       }
-      val fb = st.groupBy(col("node"))
+      val fb = Rounds.checkpoint(st.groupBy(col("node"))
         .agg(min(when(col("t") === 0, col("lbl"))).as("f"),
-          min(when(col("t") === 1, col("lbl"))).as("b"))
-        .localCheckpoint()
+          min(when(col("t") === 1, col("lbl"))).as("b")))
       // fb (checkpointed) is the peel's hub: the SCC rollup, the
       // remaining-node set and the edge restriction are all cheap
       // selects/joins over it, so none needs its own checkpoint
@@ -1283,12 +1256,10 @@ object Graph {
       val resolved = fb.filter(col("f") === col("b"))
       results += resolved.groupBy(col("f").as("scc"))
         .agg(count(lit(1)).as("n_nodes"), max(col("node")).as("max_node"))
-      nodes = fb.filter(col("f") =!= col("b")).select(col("node"))
-        .localCheckpoint()
-      e = e.join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
+      nodes = Rounds.checkpoint(fb.filter(col("f") =!= col("b")).select(col("node")))
+      e = Rounds.checkpoint(e.join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint()
+        .select(col("src"), col("dst")))
       peel += 1
     }
     val out = results.result()
@@ -1310,8 +1281,7 @@ object Graph {
     * window. Returns (community, l_c, d_c, contrib, q_total). */
   def modularity(edges: DataFrame, nodeLabels: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val lbl = nodeLabels.persist(lvl)
+    val lbl = Rounds.persist(nodeLabels)
     val labeled = edges
       .join(lbl.select(col("node").as("a"), col("lbl").as("la")), Seq("a"))
       .join(lbl.select(col("node").as("b"), col("lbl").as("lb")), Seq("b"))
@@ -1371,11 +1341,9 @@ object Graph {
     * coarsens by. Returns (node, lbl, d) with d = the node's degree in
     * the symmetrized graph. */
   def louvainMoveLabels(edges: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sym = edges.select(col("a").as("i"), col("b").as("j"))
       .unionAll(edges.select(col("b").as("i"), col("a").as("j")))
-    val deg = sym.groupBy(col("i").as("node")).agg(count(lit(1)).as("d"))
-      .persist(lvl)
+    val deg = Rounds.persist(sym.groupBy(col("i").as("node")).agg(count(lit(1)).as("d")))
     val mRow = broadcast(edges.agg(count(lit(1)).as("__m")))
     val gains = sym
       .join(deg.select(col("node").as("i"), col("d").as("di")), Seq("i"))
@@ -1390,14 +1358,13 @@ object Graph {
       .groupBy(col("i"))
       .agg(max(struct(col("g"), (-col("j")).as("nj"))).as("m"))
       .select(col("i").as("node"), (-col("m.nj")).as("lbl"))
-    deg.join(best, Seq("node"), "left")
+    // localCheckpoint, not persist (r14 perf pass, same measurement as
+    // louvainTwoLevelLabels): the rollup and the coarse build each
+    // reference this frame 2-3 times; truncating here keeps AQE from
+    // re-walking the gains tree per downstream stage.
+    Rounds.checkpoint(deg.join(best, Seq("node"), "left")
       .select(col("node"), coalesce(col("lbl"), col("node")).as("lbl"),
-        col("d"))
-      // localCheckpoint, not persist (r14 perf pass, same measurement as
-      // louvainTwoLevelLabels): the rollup and the coarse build each
-      // reference this frame 2-3 times; truncating here keeps AQE from
-      // re-walking the gains tree per downstream stage.
-      .localCheckpoint()
+        col("d")))
   }
 
   /** Community rollup of a (node, lbl, d) assignment over the original
@@ -1482,25 +1449,22 @@ object Graph {
     * instead of re-joining the full edge list. */
   private def twoLevelCore(edges: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val d38 = "decimal(38,0)"
     val l1 = louvainMoveLabels(edges)
-    val le = edges
+    val le = Rounds.persist(edges
       .join(l1.select(col("node").as("a"), col("lbl").as("la")), Seq("a"))
       .join(l1.select(col("node").as("b"), col("lbl").as("lb")), Seq("b"))
       .select(least(col("la"), col("lb")).as("ca"),
         greatest(col("la"), col("lb")).as("cb"))
-      .groupBy(col("ca"), col("cb")).agg(count(lit(1)).as("w"))
-      .persist(lvl)
+      .groupBy(col("ca"), col("cb")).agg(count(lit(1)).as("w")))
     val mRow = broadcast(edges.agg(count(lit(1)).as("__m")))
     val cross = le.filter(col("ca") =!= col("cb"))
     val symW = cross.select(col("ca").as("i"), col("cb").as("j"), col("w"))
       .unionAll(cross.select(col("cb").as("i"), col("ca").as("j"), col("w")))
-    val degW = symW.select(col("i"), col("w"))
+    val degW = Rounds.persist(symW.select(col("i"), col("w"))
       .unionAll(le.filter(col("ca") === col("cb"))
         .select(col("ca").as("i"), (col("w") * 2).as("w")))
-      .groupBy(col("i").as("snode")).agg(sum(col("w")).as("d"))
-      .persist(lvl)
+      .groupBy(col("i").as("snode")).agg(sum(col("w")).as("d")))
     val gains = symW
       .join(degW.select(col("snode").as("i"), col("d").as("di")), Seq("i"))
       .join(degW.select(col("snode").as("j"), col("d").as("dj")), Seq("j"))
@@ -1516,10 +1480,9 @@ object Graph {
     // part of its own job, and louvainTwoLevel's internal-edge legs then
     // read the pinned |C|-row frame instead of re-running the coarse
     // gain chain per reference
-    val l2 = degW.select(col("snode"))
+    val l2 = Rounds.checkpoint(degW.select(col("snode"))
       .join(best, Seq("snode"), "left")
-      .select(col("snode"), coalesce(col("lbl2"), col("snode")).as("lbl2"))
-      .localCheckpoint(eager = false)
+      .select(col("snode"), coalesce(col("lbl2"), col("snode")).as("lbl2")), eager = false)
     // localCheckpoint, not persist (r14 perf pass): the rollup reads
     // this frame three times, so with a lazy persist every downstream
     // plan still carries the FULL two-level logical tree and AQE
@@ -1529,10 +1492,9 @@ object Graph {
     // took the same query to 9.1 s on the same host (the
     // leidenRefineLabels lesson applied one level down). Callers get a
     // checkpointed frame — do NOT re-checkpoint it.
-    val labels = l1
+    val labels = Rounds.checkpoint(l1
       .join(l2.select(col("snode").as("lbl"), col("lbl2")), Seq("lbl"))
-      .select(col("node"), col("lbl2").as("lbl"), col("d"))
-      .localCheckpoint()
+      .select(col("node"), col("lbl2").as("lbl"), col("d")))
     (labels, le, l2)
   }
 
@@ -1569,8 +1531,7 @@ object Graph {
     // and an UPSTREAM edge build — often itself a join+aggregate — would
     // re-run per reference (the pagerank 82s -> 3s lesson; measured here
     // 24.6 s -> mid-teens at sf0.1 on the co-purchase build).
-    val edges = edges0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = Rounds.persist(edges0)
     // localCheckpoint, not just the chain's internal persists: the
     // refinement fires MANY actions (the within restriction, each star
     // round, the final attaches) and every one re-OPTIMIZES the full
@@ -1599,7 +1560,7 @@ object Graph {
       .join(l.select(col("node").as("b"), col("lbl").as("lb")), Seq("b"))
       .filter(col("la") === col("lb"))
       .select(col("a"), col("b"))
-    val within = if (pinWithin) within0.localCheckpoint() else within0
+    val within = if (pinWithin) Rounds.checkpoint(within0) else within0
     val comp = ccTwoStarsNodes(within, maxRounds, edgesCanonical)
     val labels = l
       .join(comp.select(col("node"), col("lbl").as("__c")), Seq("node"), "left")
@@ -1627,8 +1588,7 @@ object Graph {
     * and stays green. */
   def leidenRefine(edges0: DataFrame, maxRounds: Int = 24,
       edgesCanonical: Boolean = false): DataFrame = {
-    val edges = edges0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = Rounds.persist(edges0)
     val l = louvainTwoLevelLabels(edges) // returns localCheckpoint'ed
     val (labels, within) = leidenCore(edges, l, maxRounds, pinWithin = true,
       edgesCanonical = edgesCanonical)
@@ -1670,8 +1630,7 @@ object Graph {
     * q_non_decrease). */
   def leidenQuality(edges0: DataFrame, maxRounds: Int = 24,
       edgesCanonical: Boolean = false): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = edges0.persist(lvl)
+    val edges = Rounds.persist(edges0)
     val lou = louvainTwoLevelLabels(edges) // returns localCheckpoint'ed
     def withinOf(lf: DataFrame): DataFrame = edges
       .join(lf.select(col("node").as("a"), col("lbl").as("la")), Seq("a"))
@@ -1680,16 +1639,15 @@ object Graph {
     // Each partition's within-restriction feeds BOTH its closure and its
     // l_c modularity aggregate: pin it once instead of re-running the two
     // label joins per consumer (r15 optimization, second pass).
-    val withinLou = withinOf(lou).localCheckpoint()
+    val withinLou = Rounds.checkpoint(withinOf(lou))
     // withinOf is a row-subset of `edges` (the leidenCore argument), so
     // the canonical-distinct guarantee propagates to the closure input
     val comp = ccTwoStarsNodes(withinLou.select(col("a"), col("b")),
       maxRounds, edgesCanonical)
-    val leiden = lou
+    val leiden = Rounds.checkpoint(lou
       .join(comp.select(col("node"), col("lbl").as("__c")), Seq("node"), "left")
       .select(col("node"), coalesce(col("__c"), col("node")).as("lbl"),
-        col("d"))
-      .localCheckpoint() // composition boundary (the graph_leiden lesson)
+        col("d"))) // composition boundary (the graph_leiden lesson)
     // invariant 1 over the within-REFINED edge set. THEOREM (r16
     // optimization): that edge set is the SAME (a,b) multiset as
     // withinLou, and its component closure is `comp` itself.
@@ -1739,18 +1697,16 @@ object Graph {
     }
     val q1 = qScaled(withinLou, lou, "q_scaled_louvain", "n_comm_louvain")
     val q2 = qScaled(withinLei, leiden, "q_scaled_leiden", "n_comm_leiden")
-    val out = q1.crossJoin(q2).crossJoin(broadcast(disc))
+    val out = Rounds.checkpoint(q1.crossJoin(q2).crossJoin(broadcast(disc))
       .select(col("n_comm_louvain"), col("n_comm_leiden"),
         col("n_disconnected").cast("long").as("n_disconnected"),
         (col("n_disconnected") === 0).as("all_connected"),
         col("q_scaled_louvain").cast("long").as("q_scaled_louvain"),
         col("q_scaled_leiden").cast("long").as("q_scaled_leiden"),
         (col("q_scaled_leiden") >= col("q_scaled_louvain"))
-          .as("q_non_decrease"))
-      // the result is ONE row: pin it, then free the session-lifetime
-      // edge cache (persist without unpersist leaks blocks per call)
-      .localCheckpoint()
-    edges.unpersist()
+          .as("q_non_decrease")))
+    // the result is ONE row, pinned above: the edge cache is dead
+    Rounds.free(edges)
     out
   }
 
@@ -1764,16 +1720,13 @@ object Graph {
     // for every reference — measured 82 s → 3 s at sf0.1 from these three
     // persists alone. MEMORY_AND_DISK keeps lineage (recomputable on
     // executor loss, unlike a checkpoint — the trade in the Rounds
-    // scaladoc); blocks are freed by
-    // the ContextCleaner when the plan is collected.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .persist(lvl)
-    val nodes = ed.select(col("src").as("node_id"))
-      .unionAll(ed.select(col("dst").as("node_id"))).distinct().persist(lvl)
+    // scaladoc); the query's scope frees them.
+    val ed = Rounds.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val nodes = Rounds.persist(ed.select(col("src").as("node_id"))
+      .unionAll(ed.select(col("dst").as("node_id"))).distinct())
     val n1 = broadcast(nodes.agg(count(lit(1)).cast("double").as("__n")))
-    val outdeg = ed.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("__od")).persist(lvl)
+    val outdeg = Rounds.persist(ed.groupBy(col("src"))
+      .agg(count(lit(1)).cast("double").as("__od")))
     val base = 1.0 - damping // same IEEE op as the oracle's (1 - d)
     var pr = nodes.crossJoin(n1)
       .select(col("node_id"), (lit(1.0) / col("__n")).as("pr"))
@@ -1821,15 +1774,13 @@ object Graph {
   def pagerankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iters: Int, damping: Double): DataFrame = {
     require(iters >= 1 && iters <= 10, "iters in [1,10] (plan size grows per iter)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("double").as("__w"))
-      .persist(lvl)
-    val nodes = ed.select(col("src").as("node_id"))
-      .unionAll(ed.select(col("dst").as("node_id"))).distinct().persist(lvl)
+    val ed = Rounds.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+        col(weightCol).cast("double").as("__w")))
+    val nodes = Rounds.persist(ed.select(col("src").as("node_id"))
+      .unionAll(ed.select(col("dst").as("node_id"))).distinct())
     val n1 = broadcast(nodes.agg(count(lit(1)).cast("double").as("__n")))
-    val outw = ed.groupBy(col("src"))
-      .agg(sum(col("__w")).as("__ow")).persist(lvl)
+    val outw = Rounds.persist(ed.groupBy(col("src"))
+      .agg(sum(col("__w")).as("__ow")))
     val base = 1.0 - damping
     var pr = nodes.crossJoin(n1)
       .select(col("node_id"), (lit(1.0) / col("__n")).as("pr"))
@@ -1863,24 +1814,20 @@ object Graph {
   def personalizedPagerank(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, iters: Int, damping: Double): DataFrame = {
     require(iters >= 1 && iters <= 10, "iters in [1,10] (plan size grows per iter)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .persist(lvl)
-    val nodes = ed.select(col("src").as("node_id"))
-      .unionAll(ed.select(col("dst").as("node_id"))).distinct().persist(lvl)
-    val sg = nodes
-      .join(seeds.select(col("node").as("node_id")).distinct(), Seq("node_id"))
-      .persist(lvl)
+    val ed = Rounds.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val nodes = Rounds.persist(ed.select(col("src").as("node_id"))
+      .unionAll(ed.select(col("dst").as("node_id"))).distinct())
+    val sg = Rounds.persist(nodes
+      .join(seeds.select(col("node").as("node_id")).distinct(), Seq("node_id")))
     val sn = broadcast(sg.agg(count(lit(1)).cast("double").as("__sn")))
-    val restart = nodes
+    val restart = Rounds.persist(nodes
       .join(sg.withColumn("__isSeed", lit(1)), Seq("node_id"), "left")
       .crossJoin(sn)
       .select(col("node_id"),
         when(col("__isSeed").isNotNull, lit(1.0) / col("__sn"))
-          .otherwise(lit(0.0)).as("r"))
-      .persist(lvl)
-    val outdeg = ed.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("__od")).persist(lvl)
+          .otherwise(lit(0.0)).as("r")))
+    val outdeg = Rounds.persist(ed.groupBy(col("src"))
+      .agg(count(lit(1)).cast("double").as("__od")))
     val base = 1.0 - damping
     var pr = restart.select(col("node_id"), col("r").as("pr"))
     for (_ <- 1 to iters) {
@@ -1922,15 +1869,14 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, edgesDistinct: Boolean = false): DataFrame = {
     require(iters >= 1 && iters <= 10, "iters in [1,10] (plan size grows per iter)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // edgesDistinct = the caller guarantees the (src, dst) stream is
     // already duplicate-free, so the dedup exchange+aggregate here would
     // re-shuffle the edge frame to remove nothing (r16: the graph_hits
     // site feeds an injective rename of an already-distinct pair frame).
     val ed0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ed = (if (edgesDistinct) ed0 else ed0.distinct()).persist(lvl)
-    val nodes = ed.select(col("src").as("node_id"))
-      .unionAll(ed.select(col("dst").as("node_id"))).distinct().persist(lvl)
+    val ed = Rounds.persist(if (edgesDistinct) ed0 else ed0.distinct())
+    val nodes = Rounds.persist(ed.select(col("src").as("node_id"))
+      .unionAll(ed.select(col("dst").as("node_id"))).distinct())
     var hub = nodes.select(col("node_id"), lit(1.0).as("hub"))
     var auth = nodes.select(col("node_id"), lit(1.0).as("auth"))
     // localCheckpoint each half-round (the kCorePeel pattern): with

@@ -531,12 +531,11 @@ object Multimodal {
     val phash = (1 until 16).map(k =>
       when(q(k) > col("__med"), lit(1L << (k - 1)))
         .otherwise(lit(0L))).reduce(_ + _)
-    withF.withColumn("__med", med)
-      .select(col("media_id"), phash.as("phash"), col("__f0").as("dc"))
-      // materialize: the frame feeds both the group aggregate and the
-      // join back — without this the payload scan + 16 DCT sums run
-      // twice (plan audit: 4 scans)
-      .localCheckpoint()
+    // materialize: the frame feeds both the group aggregate and the
+    // join back — without this the payload scan + 16 DCT sums run
+    // twice (plan audit: 4 scans)
+    Rounds.checkpoint(withF.withColumn("__med", med)
+      .select(col("media_id"), phash.as("phash"), col("__f0").as("dc")))
   }
 
   /** Constellation (landmark) audio fingerprint matching — the Wang,
@@ -625,7 +624,8 @@ object Multimodal {
     // same strict 4-neighborhood rule, bit-equal peaks by construction.
     val byCell = Window.partitionBy(col("media_id"))
       .orderBy(col("t"), col("b"))
-    val peaks = cells.select(col("media_id"), col("t"), col("b"), col("e"),
+    // materialize: the frame feeds both sides of the landmark join
+    val peaks = Rounds.checkpoint(cells.select(col("media_id"), col("t"), col("b"), col("e"),
         lag(col("e"), bands).over(byCell).as("__tp"),
         lead(col("e"), bands).over(byCell).as("__tn"),
         lag(col("e"), 1).over(byCell).as("__bp"),
@@ -635,21 +635,18 @@ object Multimodal {
         col("e") > coalesce(when(col("b") > 0, col("__bp")), lit(-1L)) &&
         col("e") > coalesce(when(col("b") < bands - 1, col("__bn")),
           lit(-1L)))
-      .select(col("media_id"), col("t"), col("b"), col("e"))
-      // materialize: the frame feeds both sides of the landmark join
-      .localCheckpoint()
+      .select(col("media_id"), col("t"), col("b"), col("e")))
     val anchors = peaks.select(col("media_id"), col("t"), col("b"),
       col("e"), explode(sequence(lit(1L), lit(maxDt.toLong))).as("dt"))
     val targets = peaks.select(col("media_id").as("__m2"),
       col("t").as("__t2"), col("b").as("__b2"), col("e").as("__e2"))
-    val lm = anchors.join(targets,
+    val lm = Rounds.checkpoint(anchors.join(targets,
         col("media_id") === col("__m2") &&
           col("t") + col("dt") === col("__t2"))
       .select(col("media_id"), col("t").as("t1"),
         (((((col("b") * 8 + col("__b2")) * 8) + col("dt")) * 8 +
           pmod(col("e"), lit(8L))) * 8 + pmod(col("__e2"), lit(8L)))
-          .as("lhash"))
-      .localCheckpoint() // feeds the hot-hash count and both match sides
+          .as("lhash"))) // feeds the hot-hash count and both match sides
     val hot = lm.groupBy(col("lhash"))
       .agg(countDistinct(col("media_id")).as("__nm"))
       .filter(col("__nm") > maxMediaPerHash).select(col("lhash"))
@@ -699,7 +696,7 @@ object Multimodal {
     require(hammingD >= 1 && hammingD <= 7, "hammingD in [1,7]")
     val nChunks = hammingD + 1
     val hashed = hashed0.select(col("media_id"), col("phash"))
-    val hs = hashed.select(col("phash")).distinct().localCheckpoint()
+    val hs = Rounds.checkpoint(hashed.select(col("phash")).distinct())
     // Partition the 15 bit positions into nChunks contiguous ranges
     // (widths differ by ≤ 1 — any partition satisfies the pigeonhole).
     val bounds = (0 to nChunks).map(i => i * 15 / nChunks)

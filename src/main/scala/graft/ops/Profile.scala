@@ -211,9 +211,8 @@ object Profile {
     * everything after the first aggregate is cells-scale.
     * Returns (a, b, o, e, contrib, chi2_total, dof). */
   def chi2(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df.groupBy(col(aCol).as("a"), col(bCol).as("b"))
-      .agg(count(lit(1)).as("o"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cells = Rounds.persist(df.groupBy(col(aCol).as("a"), col(bCol).as("b"))
+      .agg(count(lit(1)).as("o")))
     val rowT = cells.groupBy(col("a")).agg(sum(col("o")).as("ra"))
     val colT = cells.groupBy(col("b")).agg(sum(col("o")).as("cb"))
     val tot = broadcast(cells.agg(sum(col("o")).as("n"),
@@ -805,10 +804,9 @@ object Profile {
   def decileLift(df: DataFrame, keyCol: String, valueCol: Column,
       n: Int = 10): DataFrame = {
     require(n >= 2 && n <= 1000, "n in [2,1000]")
-    val v = df.select(col(keyCol).as("__k"),
+    val v = Rounds.persist(df.select(col(keyCol).as("__k"),
       round(valueCol * 100).cast("long").as("__c"))
-      .withColumn("__negc", -col("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__negc", -col("__c")))
     val ranked = TwoLevelRank.rank(v, Nil, Seq("__negc"),
       expr("__k div 4096"), Seq("__k"), "__i")
     val tot = v.agg(count(lit(1)).as("__n"),

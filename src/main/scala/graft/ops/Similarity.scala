@@ -174,18 +174,16 @@ object Similarity {
     // embeddings): cand and pairs both derive from it, and without the
     // checkpoint HERE each of their own checkpoints re-executes the
     // corpus-sized retrieval scan
-    val ce = emb.join(broadcast(top), col("vec_id") === col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("sim"), col("__e"))
-      .localCheckpoint()
+    val ce = Rounds.checkpoint(emb.join(broadcast(top), col("vec_id") === col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("sim"), col("__e")))
     val cand = ce.select(col("query_id"), col("neighbor_id"), col("sim"))
-    val pairs = ce.select(col("query_id"), col("neighbor_id"), col("__e"))
+    val pairs = Rounds.checkpoint(ce.select(col("query_id"), col("neighbor_id"), col("__e"))
       .as("a")
       .join(ce.select(col("query_id").as("__qb"),
         col("neighbor_id").as("oid"), col("__e").as("__eb")).as("b"),
         col("query_id") === col("__qb") && col("neighbor_id") =!= col("oid"))
       .select(col("query_id"), col("neighbor_id"), col("oid"),
-        cosine(col("__e"), col("__eb")).as("psim"))
-      .localCheckpoint()
+        cosine(col("__e"), col("__eb")).as("psim")))
     val mmr = (lit(lambda) * col("sim") -
       lit(mu) * col("redundancy")).as("mmr")
     val byQ = Window.partitionBy(col("query_id"))
@@ -282,11 +280,10 @@ object Similarity {
     // sentences and excluding them would silently shift neighborhood
     // averages if the op is ever run over overlapping id spaces
     // (ADVICE r13 #1).
-    val pairs = cand.crossJoin(broadcast(qry))
+    val pairs = Rounds.checkpoint(cand.crossJoin(broadcast(qry))
       .select(col("src_id"), col("tgt_id"),
         cosine(col("__tv"), col("__sv")).as("sim"))
-      .filter(col("sim").isNotNull)
-      .localCheckpoint()
+      .filter(col("sim").isNotNull))
     val topk = udaf(new TopKAggregator(k))
     val fwd = pairs.groupBy(col("src_id"))
       .agg(topk(col("tgt_id"), col("sim")).as("top"))
@@ -688,15 +685,14 @@ object Similarity {
     * (node_id, neighbor_id, rank, sim). */
   def nnDescent(vectors: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 5, "rounds in [1,5] (jobs grow per round)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Dedupe-aware top-k (r15 perf pass): candidate streams here repeat
     // ids only with bit-identical scores (same deterministic cosine), so
     // folding the dedupe into the k-bounded buffer replaces the former
     // groupBy(node, cand).max pre-pass — one candidate-sized exchange
     // per round (plus one at init) retired with identical output.
     val topk = udaf(new TopKDistinctAggregator(k))
-    val emb = vectors.select(col("vec_id").cast("long").as("node"),
-      col("embedding").cast("array<double>").as("v")).persist(lvl)
+    val emb = Rounds.persist(vectors.select(col("vec_id").cast("long").as("node"),
+      col("embedding").cast("array<double>").as("v")))
     // aggregated graph shape: (node, top: array<struct<id,score>>), k-bounded
     def topkAgg(scored: DataFrame): DataFrame =
       scored.groupBy(col("node")).agg(topk(col("cand"), col("sim")).as("top"))
@@ -731,8 +727,8 @@ object Similarity {
       // reverse-cap aggregation (its own exchange) from the checkpoint
       // (r15 perf pass; the frame is the already-k-bounded edge list,
       // N·2k rows, so caching it is strictly cheaper than re-aggregating)
-      val und = cur.select(col("node"), col("cand"))
-        .unionAll(rev.select(col("node"), col("cand"))).persist(lvl)
+      val und = Rounds.persist(cur.select(col("node"), col("cand"))
+        .unionAll(rev.select(col("node"), col("cand"))))
       // distinct() is KEPT deliberately (r15, measured): retiring it in
       // favor of aggregator-side dedupe alone read 2.8 s faster at sf0.1
       // (pure exchange overhead at fixture scale) but the candidate
@@ -755,8 +751,9 @@ object Similarity {
       val next = Rounds.checkpoint(topkAgg(cur.unionAll(scored)))
       Rounds.free(knn)
       knn = next
-      und.unpersist(blocking = false)
+      Rounds.free(und)
     }
+    Rounds.free(emb) // the last round has run; the result reads only knn
     knn.select(col("node").as("node_id"), posexplode(col("top")))
       .select(col("node_id"), col("col.id").as("neighbor_id"),
         (col("pos") + 1).as("rank"), col("col.score").as("sim"))
@@ -786,7 +783,6 @@ object Similarity {
   def pqTopK(candidates: DataFrame, queries: DataFrame, k: Int,
       nSub: Int = 4, subDim: Int = 16, codebook: Int = 16,
       iters: Int = 1): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def quant(df: DataFrame): DataFrame =
       df.select(col("vec_id"),
         graft.functions.vectornative
@@ -797,7 +793,7 @@ object Similarity {
         .as(Seq("sub", "sqv")))
     def d2(a: Column, b: Column): Column =
       graft.functions.native.squared_distance(a, b)
-    val subs = subSplit(quant(candidates)).persist(lvl)
+    val subs = Rounds.persist(subSplit(quant(candidates)))
     val init = subs.filter(col("vec_id") < codebook)
       .select(col("sub"), col("vec_id").as("cid"), col("sqv").as("cv"))
     def assign(cents: DataFrame): DataFrame =
@@ -817,7 +813,7 @@ object Similarity {
           x => x("cval")).as("cv"))
     // codebooks feed both the corpus encode and the query distance
     // table — persist the nSub·codebook-row frame
-    val cb = (1 to iters).foldLeft(init)((c, _) => update(assign(c))).persist(lvl)
+    val cb = Rounds.persist((1 to iters).foldLeft(init)((c, _) => update(assign(c))))
     val codes = assign(cb).select(col("vec_id"), col("sub"), col("cid"))
     val qsubs = subSplit(quant(queries))
       .select(col("vec_id").as("query_id"), col("sub"), col("sqv"))
@@ -856,14 +852,13 @@ object Similarity {
       nCells: Int = 4, nProbe: Int = 2, nSub: Int = 4, subDim: Int = 16,
       codebook: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def quant(df: DataFrame): DataFrame =
       df.select(col("vec_id"),
         graft.functions.vectornative
           .quantize_int8(col("embedding").cast("array<double>")).as("qv"))
     def d2(a: Column, b: Column): Column =
       graft.functions.native.squared_distance(a, b)
-    val base = quant(candidates).persist(lvl)
+    val base = Rounds.persist(quant(candidates))
     // coarse cells: 1-round Lloyd over the full quantized vector
     val cellInit = base.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("ccid"), col("qv").as("ccv"))
@@ -876,15 +871,14 @@ object Similarity {
         .groupBy(col("vec_id"), col("qv"))
         .agg(min(struct(col("cdist"), col("ccid"))).as("m"))
         .select(col("vec_id"), col("qv"), col("m.ccid").as("cell"))
-    val cellCb = cellAssign(cellInit)
+    val cellCb = Rounds.persist(cellAssign(cellInit)
       .select(col("cell"), posexplode(col("qv")))
       .groupBy(col("cell"), col("pos"))
       .agg((round(avg(col("col"))) + lit(0.0)).as("cval"))
       .groupBy(col("cell"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cval")))),
         x => x("cval")).as("ccv"))
-      .select(col("cell").as("ccid"), col("ccv"))
-      .persist(lvl)
+      .select(col("cell").as("ccid"), col("ccv")))
     val cellOf = cellAssign(cellCb).select(col("vec_id"), col("cell"))
     val route = cellDists(quant(queries), cellCb)
       .withColumn("rk", row_number().over(Window.partitionBy(col("vec_id"))
@@ -896,7 +890,7 @@ object Similarity {
       df.select(col("vec_id"), posexplode(array(
           (0 until nSub).map(s => slice(col("qv"), s * subDim + 1, subDim)): _*))
         .as(Seq("sub", "sqv")))
-    val subs = subSplit(base).persist(lvl)
+    val subs = Rounds.persist(subSplit(base))
     val pqInit = subs.filter(col("vec_id") < codebook)
       .select(col("sub"), col("vec_id").as("cid"), col("sqv").as("cv"))
     def pqAssign(cents: DataFrame): DataFrame =
@@ -906,14 +900,13 @@ object Similarity {
         .groupBy(col("vec_id"), col("sub"), col("sqv"))
         .agg(min(struct(col("dist"), col("cid"))).as("m"))
         .select(col("vec_id"), col("sub"), col("sqv"), col("m.cid").as("cid"))
-    val pqCb = pqAssign(pqInit)
+    val pqCb = Rounds.persist(pqAssign(pqInit)
       .select(col("sub"), col("cid"), posexplode(col("sqv")))
       .groupBy(col("sub"), col("cid"), col("pos"))
       .agg((round(avg(col("col"))) + lit(0.0)).as("cval"))
       .groupBy(col("sub"), col("cid"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cval")))),
-        x => x("cval")).as("cv"))
-      .persist(lvl)
+        x => x("cval")).as("cv")))
     val codes = pqAssign(pqCb).select(col("vec_id"), col("sub"), col("cid"))
     val dtable = subSplit(quant(queries))
       .select(col("vec_id").as("query_id"), col("sub"), col("sqv"))
@@ -982,10 +975,9 @@ object Similarity {
 
   private def kmeansCore(vecs: DataFrame, k: Int,
       iters: Int): (DataFrame, DataFrame) = {
-    val base = vecs.select(col("vec_id"),
+    val base = Rounds.persist(vecs.select(col("vec_id"),
         graft.functions.vectornative
-          .quantize_int8(col("embedding").cast("array<double>")).as("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .quantize_int8(col("embedding").cast("array<double>")).as("qv")))
     val initCentroids = base.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("qv").as("cv"))
 
@@ -1020,8 +1012,7 @@ object Similarity {
     // referenced by the final assignment AND the output join — persist
     // the K-row frame so the iteration chain executes once
     val finalCentroids =
-      (1 to iters).foldLeft(initCentroids)((c, _) => update(assign(c)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Rounds.persist((1 to iters).foldLeft(initCentroids)((c, _) => update(assign(c))))
     (assign(finalCentroids), finalCentroids)
   }
 
@@ -1049,30 +1040,26 @@ object Similarity {
     * 100× rows; the gate pins the 10⁶ grid at test SFs. */
   def pcaPowerQuantized(vecs: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 6, "iters in [1,6]")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val q = vecs.select(col("vec_id"),
       graft.functions.vectornative
         .quantize_int8(col("embedding").cast("array<double>")).as("qv"))
-    val g = q.select(col("qv"), posexplode(col("qv")))
+    val g = Rounds.persist(q.select(col("qv"), posexplode(col("qv")))
       .select(col("qv"), col("pos").as("i"), col("col").as("xi"))
       .select(col("i"), col("xi"), posexplode(col("qv")))
       .select(col("i"), col("pos").as("j"), (col("xi") * col("col")).as("p"))
-      .groupBy(col("i"), col("j")).agg(sum(col("p")).as("g"))
-      .persist(lvl)
+      .groupBy(col("i"), col("j")).agg(sum(col("p")).as("g")))
     val v0 = g.select(col("i").as("j")).distinct()
       .select(col("j"), lit(1000000.0).as("v"))
     val vFin = (1 to iters).foldLeft(v0) { (v, _) =>
-      val w = g.join(v, Seq("j"))
-        .groupBy(col("i")).agg(sum(col("g") * col("v")).as("w"))
-        .persist(lvl)
+      val w = Rounds.persist(g.join(v, Seq("j"))
+        .groupBy(col("i")).agg(sum(col("g") * col("v")).as("w")))
       val mx = w.agg(max(abs(col("w"))).as("mx"))
-      w.crossJoin(broadcast(mx))
+      Rounds.persist(w.crossJoin(broadcast(mx))
         .select(col("i").as("j"),
           // mx = 0 (an all-zero corpus) would otherwise yield NaN and
           // poison every later round silently
           when(col("mx") > 0, round(col("w") / col("mx") * 1000000.0, 0))
-            .otherwise(lit(0.0)).as("v"))
-        .persist(lvl)
+            .otherwise(lit(0.0)).as("v")))
     }
     val nrm = vFin.agg(sum(col("v") * col("v")).as("ss"))
     vFin.crossJoin(broadcast(nrm))
@@ -1141,11 +1128,9 @@ object Similarity {
     * (sel_order, center_id, picked_dist, radius, sum_mind, n_points). */
   def kCenterQuantized(vecs: DataFrame, k: Int): DataFrame = {
     require(k >= 2 && k <= 16, "k in [2,16] (one unrolled round per center)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val base = vecs.select(col("vec_id"),
+    val base = Rounds.persist(vecs.select(col("vec_id"),
         graft.functions.vectornative
-          .quantize_int8(col("embedding").cast("array<double>")).as("qv"))
-      .persist(lvl)
+          .quantize_int8(col("embedding").cast("array<double>")).as("qv")))
     def d2(a: Column, b: Column): Column =
       graft.functions.native.squared_distance(a, b)
     // seed = lowest id; vec_id is unique so the struct-min never
@@ -1163,12 +1148,11 @@ object Similarity {
       .select(col("vec_id"), col("qv"), d2(col("qv"), col("cv")).as("mind")))
     for (r <- 2 to k) {
       // farthest-first argmax: highest mind, ties → lowest vec_id
-      val next = cur.groupBy()
+      val next = Rounds.checkpoint(cur.groupBy()
         .agg(max(struct(col("mind"), (-col("vec_id")).as("ni"),
           col("qv"))).as("m"))
         .select((-col("m.ni")).as("cid"), col("m.qv").as("cv"),
-          col("m.mind").as("picked_dist"))
-        .localCheckpoint()
+          col("m.mind").as("picked_dist")))
       outs += next.select(lit(r.toLong).as("sel_order"),
         col("cid").as("center_id"),
         col("picked_dist").cast("long").as("picked_dist"))
@@ -1310,10 +1294,8 @@ object Similarity {
       maxRounds: Int = 24): DataFrame = {
     require(eps >= 1, "eps >= 1")
     require(minPts >= 1, "minPts >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val p = points.select(col("id"),
-      col("x").cast("long").as("x"), col("y").cast("long").as("y"))
-      .persist(lvl)
+    val p = Rounds.persist(points.select(col("id"),
+      col("x").cast("long").as("x"), col("y").cast("long").as("y")))
     def cell(c: Column): Column = (c - pmod(c, lit(eps))) / lit(eps)
     val offs = array((-1L to 1L).map(lit): _*)
     val probes = p
@@ -1329,15 +1311,13 @@ object Similarity {
     // probes it iff the cells differ by <= 1 per axis, which any pair
     // within eps satisfies; the self pair (dx = dy = 0) stays IN so the
     // neighbor count includes the point itself (the standard convention)
-    val pairs = probes.join(home, Seq("cx", "cy"))
+    val pairs = Rounds.persist(probes.join(home, Seq("cx", "cy"))
       .filter((col("xa") - col("xb")) * (col("xa") - col("xb")) +
         (col("ya") - col("yb")) * (col("ya") - col("yb")) <= lit(eps * eps))
-      .select(col("ia"), col("ib"))
-      .persist(lvl)
-    val core = pairs.groupBy(col("ia").as("id"))
+      .select(col("ia"), col("ib")))
+    val core = Rounds.persist(pairs.groupBy(col("ia").as("id"))
       .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") >= minPts).select(col("id"))
-      .persist(lvl)
+      .filter(col("__n") >= minPts).select(col("id")))
     val ccEdges = pairs.filter(col("ia") < col("ib"))
       .join(core.select(col("id").as("ia")), Seq("ia"), "left_semi")
       .join(core.select(col("id").as("ib")), Seq("ib"), "left_semi")
@@ -1348,10 +1328,9 @@ object Similarity {
     // canonicalization pass (r16)
     val comp = Graph.ccTwoStarsNodes(ccEdges, maxRounds,
       edgesCanonical = true)
-    val coreLbl = core
+    val coreLbl = Rounds.persist(core
       .join(comp.select(col("node").as("id"), col("lbl")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster"))
-      .persist(lvl)
+      .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster")))
     val border = pairs.filter(col("ia") =!= col("ib"))
       .join(coreLbl.select(col("id").as("ib"), col("cluster")), Seq("ib"))
       .join(core.select(col("id").as("ia")), Seq("ia"), "left_anti")

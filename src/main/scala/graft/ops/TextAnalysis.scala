@@ -191,12 +191,11 @@ object TextAnalysis {
     // forfeits the map-side combine (raw token rows shuffle), which the
     // saved corpus-sized window exchange outweighs here (0.90 → 0.61 s
     // at sf0.1) — see tokenEntropy for the counter-case.
-    val tf = df.select(col(idCol).as("doc_id"),
+    val tf = Rounds.persist(df.select(col(idCol).as("doc_id"),
         explode(tokens(col(textCol))).as("term"))
       .repartition(col("doc_id"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("tf").desc, col("term"))
@@ -231,12 +230,11 @@ object TextAnalysis {
     // tripling the operator's dominant cost (the same hazard
     // Graph.pagerank persists against; driver r5 measured text_bm25 at
     // 4.6× text_term_stats over the same statistics). MEMORY_AND_DISK
-    // keeps lineage; blocks are freed by the ContextCleaner.
-    val tf = df.select(col(idCol).as("doc_id"),
+    // keeps lineage; the query's scope frees the blocks (Rounds).
+    val tf = Rounds.persist(df.select(col(idCol).as("doc_id"),
         explode(tokens(col(textCol))).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // N and avgdl straight off the collapsed tf frame: sum(tf) and
     // countDistinct(doc) are exact integers, so the constants are
@@ -311,9 +309,8 @@ object TextAnalysis {
       textCol: String, topK: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(topK >= 1, "topK >= 1")
-    val dt = df.select(col(idCol).as("doc_id"),
-        explode(array_distinct(tokens(col(textCol)))).as("term"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dt = Rounds.persist(df.select(col(idCol).as("doc_id"),
+        explode(array_distinct(tokens(col(textCol)))).as("term")))
     val corpus = dt.agg(countDistinct(col("doc_id")).cast("double").as("n_docs"))
     val dfreq = dt.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val idfScaled = round(log(lit(1.0) +
@@ -456,14 +453,13 @@ object TextAnalysis {
   def collocationLlr(df: DataFrame, textCol: String = "text"): DataFrame = {
     val toks = col("__toks")
     val pairs = bigramPairs(toks)
-    val bi = df
+    val bi = Rounds.persist(df
       .select(tokens(col(textCol)).as("__toks"))
       .filter(size(toks) >= 2)
       .select(explode(pairs).as("p"))
       .select(col("p.w1"), col("p.w2"))
       .groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("c")))
     val fwd = bi.groupBy(col("w1")).agg(sum(col("c")).as("cw1"))
     val bwd = bi.groupBy(col("w2")).agg(sum(col("c")).as("cw2"))
     val tot = bi.agg(sum(col("c")).as("n"))
@@ -498,14 +494,13 @@ object TextAnalysis {
       idCol: String = "doc_id"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    val tf = df
+    val tf = Rounds.persist(df
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
       // doc-only partitioning: valid for the (doc, term) group, and when
       // the vocabulary-sized df join broadcasts, the ranking window
       // inherits it and skips its own corpus re-shuffle
       .repartition(col(idCol))
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = tf.agg(countDistinct(col(idCol)).as("n_docs"))
     val w = Window.partitionBy(col(idCol))
@@ -540,14 +535,13 @@ object TextAnalysis {
       s"absolute discount must be in (0,1), got $discount")
     val toks = col("__toks")
     val pairs = bigramPairs(toks)
-    val bi = df
+    val bi = Rounds.persist(df
       .select(tokens(col(textCol)).as("__toks"))
       .filter(size(toks) >= 2)
       .select(explode(pairs).as("p"))
       .select(col("p.w1"), col("p.w2"))
       .groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("c")))
     val fwd = bi.groupBy(col("w1"))
       .agg(sum(col("c")).as("cw1"), count(lit(1)).as("n1_fwd"))
     val bwd = bi.groupBy(col("w2")).agg(count(lit(1)).as("n1_bwd"))
@@ -608,7 +602,6 @@ object TextAnalysis {
     * [[tokenEntropy]] precedent). */
   def perplexity(df: DataFrame, textCol: String = "text",
       alpha: Double = 0.5): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val toks = col("__toks")
     val pairs = bigramPairs(toks)
     // Partition the per-doc bigram counts by doc_id ALONE (a valid
@@ -616,14 +609,13 @@ object TextAnalysis {
     // partition ⇒ same triple co-located), so the FINAL per-document
     // logprob aggregate reuses this exchange instead of re-shuffling
     // the corpus a second time when the model join broadcasts.
-    val dbc = df
+    val dbc = Rounds.persist(df
       .select(col("doc_id"), tokens(col(textCol)).as("__toks"))
       .filter(size(toks) >= 2)
       .select(col("doc_id"), explode(pairs).as("p"))
       .repartition(col("doc_id"))
       .groupBy(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .agg(count(lit(1)).as("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("n")))
     // Head totals via hash-agg + a vocab-sized equi-join on w1 — both
     // frames here are bounded by the bigram vocabulary, and hash
     // aggregation beats the sort a window over w1 would force.
@@ -674,10 +666,9 @@ object TextAnalysis {
     // referenced by the bucket-bounds chain AND the final labeling join:
     // persist, or the whole perplexity corpus pass runs twice (the bm25
     // lesson; before/after in BASELINE.md)
-    val scored = perplexity(df, textCol, alpha)
+    val scored = Rounds.persist(perplexity(df, textCol, alpha)
       .join(df.select(col("doc_id"), col(langCol)), Seq("doc_id"))
-      .withColumn("__bin", floor(col("ppl") * 8).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__bin", floor(col("ppl") * 8).cast("long")))
     val bins = scored.groupBy(col(langCol), col("__bin"))
       .agg(count(lit(1)).as("__c"))
     val w = Window.partitionBy(col(langCol)).orderBy(col("__bin"))
@@ -833,25 +824,23 @@ object TextAnalysis {
   private def bpeCore(toks0: DataFrame,
       iterations: Int): (Seq[DataFrame], DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
     val byWord = Window.partitionBy(col("word")).orderBy(col("pos"))
-    var toks = toks0.persist(StorageLevel.MEMORY_AND_DISK)
+    var toks = Rounds.persist(toks0)
     val outs = Seq.newBuilder[DataFrame]
     for (it <- 1 to iterations) {
-      val m = toks
+      // EAGER localCheckpoint (1 row): the round's merge table must
+      // not keep a lineage reference to this round's toks — those
+      // blocks are freed next round, and a lazily-persisted m whose
+      // cache partition is later lost would recompute into a freed,
+      // lineage-truncated checkpoint and fail irrecoverably when
+      // bpeMerges finally evaluates `outs`.
+      val m = Rounds.checkpoint(toks
         .withColumn("b", lead(col("tok"), 1).over(byWord))
         .filter(col("b").isNotNull && col("tok") =!= col("b"))
         .groupBy(col("tok").as("a"), col("b"))
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
-        .select(col("a").as("ma"), col("b").as("mb"), col("cnt"))
-        // EAGER localCheckpoint (1 row): the round's merge table must
-        // not keep a lineage reference to this round's toks — those
-        // blocks are freed next round, and a lazily-persisted m whose
-        // cache partition is later lost would recompute into a freed,
-        // lineage-truncated checkpoint and fail irrecoverably when
-        // bpeMerges finally evaluates `outs`.
-        .localCheckpoint()
+        .select(col("a").as("ma"), col("b").as("mb"), col("cnt")))
       outs += m.select(lit(it.toLong).as("iter"),
         concat(col("ma"), lit(" "), col("mb")).as("pair"), col("cnt"))
       val sel = toks.crossJoin(broadcast(m))
@@ -908,11 +897,9 @@ object TextAnalysis {
   def maxMatchTokenize(docs: DataFrame, textCol: String = "text",
       topWords: Int = 24, topGrams: Int = 16, gramLen: Int = 4,
       maxTokLen: Int = 12, rounds: Int = 16): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val wf = docs.select(explode(tokens(col(textCol))).as("word"))
+    val wf = Rounds.persist(docs.select(explode(tokens(col(textCol))).as("word"))
       .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .persist(lvl)
+      .groupBy(col("word")).agg(count(lit(1)).as("freq")))
     val wtop = wf.orderBy(col("freq").desc, col("word")).limit(topWords)
       .select(col("word").as("tok"))
     val gtop = wf.filter(length(col("word")) >= gramLen)
@@ -937,15 +924,14 @@ object TextAnalysis {
           least(lit(maxTokLen), length(col("word")) - col("pos")))).as("tl"))
       .select(col("word"), col("pos"), col("tl"),
         col("word").substr(col("pos") + 1, col("tl")).as("sub"))
-    val bm = cand.join(broadcast(vocab), col("sub") === col("tok"))
+    val bm = Rounds.persist(cand.join(broadcast(vocab), col("sub") === col("tok"))
       .groupBy(col("word"), col("pos"))
       .agg(max(struct(col("tl"), col("tok"))).as("m"))
       .select(col("word"), col("pos"), col("m.tok").as("tok"),
-        col("m.tl").as("tl"))
-      .persist(lvl)
+        col("m.tl").as("tl")))
     // the greedy walk: one state row per not-yet-finished word
-    var st = wf.select(col("word"), length(col("word")).as("len"),
-      lit(0).as("pos")).localCheckpoint()
+    var st = Rounds.checkpoint(wf.select(col("word"), length(col("word")).as("len"),
+      lit(0).as("pos")))
     val reached = Seq.newBuilder[DataFrame]
     // early exit once every word is fully consumed: emitted tokens are
     // identical (later rounds of an empty state add nothing), matching
@@ -953,10 +939,9 @@ object TextAnalysis {
     var r = 0
     while (r < rounds && !st.isEmpty) {
       reached += st
-      st = st.join(bm, Seq("word", "pos"))
+      st = Rounds.checkpoint(st.join(bm, Seq("word", "pos"))
         .filter(col("pos") + col("tl") < col("len"))
-        .select(col("word"), col("len"), (col("pos") + col("tl")).as("pos"))
-        .localCheckpoint()
+        .select(col("word"), col("len"), (col("pos") + col("tl")).as("pos")))
       r += 1
     }
     reached.result().reduce(_.unionAll(_))
@@ -1026,12 +1011,10 @@ object TextAnalysis {
   def unigramWordPaths(docs: DataFrame, textCol: String = "text",
       maxTokLen: Int = 6, topSubs: Int = 24, rounds: Int = 8): DataFrame = {
     require(rounds >= 1 && rounds <= 24, "rounds in [1,24] (jobs grow per round)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sep = "\u001f"
-    val wf = docs.select(explode(tokens(col(textCol))).as("word"))
+    val wf = Rounds.persist(docs.select(explode(tokens(col(textCol))).as("word"))
       .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .persist(lvl)
+      .groupBy(col("word")).agg(count(lit(1)).as("freq")))
     // candidate pieces: all chars + top multi-char substrings by weight
     val chars = wf
       .select(col("word"), col("freq"),
@@ -1047,19 +1030,21 @@ object TextAnalysis {
       .select(col("word").substr(col("i"), col("l")).as("tok"), col("freq"))
       .groupBy(col("tok")).agg(sum(col("freq")).as("sfreq"))
       .orderBy(col("sfreq").desc, col("tok")).limit(topSubs)
-    val vocab0 = chars.unionAll(subs)
-      .persist(lvl)
+    val vocab0 = Rounds.persist(chars.unionAll(subs))
     // all (word, prefix-consumed, piece) match positions — lp-independent,
     // shared by both Viterbi passes
-    val cand = wf.select(col("word"),
+    val cand = Rounds.persist(wf.select(col("word"),
         explode(sequence(lit(0), length(col("word")) - 1)).as("fpos"))
       .select(col("word"), col("fpos"),
         explode(sequence(lit(1),
           least(lit(maxTokLen), length(col("word")) - col("fpos")))).as("tl"))
       .select(col("word"), col("fpos"), (col("fpos") + col("tl")).as("tpos"),
-        col("word").substr(col("fpos") + 1, col("tl")).as("sub"))
-      .persist(lvl)
-    def viterbi(lp: DataFrame): DataFrame = {
+        col("word").substr(col("fpos") + 1, col("tl")).as("sub")))
+    // pinned helpers the result does not read (it reads wf and the second
+    // pass's final state), freed once the second pass has run
+    val spent = scala.collection.mutable.ArrayBuffer(vocab0, cand)
+    // one Viterbi pass under `lp`: (segmentation, final state)
+    def viterbi(lp: DataFrame): (DataFrame, DataFrame) = {
       // (r16 receipt: e as localCheckpoint instead of persist — the
       // bpeLoop lineage-truncation move, motivated by Prof's 3.3-7.1 s
       // driver gap on text_unigram_encode — was tried and measured FLAT
@@ -1068,10 +1053,10 @@ object TextAnalysis {
       // re-planned tree is mostly leaves; the gap is per-action
       // analysis/AQE overhead the truncation cannot remove. persist
       // stays.)
-      val e = cand.join(broadcast(lp), col("sub") === col("tok"))
+      val e = Rounds.persist(cand.join(broadcast(lp), col("sub") === col("tok"))
         .select(col("word"), col("fpos").as("pos"), col("tpos"),
-          col("tok"), col("lp"))
-        .persist(lvl)
+          col("tok"), col("lp")))
+      spent += e
       var st = Rounds.checkpoint(wf.select(col("word"), lit(0).as("pos"),
         lit(0.0).as("score"), lit("").as("path")))
       // (r15 optimization receipt: a fixpoint EARLY EXIT — lazy
@@ -1113,24 +1098,26 @@ object TextAnalysis {
           "— raise `rounds` toward the maximum word length (every piece " +
           "consumes at least one character, so rounds >= max word length " +
           "always suffices)")
-      segged
+      (segged, st)
     }
     val t0 = broadcast(vocab0.agg(sum(col("sfreq")).as("tt")))
     val lp0 = vocab0.crossJoin(t0)
       .select(col("tok"),
         (log(col("sfreq").cast("double")) - log(col("tt").cast("double"))).as("lp"))
     // E-step usage from the first pass; M-step Laplace re-estimate
-    val usage = viterbi(lp0)
+    val (segged0, st0) = viterbi(lp0)
+    val usage = segged0
       .select(col("freq"), explode(split(col("path"), sep)).as("tok"))
       .groupBy(col("tok")).agg(sum(col("freq")).as("u"))
-    val v1 = vocab0.join(usage, Seq("tok"), "left")
-      .select(col("tok"), (coalesce(col("u"), lit(0L)) + 1L).as("uf"))
-      .persist(lvl)
+    val v1 = Rounds.persist(vocab0.join(usage, Seq("tok"), "left")
+      .select(col("tok"), (coalesce(col("u"), lit(0L)) + 1L).as("uf")))
     val t1 = broadcast(v1.agg(sum(col("uf")).as("tt")))
     val lp1 = v1.crossJoin(t1)
       .select(col("tok"),
         (log(col("uf").cast("double")) - log(col("tt").cast("double"))).as("lp"))
-    viterbi(lp1)
+    val (out, _) = viterbi(lp1)
+    (spent ++ Seq(st0, v1)).foreach(Rounds.free)
+    out
   }
 
   /** Hashed-feature linear quality classifier — the feature-hashing trick
@@ -1162,8 +1149,7 @@ object TextAnalysis {
       minPairN: Long = 20): DataFrame = {
     val toks = col("__toks")
     val pairs = bigramPairs(toks)
-    val tokArr = df.select(tokens(col(textCol)).as("__toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tokArr = Rounds.persist(df.select(tokens(col(textCol)).as("__toks")))
     val px = tokArr.filter(size(toks) >= 2)
       .select(explode(pairs).as("p"))
       .select(col("p.w1"), col("p.w2"))

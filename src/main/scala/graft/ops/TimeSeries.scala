@@ -480,12 +480,11 @@ object TimeSeries {
     * only corpus-sized stage, materialized at the boundary. */
   private def collapse(df: DataFrame, keyCol: String, tsCol: String,
       bucketSec: Long): DataFrame =
-    df.select(col(keyCol),
+    Rounds.checkpoint(df.select(col(keyCol),
         floor(unix_micros(col(tsCol)) / (bucketSec * 1000000L))
           .cast("long").as("bucket"))
       .groupBy(col(keyCol), col("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("n")))
 
   /** The doubling-scan core over an already-collapsed (keyCols...,
     * bucket, n) frame — [[holt]] runs it per key, [[holtSeasonal]] per
@@ -573,7 +572,10 @@ object TimeSeries {
     val byKey = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
     val xs = (0 until w).map(t =>
       (if (t == 0) col("n") else lead(col("n"), t).over(byKey)).as(s"__x$t"))
-    val wnd = c
+    // materialize once: the frame is read three times (pair left, pair
+    // right, and the mirrored union re-executes the join otherwise —
+    // the plan audit showed 8 parquet scans without this)
+    val wnd = Rounds.checkpoint(c
       .select(Seq(col(keyCol), col("bucket"),
         row_number().over(byKey).as("__pos")) ++ xs: _*)
       .filter(col(s"__x${w - 1}").isNotNull)
@@ -583,11 +585,7 @@ object TimeSeries {
           .as("__q"),
         array((0 until w).map(t => col(s"__x$t")): _*).as("__xs"))
       .withColumn("__den", lit(w.toLong) * col("__q") - col("__s") * col("__s"))
-      .filter(col("__den") > 0)
-      // materialize once: the frame is read three times (pair left, pair
-      // right, and the mirrored union re-executes the join otherwise —
-      // the plan audit showed 8 parquet scans without this)
-      .localCheckpoint()
+      .filter(col("__den") > 0))
     val offsets = explode(sequence(lit(excl), lit(band))).as("__d")
     val left = wnd.select(col(keyCol), col("bucket"), col("__pos"),
       col("__s"), col("__den"), col("__xs"))
@@ -615,7 +613,7 @@ object TimeSeries {
     // pair sims computed ONCE (each undirected pair feeds both
     // endpoints' minima); without the checkpoint the mirrored branch
     // re-executes the band join
-    val pinned = pairs.localCheckpoint()
+    val pinned = Rounds.checkpoint(pairs)
     val both = pinned.unionAll(pinned.select(col(keyCol),
       col("__b2").as("bucket"), col("__p2").as("__pos"),
       col("bucket").as("__b2"), col("__pos").as("__p2"), col("__r")))
@@ -1303,9 +1301,9 @@ object TimeSeries {
       bucketSec: Long, q: Double, r: Double, maxLevels: Int = 24)
       : DataFrame = {
     val (_, cs) = kalmanCoeffs(q, r)
-    val filt = kalman(df, keyCol, tsCol, bucketSec, q, r, maxLevels)
-      .localCheckpoint() // boundary: the backward scan chains ⌈log₂ n⌉
-                         // more windows onto the forward scan's lineage
+    // boundary: the backward scan chains ⌈log₂ n⌉ more windows onto the
+    // forward scan's lineage
+    val filt = Rounds.checkpoint(kalman(df, keyCol, tsCol, bucketSec, q, r, maxLevels))
     val byKey = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
     val m = cs.length
     val cc = element_at(array(cs.map(lit): _*),

@@ -112,10 +112,9 @@ object Training {
   def packShelves(df: DataFrame, idCol: String, textCol: String,
       capacity: Int = 512, bucketSize: Long = 4096L): DataFrame = {
     require(capacity >= 1, "capacity must be >= 1")
-    val base = df.select(
+    val base = Rounds.persist(df.select(
         col(idCol).as("doc_id"),
-        size(split(trim(col(textCol)), "\\s+")).cast("long").as("__L"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        size(split(trim(col(textCol)), "\\s+")).cast("long").as("__L")))
     // rank within the L class: two-level bucketed prefix count
     // (TwoLevelRank — the stripe prefix is NOT broadcast: its worst case,
     // many distinct lengths per stripe, approaches the corpus; the join
@@ -244,15 +243,14 @@ object Training {
   def decontaminateBloom(corpus: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, n: Int = 8, expectedItems: Long = 1L << 20,
       fpp: Double = 0.01): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def keyLong(k: Column): Column =
       conv(substring(k, 1, 15), 16, 10).cast("long")
-    val benchKeys = ngramKeys(bench, idCol, textCol, n)
-      .select(col("__k")).distinct().persist(lvl)
+    val benchKeys = Rounds.persist(ngramKeys(bench, idCol, textCol, n)
+      .select(col("__k")).distinct())
     val bloom = benchKeys
       .select(keyLong(col("__k")).as("__kl"))
       .stat.bloomFilter("__kl", expectedItems, fpp)
-    val ck = ngramKeys(corpus, idCol, textCol, n).persist(lvl)
+    val ck = Rounds.persist(ngramKeys(corpus, idCol, textCol, n))
     val totals = ck.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_ngrams"))
     val hits = ck
@@ -430,7 +428,6 @@ object Training {
       nBuckets: Int = 64, alpha: Double = 0.5): DataFrame = {
     require(nBuckets >= 2, "nBuckets >= 2")
     require(alpha > 0, "alpha must be positive (unseen buckets need mass)")
-    import org.apache.spark.storage.StorageLevel
     val toks = col("__toks")
     val pairs = transform(sequence(lit(0), size(toks) - 2),
       i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2)))
@@ -443,8 +440,7 @@ object Training {
       .select(keyCols :+ bucketOf(col("__bg")).as("b"): _*)
       .groupBy(keyCols :+ col("b"): _*)
       .agg(count(lit(1)).as("n"))
-    val dbk = bucketCounts(corpus, Seq(col(idCol).as("doc_id")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val dbk = Rounds.persist(bucketCounts(corpus, Seq(col(idCol).as("doc_id"))))
     val cb = dbk.groupBy(col("b")).agg(sum(col("n")).as("cn"))
     val tb = bucketCounts(target, Seq.empty)
       .select(col("b"), col("n").as("tn"))

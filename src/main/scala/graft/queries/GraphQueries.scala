@@ -80,16 +80,15 @@ object GraphQueries {
   // per-round scheduling overhead outweighs the saved shuffle at the
   // measured scale (r16 receipt).
   private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    coPurchaseWeighted(s, dir)
-      .select(col("a"), col("b"))
-      // Persisted at the edge frame itself (not only the symmetrized
-      // copies the Graph ops persist internally): every graph_* query
-      // ALSO derives an aux frame from it (seed set, node list, degree
-      // frame), and without this the aux materialization re-executes
-      // the whole build — graph_bfs paid it 2-3× per sample. The
-      // support-2 edge list is the frame the docstring argues stays
-      // small at any scale, so the cache is a few thousand rows.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Persisted at the edge frame itself (not only the symmetrized
+    // copies the Graph ops persist internally): every graph_* query
+    // ALSO derives an aux frame from it (seed set, node list, degree
+    // frame), and without this the aux materialization re-executes
+    // the whole build — graph_bfs paid it 2-3× per sample. The
+    // support-2 edge list is the frame the docstring argues stays
+    // small at any scale, so the cache is a few thousand rows.
+    Rounds.persist(coPurchaseWeighted(s, dir)
+      .select(col("a"), col("b")))
 
   /** Unrolled Luby-MIS oracle: `rounds` blocks of (winner = beats every
     * active neighbor under the same deterministic (π, id) order) →
@@ -528,7 +527,7 @@ object GraphQueries {
       // per-leg re-planning). Pinning here leaves tradePairs'
       // single-reference consumers (hits, pagerank_directed) untaxed,
       // the measured reason its own persist was rejected.
-      val e = tradePairs(s, dir).localCheckpoint()
+      val e = Rounds.checkpoint(tradePairs(s, dir))
       val fwd = e.select(col("c").as("src"), (-col("su") - 1).as("dst"))
       val rev = e.select((-col("su") - 1).as("src"), col("c").as("dst"))
       Graph.pagerank(fwd.unionAll(rev), "src", "dst", iters = 3, damping = 0.85)
@@ -543,7 +542,7 @@ object GraphQueries {
     Case("graph_ppr", { (s, dir) =>
       import s.implicits._
       // pinned for the two-leg union — same receipt as graph_pagerank
-      val e = tradePairs(s, dir).localCheckpoint()
+      val e = Rounds.checkpoint(tradePairs(s, dir))
       val fwd = e.select(col("c").as("src"), (-col("su") - 1).as("dst"))
       val rev = e.select((-col("su") - 1).as("src"), col("c").as("dst"))
       val seeds = Seq(1L, 2L, 3L, 4L, 5L).toDF("node")
@@ -560,11 +559,10 @@ object GraphQueries {
     // weighted recurrence.
     Case("graph_pagerank_weighted", { (s, dir) =>
       // pinned for the two-leg union — same receipt as graph_pagerank
-      val e = t(s, dir, "orders")
+      val e = Rounds.checkpoint(t(s, dir, "orders")
         .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("su"))
-        .agg(count(lit(1)).cast("double").as("w"))
-        .localCheckpoint()
+        .agg(count(lit(1)).cast("double").as("w")))
       val fwd = e.select(col("c").as("src"), (-col("su") - 1).as("dst"), col("w"))
       val rev = e.select((-col("su") - 1).as("src"), col("c").as("dst"), col("w"))
       Graph.pagerankWeighted(fwd.unionAll(rev), "src", "dst", "w",
@@ -599,11 +597,10 @@ object GraphQueries {
       // the plan audit showed each leg re-running the orders⋈lineitem
       // shuffle+aggregate (PLANS.md: two separate pair-agg Exchanges,
       // one ReusedExchange only for the orders broadcast).
-      val pairs = t(s, dir, "orders").join(t(s, dir, "lineitem"),
+      val pairs = Rounds.checkpoint(t(s, dir, "orders").join(t(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_custkey").as("c"), (-col("l_suppkey") - 1).as("su"))
-        .agg(max(when(col("l_returnflag") === "R", 1).otherwise(0)).as("r"))
-        .localCheckpoint()
+        .agg(max(when(col("l_returnflag") === "R", 1).otherwise(0)).as("r")))
       val ed = pairs.select(col("c").as("src"), col("su").as("dst"))
         .unionAll(pairs.filter(col("r") === 1)
           .select(col("su").as("src"), col("c").as("dst")))
@@ -653,11 +650,10 @@ object GraphQueries {
     Case("graph_scc_converged", { (s, dir) =>
       // pairs pinned for the two-leg union — same plan-audit receipt as
       // graph_scc_bounded above (r15 second pass)
-      val pairs = t(s, dir, "orders").join(t(s, dir, "lineitem"),
+      val pairs = Rounds.checkpoint(t(s, dir, "orders").join(t(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_custkey").as("c"), (-col("l_suppkey") - 1).as("su"))
-        .agg(max(when(col("l_returnflag") === "R", 1).otherwise(0)).as("r"))
-        .localCheckpoint()
+        .agg(max(when(col("l_returnflag") === "R", 1).otherwise(0)).as("r")))
       val ed = pairs.select(col("c").as("src"), col("su").as("dst"))
         .unionAll(pairs.filter(col("r") === 1)
           .select(col("su").as("src"), col("c").as("dst")))
@@ -888,17 +884,15 @@ object GraphQueries {
       // orders⋈lineitem aggregate across union legs (the graph_scc plan
       // audit receipt) — so even adj's ONE persist materialization paid
       // the build twice.
-      val e = t(s, dir, "orders")
+      val e = Rounds.checkpoint(t(s, dir, "orders")
         .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("su"))
-        .agg(count(lit(1)).as("w"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("w")))
       // persisted: the relaxation joins this frame once per round (and
       // the seed set derives from it) — without the cache each round
       // re-runs the orders⋈lineitem build (the bfsDistances discipline)
-      val adj = e.select(col("c").as("src"), (-col("su") - 1).as("dst"), col("w"))
-        .unionAll(e.select((-col("su") - 1).as("src"), col("c").as("dst"), col("w")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val adj = Rounds.persist(e.select(col("c").as("src"), (-col("su") - 1).as("dst"), col("w"))
+        .unionAll(e.select((-col("su") - 1).as("src"), col("c").as("dst"), col("w"))))
       val seeds = adj.select(col("src").as("node")).distinct()
         .filter(col("node") >= 0 && col("node") % 97 === 0)
       Graph.ssspBounded(adj, seeds, rounds = 3)

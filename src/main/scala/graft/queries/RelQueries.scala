@@ -1501,9 +1501,8 @@ object RelQueries {
       // key frame — the join keys match the intra window's partitioning,
       // so only the small side exchanges; AQE may still broadcast it at
       // runtime when it IS small.
-      val cnt = t(s, dir, "orders").groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("x"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cnt = Rounds.persist(t(s, dir, "orders").groupBy(col("o_custkey"))
+        .agg(count(lit(1)).as("x")))
       val ranked = TwoLevelRank.rank(cnt, Nil, Seq("x"),
           expr(s"o_custkey div $stripeWidth"), Seq("o_custkey"), "i")
         .select(col("o_custkey"), col("x"), col("i"))

@@ -334,8 +334,7 @@ object TsQueries {
     // screen. The decomposed frame is persisted: med/MAD broadcasts and
     // the final join are three references.
     Case("ts_decompose_anomaly", { (s, dir) =>
-      val d = TimeSeries.decompose(t(s, dir, "events"), "ts", "event_type")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val d = Rounds.persist(TimeSeries.decompose(t(s, dir, "events"), "ts", "event_type"))
       TimeSeries.madOutliers(d, keyCol = "event_type", idCol = "bucket",
         valueCol = "residual", threshold = 3.0)
     },

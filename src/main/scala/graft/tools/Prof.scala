@@ -34,7 +34,6 @@ object Prof {
         }
     })
     for (name <- names; r <- 1 to runs) {
-      spark.catalog.clearCache()
       jobs.synchronized { jobs.clear() }
       val sample = graft.Bench.timeFullResult(graft.SparkEntry.queries(name)(spark, sfDir))
       // listener events are async; give the bus a beat before reading

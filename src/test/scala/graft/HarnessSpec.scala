@@ -8,16 +8,18 @@ import scala.jdk.CollectionConverters._
   * Bench and Prof sample with. */
 class HarnessSpec extends SparkSuite {
   test("Harness.scala is the only place a session is built") {
-    def filesWith(needle: String, roots: Seq[String]): Seq[String] =
+    def filesMatching(roots: Seq[String])(hit: String => Boolean): Seq[String] =
       roots.flatMap { root =>
         val dir = Paths.get(root)
         assert(Files.isDirectory(dir), s"$root not found under ${Paths.get("").toAbsolutePath}")
         val files = Files.walk(dir)
         try files.iterator.asScala
-          .filter(p => Files.isRegularFile(p) && Files.readString(p).contains(needle))
-          .map(_.toString).toList
+          .filter(p => Files.isRegularFile(p) && hit(Files.readString(p)))
+          .map(_.toString).toList.sorted
         finally files.close()
       }
+    def filesWith(needle: String, roots: Seq[String]): Seq[String] =
+      filesMatching(roots)(_.contains(needle))
     // Split so this file does not match itself.
     val needle = "SparkSession" + ".builder()"
     assert(filesWith(needle, Seq("src/main/scala", "src/test/scala")) ==
@@ -28,6 +30,15 @@ class HarnessSpec extends SparkSuite {
     for (n <- Seq("getPersistent" + "RDDs", "ckpt" + "Ids"))
       assert(filesWith(n, Seq("src/main/scala")) ==
         Seq("src/main/scala/graft/ops/Rounds.scala"), n)
+    // And one owner for every storage pin: only ops/Rounds (and the
+    // bridge it frees checkpoints through) caches, checkpoints or
+    // releases a frame, or clears the session's cache. The owner's own
+    // calls, `Rounds.persist(...)`, are how everything else pins.
+    val pin = """(?<!Rounds)\.(persist|localCheckpoint)\(|\.cache\(\)|unpersist\(|clearCache""".r
+    val owners = Set("src/main/scala/graft/ops/Rounds.scala",
+      "src/main/scala/org/apache/spark/sql/graftbridge/GraftBridge.scala")
+    val pinning = filesMatching(Seq("src/main/scala"))(pin.findFirstIn(_).isDefined)
+    assert(pinning.nonEmpty && pinning.forall(owners), pinning)
   }
 
   test("Harness.session(k): master local[k], k shuffle partitions, UTC") {

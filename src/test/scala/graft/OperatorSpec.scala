@@ -11,19 +11,27 @@ class OperatorSpec extends SparkSuite {
   import spark.implicits._
 
   test("every SparkEntry query runs and is non-empty on sf0.001") {
-    val empties =
-      try sweepQueries() { (name, fn) =>
-        val n = fn(spark, sfDir).count()
+    var empties = Seq.empty[String]
+    val left = leftPersisted {
+      empties = sweepQueries() { (name, fn) =>
+        val n = Harness.materialize(fn(spark, sfDir))(_.count())
         if (n == 0) Seq(name) else Nil
-      } finally spark.catalog.clearCache() // see the gate-boundary test
+      }
+    }
     assert(empties.isEmpty, s"empty results: $empties")
+    // each run's scope freed what it pinned, with no clearCache: no cache
+    // entry and no persisted RDD outlives the query that made it
+    assert(spark.sharedState.cacheManager.isEmpty, "cache entries outlived their query")
+    assert(left == 0, s"$left persisted RDDs outlived their query")
   }
 
   test("round-loop queries: concurrent runs on one session equal the sequential run") {
     // The iterative operators pin and free a checkpoint per round
     // (ops/Rounds). A free that reached another query's frames — the r16
     // registry-diff race — fails or changes a query running beside it,
-    // so each runs twice from the pool against its sequential result.
+    // so each runs twice from the pool against its sequential result,
+    // every run in its own scope: a run that ends frees its pins while
+    // its twin still runs.
     val names = Seq("graph_kcore", "graph_ktruss", "graph_cc_twostars",
       "graph_hits", "graph_mst_boruvka", "graph_mis", "graph_coloring",
       "graph_diameter", "dedup_groups", "dedup_max_repeats",
@@ -31,14 +39,14 @@ class OperatorSpec extends SparkSuite {
       "ann_nndescent_planted", "ann_mmr_rerank")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().toSeq.map(_.toSeq.map(Verify.canonCell).mkString(" | ")).sorted
-    try {
-      val sequential = names.map(n => n -> rows(SparkEntry.queries(n)(spark, sfDir))).toMap
-      assert(sequential.forall(_._2.nonEmpty), sequential.filter(_._2.isEmpty).keys)
-      val differ = sweepQueries(names = names ++ names) { (name, fn) =>
-        if (rows(fn(spark, sfDir)) == sequential(name)) Nil else Seq(name)
-      }
-      assert(differ.isEmpty, s"concurrent result differs from sequential: $differ")
-    } finally spark.catalog.clearCache() // see the gate-boundary test
+    val sequential = names.map(n =>
+      n -> Harness.materialize(SparkEntry.queries(n)(spark, sfDir))(rows)).toMap
+    assert(sequential.forall(_._2.nonEmpty), sequential.filter(_._2.isEmpty).keys)
+    val differ = sweepQueries(names = names ++ names) { (name, fn) =>
+      if (Harness.materialize(fn(spark, sfDir))(rows) == sequential(name)) Nil
+      else Seq(name)
+    }
+    assert(differ.isEmpty, s"concurrent result differs from sequential: $differ")
   }
 
   test("entry flagship returns rows") {
@@ -72,16 +80,13 @@ class OperatorSpec extends SparkSuite {
     // construction-time side effects (scratch writes, sampled training).
     import org.apache.spark.sql.types.{ArrayType, DecimalType, FloatType}
     val offenders =
-      try sweepQueries() { (name, fn) =>
-        fn(spark, sfDir).schema.fields.toSeq.collect {
+      sweepQueries() { (name, fn) =>
+        Harness.materialize(fn(spark, sfDir))(_.schema.fields.toSeq.collect {
           case f if f.dataType.isInstanceOf[DecimalType] ||
             f.dataType.isInstanceOf[ArrayType] ||
             f.dataType == FloatType => s"$name.${f.name}: ${f.dataType}"
-        }
-      // constructing the queries persists fixture-scale frames (key-skew,
-      // shelves, bloom decon, …); drop them so later PLAN tests don't see
-      // InMemoryRelation-rewritten trees for matching subtrees
-      } finally spark.catalog.clearCache()
+        })
+      }
     assert(offenders.isEmpty,
       s"renderer-dependent output columns:\n${offenders.mkString("\n")}")
   }
@@ -428,18 +433,21 @@ class OperatorSpec extends SparkSuite {
       groups = Dedup.duplicateGroups(chain).as[(Long, Long)].collect().toMap
     }
     assert(groups.size == 12 && groups.values.toSet == Set(1L), groups.toString)
-    assert(left <= 3, s"leaked checkpoint blocks: $left persistent RDDs left")
+    // what stays is the final labels' checkpoint, which the result reads
+    assert(left <= 1, s"leaked checkpoint blocks: $left persistent RDDs left")
     // the unigram Viterbi rounds free their superseded state, the seed
-    // round included: what stays is the six persisted frames (wf, vocab,
-    // candidates, the first pass's reweighted vocab, each pass's edge
-    // frame) and each pass's final state
+    // round included, and the op frees its dead helpers (vocab,
+    // candidates, the reweighted vocab, each pass's edge frame, the first
+    // pass's final state) once the second pass has run: what stays is
+    // what the result reads, the word-frequency cache and the second
+    // pass's final state
     val words = (Seq.fill(20)("ab") ++ Seq.fill(20)("cd") ++ Seq("abcd", "abcz"))
       .map(Tuple1(_)).toDF("text")
     val viterbiLeft = leftPersisted {
       TextAnalysis.unigramWordPaths(words, maxTokLen = 3, topSubs = 8,
         rounds = 4).count()
     }
-    assert(viterbiLeft <= 8, s"Viterbi leaked rounds: $viterbiLeft persistent RDDs left")
+    assert(viterbiLeft <= 2, s"Viterbi leaked rounds: $viterbiLeft persistent RDDs left")
     // partially-propagated labels must fail loudly, not return wrong groups
     intercept[IllegalStateException] {
       Dedup.duplicateGroups(chain, maxIters = 3).count()
@@ -607,6 +615,16 @@ class OperatorSpec extends SparkSuite {
     org.apache.spark.sql.graftbridge.GraftBridge
       .applyFunctionExtensions(new graft.GraftExtensions, fresh)
     assert(names.filterNot(fresh.catalog.functionExists).isEmpty)
+    // Applying twice registers once: the second call finds every
+    // function and replaces none (each replacement logs a WARN).
+    val registry = fresh.sessionState.functionRegistry
+    def builders = names.map(n => registry
+      .lookupFunctionBuilder(org.apache.spark.sql.catalyst.FunctionIdentifier(n)).get)
+    val first = builders
+    org.apache.spark.sql.graftbridge.GraftBridge
+      .applyFunctionExtensions(new graft.GraftExtensions, fresh)
+    assert(builders.zip(first).forall { case (now, was) => now eq was },
+      "a second apply replaced registered functions")
   }
 
   test("consistent sampling is stable, partition-independent, and nests") {
@@ -708,7 +726,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("plan: decontamination probes a broadcast benchmark set") {
-    spark.catalog.clearCache() // plan asserted on uncached subtrees
     val df = SparkEntry.queries("decon_ngram")(spark, sfDir)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
@@ -1992,12 +2009,10 @@ class OperatorSpec extends SparkSuite {
 
   test("plan guards: wave 7/8 scale claims hold in the executed plans") {
     // Plan-shape assertions are only well-defined against a clean cache:
-    // CacheManager substitutes any canonically-equal cached subtree left
-    // behind by earlier tests, which changes where InMemoryTableScan
-    // nodes land and how many Generate occurrences the plan STRING
-    // prints — a print artifact of cross-test cache state, not a
-    // property of the operator under test.
-    spark.catalog.clearCache()
+    // CacheManager substitutes any canonically-equal cached subtree, which
+    // changes where InMemoryTableScan nodes land and how many Generate
+    // occurrences the plan STRING prints. Each test's scope (SparkSuite)
+    // frees what earlier tests pinned, so this one starts clean.
     withoutAqe {
       // EWMA: all k lag terms ride ONE ordered window pass — one key
       // exchange, one Window node
@@ -2053,7 +2068,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("plan guards: round-6 scale claims hold in the executed plans") {
-    spark.catalog.clearCache()
     withoutAqe {
       // inverted index: postings come from the k-bounded ObjectHashAggregate
       // (TopKAggregator), never a collect_list of the full posting list
@@ -2093,7 +2107,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("plan guards: round-6 final wave scale claims hold in executed plans") {
-    spark.catalog.clearCache()
     withoutAqe {
       // silhouette: centroids reach every vector by broadcast (K rows),
       // never a shuffled join of corpus-sized frames
@@ -2211,18 +2224,19 @@ class OperatorSpec extends SparkSuite {
     intercept[IllegalStateException] {
       Graph.ccTwoStarsNodes(edges, maxRounds = 1).count()
     }
-    // checkpoint blocks from superseded rounds are freed
+    // checkpoint blocks from superseded rounds are freed: what stays is
+    // the final round's
     val left = leftPersisted(Graph.ccTwoStarsNodes(edges).count())
-    assert(left <= 2, s"leaked checkpoint blocks: $left persistent RDDs left")
-    // so are NN-descent's superseded k-NN graphs (what stays: the
-    // persisted embeddings and the final graph) and MMR's superseded
-    // selections (what stays: the candidate and pair frames and the
-    // final selection)
+    assert(left <= 1, s"leaked checkpoint blocks: $left persistent RDDs left")
+    // so are NN-descent's superseded k-NN graphs and, after the last
+    // round, its embeddings (what stays: the final graph) and MMR's
+    // superseded selections (what stays: the candidate and pair frames
+    // and the final selection, all read by the result)
     val rnd = new scala.util.Random(29)
     val vecs = (0L until 120L).map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
     val nnLeft = leftPersisted(Similarity.nnDescent(vecs, k = 5, rounds = 5).count())
-    assert(nnLeft <= 2, s"NN-descent leaked rounds: $nnLeft persistent RDDs left")
+    assert(nnLeft <= 1, s"NN-descent leaked rounds: $nnLeft persistent RDDs left")
     val mmrLeft = leftPersisted(Similarity.mmrRerank(vecs,
       vecs.filter($"vec_id" % 30 === 0), candK = 16, k = 6).count())
     assert(mmrLeft <= 3, s"MMR leaked steps: $mmrLeft persistent RDDs left")
@@ -3031,7 +3045,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("fused co-purchase edge build: equals the multiplicity form, one corpus shuffle") {
-    spark.catalog.clearCache()
     // reference form: (order, part) multiplicities, pair weight cnt(a)*cnt(b)
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"))
@@ -3043,17 +3056,17 @@ class OperatorSpec extends SparkSuite {
       } yield ((a, b), ca * cb)
     }.toSeq.groupBy(_._1).view.mapValues(_.map(_._2).sum)
       .filter(_._2 >= 2).keySet.toSeq.sorted
-    val got = GraphQueries.coPurchaseEdges(spark, sfDir)
-      .as[(Long, Long)].collect().toSeq.sorted
+    val got = Harness.materialize(GraphQueries.coPurchaseEdges(spark, sfDir))(
+      _.as[(Long, Long)].collect().toSeq.sorted)
     assert(got == expect,
       s"fused edge build diverged: ${got.take(5)}... vs ${expect.take(5)}...")
     // plan guard: exactly two corpus-keyed exchanges — the per-order
     // group and the pair-support aggregate; no self-join, no extra
-    // multiplicity stage
-    spark.catalog.clearCache()
+    // multiplicity stage (the build above freed its cached edge frame, so
+    // this plan is not a scan of it)
     withoutAqe {
-      val plan = GraphQueries.coPurchaseEdges(spark, sfDir)
-        .queryExecution.executedPlan.toString
+      val plan = Harness.materialize(GraphQueries.coPurchaseEdges(spark, sfDir))(
+        _.queryExecution.executedPlan.toString)
       val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).size
       assert(shuffles == 2,
         s"fused edge build must shuffle exactly twice, got $shuffles:\n" +
@@ -3061,7 +3074,6 @@ class OperatorSpec extends SparkSuite {
       assert(!plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin"),
         "fused edge build must not contain a join:\n" + plan.take(3000))
     }
-    spark.catalog.clearCache()
   }
 
   test("double-sweep diameter: exact on a path and a star; bounded by rounds") {
@@ -3229,9 +3241,10 @@ class OperatorSpec extends SparkSuite {
 
   test("length-bucket: two-level ntile matches the global window; no doc-frame global sort") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val got = SparkEntry.queries("sample_length_bucket")(spark, sfDir)
-      .select($"bucket", $"n_docs", $"min_len", $"max_len", $"sum_len", $"padding_waste")
-      .as[(Int, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
+    // the query persists the length frame: freed before the plan guard
+    val got = Harness.materialize(SparkEntry.queries("sample_length_bucket")(spark, sfDir))(
+      _.select($"bucket", $"n_docs", $"min_len", $"max_len", $"sum_len", $"padding_waste")
+        .as[(Int, Long, Long, Long, Long, Long)].collect().sortBy(_._1))
     val w = org.apache.spark.sql.expressions.Window.orderBy($"len", $"doc_id")
     val expect = docs
       .select($"doc_id", size(TextAnalysis.tokens($"text")).cast("long").as("len"))
@@ -3241,24 +3254,21 @@ class OperatorSpec extends SparkSuite {
         max($"len").as("max_len"), sum($"len").as("sum_len"))
       .withColumn("padding_waste", $"max_len" * $"n_docs" - $"sum_len")
       .as[(Int, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    try assert(got.toSeq == expect.toSeq)
-    finally spark.catalog.clearCache() // the query persists the length frame
+    assert(got.toSeq == expect.toSeq)
     // plan guard: the per-doc rank window is PARTITIONED by (len, stripe);
     // only the collapsed bucket-prefix window and the 1-row total cross a
     // single task — the raw document frame never does
     withoutAqe {
       val plan = SparkEntry.queries("sample_length_bucket")(spark, sfDir)
         .queryExecution.executedPlan.toString
-      try {
-        assert("row_number\\(\\) windowspecdefinition\\(len#\\d+L?, __g#"
-          .r.findFirstIn(plan).isDefined,
-          "per-doc rank must be a partitioned window:\n" + plan.take(3000))
-        assert(!"ntile".r.findFirstIn(plan).isDefined,
-          "no ntile window may remain in the plan")
-        val singles = "Exchange SinglePartition".r.findAllIn(plan).size
-        assert(singles <= 2,
-          s"expected at most bucket-prefix + total single-partition frames, got $singles")
-      } finally spark.catalog.clearCache()
+      assert("row_number\\(\\) windowspecdefinition\\(len#\\d+L?, __g#"
+        .r.findFirstIn(plan).isDefined,
+        "per-doc rank must be a partitioned window:\n" + plan.take(3000))
+      assert(!"ntile".r.findFirstIn(plan).isDefined,
+        "no ntile window may remain in the plan")
+      val singles = "Exchange SinglePartition".r.findAllIn(plan).size
+      assert(singles <= 2,
+        s"expected at most bucket-prefix + total single-partition frames, got $singles")
     }
   }
 
@@ -3894,13 +3904,13 @@ class OperatorSpec extends SparkSuite {
     }
     withoutAqe {
       val offenders =
-        try sweepQueries() { (name, fn) =>
-          fn(spark, sfDir).queryExecution.executedPlan.collect {
+        sweepQueries() { (name, fn) =>
+          Harness.materialize(fn(spark, sfDir))(_.queryExecution.executedPlan.collect {
             case w: WindowExec if w.partitionSpec.forall(_.foldable) &&
                 !collapsed(w.child) =>
               s"$name: partition-less window over a non-collapsed input"
-          }.toSeq
-        } finally spark.catalog.clearCache()
+          }.toSeq)
+        }
       assert(offenders.isEmpty, offenders.mkString("\n"))
     }
   }

@@ -1,11 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session: one per suite, UTC, small shuffle width. */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = Harness.session(4)
+
+  /** Each test runs in its own query scope (`ops.Rounds.scoped`): the
+    * caches and checkpoints its queries pin on the test thread are freed
+    * when it ends, so no test plans against another's cached fragments
+    * and none needs the session-global `clearCache`. Queries a test runs
+    * from a pool take their own scope through `Harness.materialize`. */
+  override def withFixture(test: NoArgTest): Outcome =
+    graft.ops.Rounds.scoped(super.withFixture(test))
 
   val sfDir = "/root/testdata/sf0.001"
 
@@ -20,7 +29,9 @@ trait SparkSuite extends AnyFunSuite {
     * same table, scratch paths are per-query under a per-process root,
     * and the bucketed-table names belong to a single query (the
     * Fixtures.layoutRoot/tableSuffix scaladocs). Results keep query order, so
-    * assertion messages are deterministic. */
+    * assertion messages are deterministic. `f` runs each query through
+    * `Harness.materialize`, so what one run pins is freed when it ends and
+    * never by another. */
   def sweepQueries[T](threads: Int = 8,
       names: Seq[String] = SparkEntry.queries.keys.toSeq.sorted)(
       f: (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)

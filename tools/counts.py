@@ -3,16 +3,19 @@
 (VERDICT r12 #8: typed counts drifted twice — r11 "269 vs 268", r12
 "286 vs 285" — so the number is now derived, never typed).
 
-Usage: python3 tools/counts.py <verifyOutDir> [correctness_full.json] [sbt-test.log]
+Usage: python3 tools/counts.py <verifyOutDir> [correctness_full.json] [run.log]
 
 Prints: total gated queries = len(oracle_sql_full.json) + the by-design
 signature rows (queries Verify ran that have NO oracle entry), the
-ok/fail split from the correctness artifact if given, and — when an
-`sbt test` log is given — the ScalaTest battery count parsed from its
-summary line (VERDICT r13 #2: the hand-typed test count drifted after a
-post-close addendum; this derives it from the run itself).
+ok/fail split from the correctness artifact if given (pass "" to skip
+it), and — when a log is given — the ScalaTest battery count parsed from
+its summary line (VERDICT r13 #2: the hand-typed test count drifted after
+a post-close addendum; this derives it from the run itself) and the
+log's WARN line count with its three largest sources, so log-noise
+figures are derived the same way. The log may be an `sbt test` log or a
+Verify/Bench run's output.
 """
-import json, os, re, sys
+import collections, json, os, re, sys
 
 
 def test_counts(log_path):
@@ -26,6 +29,18 @@ def test_counts(log_path):
         if m:
             last = (int(m.group(1)), int(m.group(2)))
     return last
+
+
+def warn_counts(log_path, top=3):
+    """WARN lines in a Spark log (log4j layout `... WARN <Logger>: msg`)
+    and the `top` loggers that emitted most of them."""
+    pat = re.compile(r"\bWARN (\S+?):")
+    by_src = collections.Counter()
+    for line in open(log_path, errors="replace"):
+        m = pat.search(line)
+        if m:
+            by_src[m.group(1)] += 1
+    return sum(by_src.values()), by_src.most_common(top)
 
 
 def main(out_dir, corr=None, test_log=None):
@@ -48,6 +63,9 @@ def main(out_dir, corr=None, test_log=None):
         else:
             print(f"test battery: {tc[0]}/{tc[0] + tc[1]} green "
                   f"({tc[1]} failed)")
+        n, top = warn_counts(test_log)
+        print(f"WARN lines: {n}; top sources: " +
+              ", ".join(f"{src} {k}" for src, k in top))
 
 
 if __name__ == "__main__":
