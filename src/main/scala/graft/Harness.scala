@@ -30,8 +30,10 @@ object Harness {
   /** Builds `query`, runs `sink` on it (a noop or parquet write, an
     * explain string, a collect) and then frees every cache entry and
     * checkpoint the build and the sink pinned: one query scope of
-    * `ops.Rounds`. Other queries' pins stay, unless they share one of
-    * these cache entries; a plan still reading it then rebuilds it. */
+    * `ops.Rounds`. Other queries' pins stay: a cache entry another
+    * query's frame also holds is uncached only when that query lets go
+    * of it too, and one inside an entry another query is still loading
+    * waits for that load. */
   def materialize[T](query: => DataFrame)(sink: DataFrame => T): T =
     graft.ops.Rounds.scoped(sink(query))
 }

@@ -1,10 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{CachedData, LogicalRDD}
 import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** The one owner of pinned storage: every cached frame ([[persist]]) and
   * every local checkpoint ([[checkpoint]], [[checkpointWith]]) the
@@ -30,11 +31,29 @@ import scala.collection.mutable.ArrayBuffer
   * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, the r16 parallel test sweeps). A
   * query is built and run on one driver thread, so a `ThreadLocal` scope
   * records exactly that query's pins; a thread pool running queries side
-  * by side gives each run its own scope. Such runs can still share a
-  * cache entry: the CacheManager substitutes an entry into any plan that
-  * contains its plan. A plan built before the entry's release then
+  * by side gives each run its own scope. Such runs still share cache
+  * entries, in two ways, and [[free]] keeps both safe:
+  *  - '''One entry per plan.''' A second [[persist]] of a plan another
+  *    query cached returns a frame that reads the first query's entry.
+  *    Each frame [[persist]] returns is a holder of its entry, and the
+  *    entry is uncached only when its last holder lets go, so a query
+  *    whose scope closes first leaves an entry the other query still
+  *    reads.
+  *  - '''An entry inside another.''' Uncaching an entry makes Spark
+  *    clear and re-plan every entry whose plan contains it and whose
+  *    buffers are not yet loaded, even while a job is writing them (two
+  *    plans match when they differ only in column names: a `src`/`dst`
+  *    edge union and an `i`/`j` one). So an entry with no holder left
+  *    waits, as an orphan, until no held entry that contains it is still
+  *    loading; a later [[free]] releases it.
+  * Either release, made early, shows as empty results in the 8-thread
+  * sweeps: an eager checkpoint written over a cleared entry holds no
+  * rows. A plan that
+  * reads an entry without holding it (the CacheManager substitutes an
+  * entry into any plan that contains its plan) and runs past the release
   * rebuilds the released buffers, persisted and in no entry, so every
-  * scope close clears the buffers of released entries again.
+  * scope close clears the buffers of released entries again; a released
+  * entry has no holder.
   *
   * Why localCheckpoint, not persist, for rounds: a recurrence that reads
   * the previous round more than once per round grows its LOGICAL plan as
@@ -69,10 +88,19 @@ private[graft] object Rounds {
   private val current = new ThreadLocal[Scope]
 
   /** Every frame [[persist]] returned, held weakly (a Dataset's equality
-    * is its identity), with the buffer builder its plans read: how
-    * [[free]] tells a cache from a checkpoint. Guarded by its own lock,
-    * as is [[retired]]. */
+    * is its identity, and a frame no longer reachable holds nothing),
+    * with the cache entry it holds, or [[Released]] once [[free]] let it
+    * go: how [[free]] tells a cache from a checkpoint and counts an
+    * entry's holders. Guarded by its own lock, as are [[orphans]] and
+    * [[retired]]. */
   private val caches = new java.util.WeakHashMap[DataFrame, AnyRef]
+
+  /** The [[caches]] value of a freed frame. */
+  private val Released = new Object
+
+  /** Entries whose last holder let go while a loading held entry
+    * contained them, each with a frame of its plan, oldest first. */
+  private val orphans = ArrayBuffer.empty[(DataFrame, CachedData)]
 
   /** Buffer builders of released cache entries (see the object doc). */
   private val retired = ArrayBuffer.empty[java.lang.ref.WeakReference[AnyRef]]
@@ -99,10 +127,18 @@ private[graft] object Rounds {
   }
 
   /** Cache `df` (MEMORY_AND_DISK): for a frame read more than once whose
-    * plan stays small. */
+    * plan stays small. The returned frame holds the plan's cache entry,
+    * a new one or the one another frame already holds, until it is freed. */
   def persist(df: DataFrame): DataFrame = {
     val out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    caches.synchronized(caches.put(out, GraftBridge.cacheBuilder(out)))
+    caches.synchronized {
+      // the entry's last holder may have released it since the persist
+      val entry = GraftBridge.cacheEntry(out).getOrElse {
+        out.persist(StorageLevel.MEMORY_AND_DISK)
+        GraftBridge.cacheEntry(out).orNull
+      }
+      caches.put(out, entry)
+    }
     Option(current.get).foreach(_.caches += out)
     out
   }
@@ -129,17 +165,41 @@ private[graft] object Rounds {
     (out, probe(out))
   }
 
-  /** Release `frame` now: its cache entry when [[persist]] returned it,
-    * otherwise the checkpoint blocks its plan reads — so call it on a
-    * checkpointed frame or a projection of one, never on a cached frame's
-    * derivative. Freeing twice is a no-op. */
+  /** Release `frame` now. When [[persist]] returned it, the frame lets
+    * go of its cache entry, and the entry is uncached once no frame holds
+    * it and no loading held entry contains it (see the object doc);
+    * otherwise the checkpoint blocks its plan reads are freed — so call
+    * it on a checkpointed frame or a projection of one, never on a cached
+    * frame's derivative. Freeing a frame twice is a no-op: the second
+    * call finds it already let go. */
   def free(frame: DataFrame): Unit = caches.synchronized {
-    if (caches.containsKey(frame)) {
-      // the builder the frame's plans read, and the entry's current one
-      (Option(caches.get(frame)) ++ Option(GraftBridge.cacheBuilder(frame)))
-        .foreach(b => retired += new java.lang.ref.WeakReference(b))
-      frame.unpersist(blocking = false)
+    if (caches.containsKey(frame)) caches.put(frame, Released) match {
+      case entry: CachedData =>
+        orphans += frame -> entry
+        releaseOrphans()
+      case _ =>
     } else freeCheckpoints(frame)
+  }
+
+  /** Uncaches each orphan, newest first, that no frame holds and no held
+    * entry still loading contains; drops an orphan a frame holds again. */
+  private def releaseOrphans(): Unit = {
+    val held = caches.values.asScala.collect { case e: CachedData => e }.toSeq
+    def holds(b: AnyRef) = held.exists(GraftBridge.builder(_) eq b)
+    orphans.reverseIterator.toList.foreach { case orphan @ (frame, entry) =>
+      val builder = GraftBridge.builder(entry)
+      if (holds(builder)) orphans -= orphan
+      else if (!held.exists(h => !GraftBridge.loaded(h) && h.plan.exists(_.sameResult(entry.plan)))) {
+        orphans -= orphan
+        retired += new java.lang.ref.WeakReference(builder)
+        // the plan's entry now: this one, or a re-planned copy no frame holds
+        GraftBridge.cacheEntry(frame).map(GraftBridge.builder)
+          .filterNot(holds).foreach { current =>
+            retired += new java.lang.ref.WeakReference(current)
+            frame.unpersist(blocking = false)
+          }
+      }
+    }
   }
 
   /** Unpersists the checkpoint blocks `frame`'s plan reads. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession, SparkSess
 import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.CachedData
 import org.apache.spark.sql.execution.columnar.CachedRDDBuilder
 
 /** Re-exposes the few `private[sql]`/`private[spark]` members graft
@@ -38,15 +39,21 @@ object GraftBridge {
     * live plan reads a freed round. A second call removes nothing. */
   def freeRdd(sc: SparkContext, id: Int): Unit = sc.unpersistRDD(id, blocking = false)
 
-  /** The buffer builder of the cache entry `df`'s plan matches, or null:
-    * the object every plan that reads the entry holds. */
-  def cacheBuilder(df: DataFrame): AnyRef =
+  /** The cache entry `df`'s plan matches. */
+  def cacheEntry(df: DataFrame): Option[CachedData] =
     df.sparkSession.sharedState.cacheManager
       .lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
-      .map(_.cachedRepresentation.cacheBuilder).orNull
 
-  /** Unpersists a [[cacheBuilder]]'s buffers, non-blocking; a plan that
-    * reads them again rebuilds them. */
+  /** An entry's buffer builder: the object every plan that reads the
+    * entry holds. */
+  def builder(entry: CachedData): AnyRef = entry.cachedRepresentation.cacheBuilder
+
+  /** Whether every partition of an entry's buffers is written. */
+  def loaded(entry: CachedData): Boolean =
+    entry.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded
+
+  /** Unpersists a [[builder]]'s buffers, non-blocking; a plan that reads
+    * them again rebuilds them. */
   def clearBuffers(builder: AnyRef): Unit =
     builder.asInstanceOf[CachedRDDBuilder].clearCache(blocking = false)
 }

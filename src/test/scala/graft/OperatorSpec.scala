@@ -49,6 +49,59 @@ class OperatorSpec extends SparkSuite {
     assert(differ.isEmpty, s"concurrent result differs from sequential: $differ")
   }
 
+  /** The cache entry `df`'s plan matches, as the CacheManager finds it. */
+  private def cacheEntry(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
+    .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+
+  test("Rounds.free: a shared cache entry stays until its last holder lets go") {
+    // The CacheManager keeps one entry per plan, so two queries that
+    // persist one plan (a query run twice at once, coPurchaseEdges under
+    // two graph queries) read one entry. Here on one thread: the nested
+    // scope stands for the query that ends first.
+    val cm = spark.sharedState.cacheManager
+    def cached(df: org.apache.spark.sql.DataFrame) = cacheEntry(df).isDefined
+    def plan = spark.range(0, 5000).select(($"id" % 97).as("k"), ($"id" * 3).as("v"))
+    val expected = plan.filter($"k" < 10).count() // nothing cached yet
+    Rounds.scoped {
+      val outer = Rounds.persist(plan)
+      val result = outer.filter($"k" < 10)
+      assert(result.count() == expected)
+      val inner = Rounds.scoped {
+        val f = Rounds.persist(plan)
+        f.count()
+        f
+      }
+      assert(cached(outer), "the inner scope released the shared entry")
+      assert(result.count() == expected)
+      Rounds.free(inner)
+      Rounds.free(inner)
+      assert(cached(outer), "freeing the inner frame again released the entry")
+      assert(result.count() == expected)
+    }
+    assert(cm.isEmpty, "the entry outlived its last holder")
+  }
+
+  test("Rounds.free: an entry waits while a held entry that contains it loads") {
+    // Uncaching an entry makes Spark clear and re-plan every entry that
+    // contains its plan and is not loaded yet, under any job writing it.
+    def plan = spark.range(0, 5000).select(($"id" % 97).as("k"), ($"id" * 3).as("v"))
+    def builder(df: org.apache.spark.sql.DataFrame) =
+      cacheEntry(df).map(_.cachedRepresentation.cacheBuilder)
+    Rounds.scoped {
+      val outer = Rounds.persist(plan.groupBy($"k").count())
+      val before = builder(outer)
+      val inner = Rounds.persist(plan)
+      inner.count()
+      Rounds.free(inner)
+      assert(builder(outer).exists(b => before.exists(_ eq b)), "a release re-planned a held entry")
+      assert(builder(inner).isDefined, "the contained entry went before its container loaded")
+      assert(outer.count() == 97)
+      Rounds.free(Rounds.persist(spark.range(1).toDF())) // any later free releases the waiting entry
+      assert(builder(inner).isEmpty, "the contained entry outlived its container's load")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "an entry outlived its holders")
+  }
+
   test("entry flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

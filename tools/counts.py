@@ -11,7 +11,7 @@ ok/fail split from the correctness artifact if given (pass "" to skip
 it), and — when a log is given — the ScalaTest battery count parsed from
 its summary line (VERDICT r13 #2: the hand-typed test count drifted after
 a post-close addendum; this derives it from the run itself) and the
-log's WARN line count with its three largest sources, so log-noise
+log's WARN and ERROR line counts with their three largest sources, so log-noise
 figures are derived the same way. The log may be an `sbt test` log or a
 Verify/Bench run's output.
 """
@@ -31,10 +31,11 @@ def test_counts(log_path):
     return last
 
 
-def warn_counts(log_path, top=3):
-    """WARN lines in a Spark log (log4j layout `... WARN <Logger>: msg`)
-    and the `top` loggers that emitted most of them."""
-    pat = re.compile(r"\bWARN (\S+?):")
+def level_counts(log_path, level, top=3):
+    """`level` (WARN, ERROR) lines in a Spark log (log4j layout
+    `... WARN <Logger>: msg`) and the `top` loggers that emitted most of
+    them."""
+    pat = re.compile(rf"\b{level} (\S+?):")
     by_src = collections.Counter()
     for line in open(log_path, errors="replace"):
         m = pat.search(line)
@@ -63,9 +64,10 @@ def main(out_dir, corr=None, test_log=None):
         else:
             print(f"test battery: {tc[0]}/{tc[0] + tc[1]} green "
                   f"({tc[1]} failed)")
-        n, top = warn_counts(test_log)
-        print(f"WARN lines: {n}; top sources: " +
-              ", ".join(f"{src} {k}" for src, k in top))
+        for level in ("WARN", "ERROR"):
+            n, top = level_counts(test_log, level)
+            print(f"{level} lines: {n}; top sources: " +
+                  ", ".join(f"{src} {k}" for src, k in top))
 
 
 if __name__ == "__main__":
