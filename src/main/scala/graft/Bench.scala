@@ -13,10 +13,10 @@ object Bench {
     * materialized result, or the exception building or running it threw.
     * The result goes to the `noop` sink, so every column the oracle checks
     * is computed; a `count()` would let Catalyst prune projections and
-    * aggregates it does not need. Everything the query pinned is freed
-    * when the sample ends (`Harness.materialize`), so the next sample of
-    * the same query recomputes it rather than reading a warm cache: the
-    * CacheManager matches frames by canonical plan across runs. */
+    * aggregates it does not need. Each sample builds the query afresh,
+    * and its pins are checkpoints only that build's frames read, so the
+    * next sample of the same query recomputes them; everything the
+    * sample pinned is freed when it ends (`Harness.materialize`). */
   def timeFullResult(query: => DataFrame): Either[Throwable, Double] = {
     val t0 = System.nanoTime()
     try {

@@ -10,13 +10,12 @@ import org.apache.spark.sql.execution.ExplainMode
   * [sfDir] [out.md]"`. */
 object Explain {
   /** The formatted physical plan of SparkEntry query `name` at `sfDir`,
-    * or `ERROR: <message>` when building it throws. The caches and
-    * checkpoints the query pinned while it was built are freed once its
-    * plan is printed (`Harness.materialize`): a later plan that matched a
-    * live cached fragment would print the InMemoryRelation's full child
-    * tree at every reference, and the textual expansion compounds —
-    * graph_leiden's caches once inflated graph_louvain_multilevel's
-    * section to 1.2M lines. Plans can embed raw control bytes in
+    * or `ERROR: <message>` when building it throws. The checkpoints the
+    * query pinned while it was built are freed once its plan is printed
+    * (`Harness.materialize`). Each pin prints as one `Scan ExistingRDD`
+    * leaf, so no plan expands another query's pinned fragments (cached
+    * fragments once inflated graph_louvain_multilevel's section to 1.2M
+    * lines). Plans can embed raw control bytes in
     * expression literals (the ustar NUL padding in mm_tar_shards' concat
     * tree turned the whole file "binary" for grep/diff); they are rendered
     * as `\xNN` escapes so every receipt stays a text file. */

@@ -28,12 +28,10 @@ object Harness {
   }
 
   /** Builds `query`, runs `sink` on it (a noop or parquet write, an
-    * explain string, a collect) and then frees every cache entry and
-    * checkpoint the build and the sink pinned: one query scope of
-    * `ops.Rounds`. Other queries' pins stay: a cache entry another
-    * query's frame also holds is uncached only when that query lets go
-    * of it too, and one inside an entry another query is still loading
-    * waits for that load. */
+    * explain string, a collect) and then frees every checkpoint the
+    * build and the sink pinned: one query scope of `ops.Rounds`. Other
+    * queries' pins stay, even of the same plan: a checkpoint belongs to
+    * the frame that made it. */
   def materialize[T](query: => DataFrame)(sink: DataFrame => T): T =
     graft.ops.Rounds.scoped(sink(query))
 }

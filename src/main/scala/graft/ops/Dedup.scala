@@ -646,9 +646,9 @@ object Dedup {
     // window stream, and the explode's output reaches the exchange
     // map-side-combined (a doc's windows are co-located in its input
     // partition).
-    val dk = Rounds.persist(spanWindows(docs, idCol, textCol, n)
+    val dk = Rounds.checkpoint(spanWindows(docs, idCol, textCol, n)
       .select(col(idCol), spanKey(col("span")).as("__h"))
-      .groupBy(col(idCol), col("__h")).agg(count(lit(1)).as("__c")))
+      .groupBy(col(idCol), col("__h")).agg(count(lit(1)).as("__c")), eager = false)
     val heavy = dk
       .groupBy(col("__h")).agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") >= minDocs)
@@ -685,11 +685,11 @@ object Dedup {
   def scrubSpans(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 8, minDocs: Long = 2): DataFrame = {
     // wins feeds both the doc-frequency count and the coverage semi-join;
-    // persist the fixed-width (id, wpos, key) rows so the explode+md5
-    // pass runs once, not per consumer (columnar-cached longs — a
-    // fraction of the source text it would otherwise re-scan).
-    val wins = Rounds.persist(posSpanWindows(docs, idCol, textCol, n)
-      .select(col(idCol), col("wpos"), spanKey(col("span")).as("__h")))
+    // pin the fixed-width (id, wpos, key) rows so the explode+md5 pass
+    // runs once, not per consumer (a fraction of the source text it
+    // would otherwise re-scan).
+    val wins = Rounds.checkpoint(posSpanWindows(docs, idCol, textCol, n)
+      .select(col(idCol), col("wpos"), spanKey(col("span")).as("__h")), eager = false)
     val heavy = wins.select(col(idCol), col("__h")).distinct()
       .groupBy(col("__h")).agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") >= minDocs)
@@ -754,11 +754,11 @@ object Dedup {
     // and n_a counts informative rows (duplicates included) in both.
     require(maxDf < Int.MaxValue, "maxDf must fit an Int buffer cap")
     val boundedCollect = udaf(new BoundedCollectAggregator((maxDf + 1).toInt))
-    val g = Rounds.persist(docs.select(col(idCol).cast("long").as("doc_id"),
+    val g = Rounds.checkpoint(docs.select(col(idCol).cast("long").as("doc_id"),
         explode(graft.functions.textnative
           .shingle_md5_keys(col(textCol), n)).as("k"))
       .groupBy(col("k")).agg(boundedCollect(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) <= maxDf))
+      .filter(size(col("ds")) <= maxDf), eager = false)
     val sizes = g.select(explode(col("ds")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_a"))
     val ds = col("ds")
@@ -805,9 +805,9 @@ object Dedup {
       n: Int = 3, minJaccard: Double = 0.5): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1, "minJaccard in (0,1]")
     import org.apache.spark.sql.expressions.Window
-    val toks = Rounds.persist(docs.select(col(idCol).cast("long").as("doc_id"),
+    val toks = Rounds.checkpoint(docs.select(col(idCol).cast("long").as("doc_id"),
         explode(array_distinct(graft.functions.textnative
-          .shingle_md5_keys(col(textCol), n))).as("tok")))
+          .shingle_md5_keys(col(textCol), n))).as("tok")), eager = false)
     val dfq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val byDoc = Window.partitionBy(col("doc_id"))
       .orderBy(col("df"), col("tok"))
@@ -823,8 +823,8 @@ object Dedup {
       .join(pfx.select(col("tok"), col("doc_id").as("b")), Seq("tok"))
       .filter(col("a") < col("b"))
       .select(col("a"), col("b")).distinct()
-    val sigs = Rounds.persist(docs.select(col(idCol).cast("long").as("doc_id"),
-        graft.functions.textnative.shingle_hashes(col(textCol), n).as("sh")))
+    val sigs = Rounds.checkpoint(docs.select(col(idCol).cast("long").as("doc_id"),
+        graft.functions.textnative.shingle_hashes(col(textCol), n).as("sh")), eager = false)
     cand
       .join(sigs.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
       .join(sigs.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
@@ -881,7 +881,7 @@ object Dedup {
         "envelope [0,180]")
     require(k >= 1 && iters >= 1, "k and iters must be >= 1")
     require(maxClusterSize >= 2, "maxClusterSize must be >= 2")
-    val assigned = Rounds.persist(Similarity.kmeansAssignments(emb, k, iters))
+    val assigned = Rounds.checkpoint(Similarity.kmeansAssignments(emb, k, iters), eager = false)
     val dups =
       semanticDupPairs(assigned, tauNum, tauDen, maxClusterSize, dim)
         .groupBy(col("idb")).agg(count(lit(1)).as("n_dup_lower"))
@@ -943,7 +943,7 @@ object Dedup {
       // persisted: b, aSmall, and reps all read this frame — without it
       // the LSH projection + size join recompute once per branch (the
       // bm25 lesson this file already cites)
-      val sized = Rounds.persist(cells.join(cellSizes, Seq("cid", "__sub")))
+      val sized = Rounds.checkpoint(cells.join(cellSizes, Seq("cid", "__sub")), eager = false)
       val b = sized.select(col("cid"), col("__sub"), col("__sn"),
         col("vec_id").as("idb"), col("qv").as("qb"))
       // in-cap cells: exact all-pairs, as in the unguarded path
@@ -1187,19 +1187,19 @@ object Dedup {
     // element_at(rks, j) = rank identifying tokens [pos, pos + 2^(K0+j-1))
     val nRk = K - K0 + 1 // top entry: width 2^K, the E-coded suffix id
     // 1. prune to positions whose minLen-window recurs, and their docs
-    val wins = Rounds.persist(posSpanWindows(docs, idCol, textCol, minLen)
+    val wins = Rounds.checkpoint(posSpanWindows(docs, idCol, textCol, minLen)
       .select(col(idCol).as("doc"), col("wpos").as("pos"),
-        spanKey(col("span")).as("__h")))
+        spanKey(col("span")).as("__h")), eager = false)
     val heavy = wins.groupBy(col("__h")).agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= 2).select(col("__h"))
     val p0 = Rounds.checkpoint(wins.join(heavy, Seq("__h"), "left_semi")
       .select(col("doc"), col("pos")))
     Rounds.free(wins)
     val candDocs = p0.select(col("doc")).distinct()
-    val tk = Rounds.persist(docs
+    val tk = Rounds.checkpoint(docs
       .select(col(idCol).as("doc"), split(trim(col(textCol)), "\\s+").as("tk"))
       .join(candDocs, Seq("doc"), "left_semi")
-      .select(col("doc"), col("tk"), size(col("tk")).as("len")))
+      .select(col("doc"), col("tk"), size(col("tk")).as("len")), eager = false)
     val toks = tk.select(col("doc"), col("len"),
       posexplode(col("tk")).as(Seq("pos", "tok")))
     // 2. rank tables, seeded at width 2^K0 directly from the token arrays
@@ -1225,11 +1225,9 @@ object Dedup {
       Rounds.free(ranks)
       ranks = next
     }
-    // ranks must outlive the loops below: the last round is never freed
-    val rankT = Rounds.persist(ranks)
     // 3. per-member window-id ARRAY for every depth in [minLen, cap] —
     // the r15 search rewrite. The r14 lockstep binary search paid
-    // levels x ceil(log2 range) JOBS, each a g x rankT join plus a gid
+    // levels x ceil(log2 range) JOBS, each a g x rank-table join plus a gid
     // window plus a checkpoint; at the duplicated-region frame sizes this
     // op actually sees (11.5k member positions, 22.5k candidate-doc
     // tokens at sf0.1) that cost was ~100 jobs of pure fixed overhead,
@@ -1249,18 +1247,18 @@ object Dedup {
       .max
     // Gather via ONE per-doc rank array + slice (r15 optimization): the
     // previous form exploded every member position × (J+1) offsets and
-    // equi-joined rankT — a (J+1)-fold shuffle fan-out that re-shipped
+    // equi-joined the rank table — a (J+1)-fold shuffle fan-out that re-shipped
     // each rank row once per anchor that covers it (the fattest job
     // block of the op). Candidate docs' ranks instead collect into one
     // position-ordered per-doc array (bounded by DOC length — the same
-    // envelope the `tk` token arrays already occupy, and rankT is
+    // envelope the `tk` token arrays already occupy, and the rank table is
     // already pruned to candidate docs), each member slices its
     // [pos, pos+J] window out locally, and the only exchanges left are
     // one groupBy(doc) and one doc-keyed join. Same rks values, same
     // ids — measured at sf0.1 (isolated A/B, rows bit-identical):
     // dedup_max_repeats 8.94 → 8.17 s, dedup_span_keepfirst_maximal
     // 9.01 → 8.30 s.
-    val docArr = rankT.groupBy(col("doc"))
+    val docArr = ranks.groupBy(col("doc"))
       .agg(max(col("len")).as("len"),
         transform(array_sort(collect_list(struct(col("pos"), col("rks")))),
           x => x("rks")).as("__arr"))
@@ -1269,36 +1267,29 @@ object Dedup {
         slice(col("__arr"), col("pos") + 1, lit(J + 1)).as("__rwin"))
     // __rwin is 1-indexed by offset: element j holds rks(pos + j - 1)
     val own = element_at(col("__rwin"), lit(1))
-    def idAt(d: Int): Column = {
+    // One id per depth d in [minLen, cap]: id(d) = md5(rank_kE(pos) |
+    // rank_kE(pos + off) | d) while the window fits the doc, else the
+    // E-coded suffix id. ONE lambda over a literal (d, off + 1, kE index)
+    // table computes them all: spelled out as an array of per-depth md5
+    // trees (~97 at the defaults) the projection grew past the JVM's
+    // 64 KB generated-method limit, and its whole stage ran interpreted.
+    val depths = typedLit((minLen to cap).map { d =>
       val kE = 31 - Integer.numberOfLeadingZeros(d)
-      val off = d - (1 << kE)
-      val kIdx = kE - K0 + 1
-      when(col("len") - col("pos") >= d,
-        md5(concat(element_at(own, kIdx), lit("|"),
-          element_at(element_at(col("__rwin"), lit(off + 1)), kIdx),
-          lit("|"), lit(d.toString))))
-        .otherwise(concat(lit("E|"), element_at(own, lit(nRk))))
-    }
-    // Known, measured tradeoff: the (cap − minLen + 1)-element id array
-    // (~97 md5 trees in one projection at the defaults) exceeds the JVM's
-    // 64 KB generated-method limit, so Spark logs "Failed to compile …
-    // Code grows beyond 64 KB" and falls back to interpreted eval FOR
-    // THIS PROJECTION ONLY. That is accounted for in the receipts: the
-    // 30.7 → 20.6 s same-host win and the 100× ScaleProbe ratio (4.2 on
-    // 100× data) both include the fallback, and the frame it evaluates
-    // is the pruned duplicated-region footprint (member positions), never
-    // the corpus — interpreted md5 there is bounded by dup density, not
-    // data size. Chunking the array across separate selects does not
-    // help: whole-stage codegen re-fuses consecutive projections into the
-    // same oversized method.
+      (d, d - (1 << kE) + 1, kE - K0 + 1)
+    })
     val withIds = gath.select(col("doc"), col("pos"), col("len"),
-      array((minLen to cap).map(idAt): _*).as("ids"))
+      transform(depths, x =>
+        when(col("len") - col("pos") >= x("_1"),
+          md5(concat(element_at(own, x("_3")), lit("|"),
+            element_at(element_at(col("__rwin"), x("_2")), x("_3")),
+            lit("|"), x("_1").cast("string"))))
+          .otherwise(concat(lit("E|"), element_at(own, lit(nRk))))).as("ids"))
     // level-0 groups: occurrence classes of the minLen-window id
     var g = Rounds.checkpoint(withIds.select(
       md5(concat(element_at(col("ids"), 1), lit("#"), lit(minLen)))
         .as("gid"),
       col("doc"), col("pos"), col("len"), col("ids")))
-    Rounds.free(rankT) // gather was its last consumer
+    Rounds.free(ranks) // gather was its last consumer
     val wg = org.apache.spark.sql.expressions.Window.partitionBy(col("gid"))
     val emittedLevels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var level = 0
@@ -1471,8 +1462,8 @@ object Dedup {
     * Output: (idCol, text_clean, n_tokens, n_removed) for every doc. */
   def keepFirstSpans(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 8): DataFrame = {
-    val wins = Rounds.persist(posSpanWindows(docs, idCol, textCol, n)
-      .select(col(idCol), col("wpos"), spanKey(col("span")).as("__h")))
+    val wins = Rounds.checkpoint(posSpanWindows(docs, idCol, textCol, n)
+      .select(col(idCol), col("wpos"), spanKey(col("span")).as("__h")), eager = false)
     val firsts = wins.groupBy(col("__h"))
       .agg(count(lit(1)).as("__occ"),
         min(struct(col(idCol), col("wpos"))).as("__w"))

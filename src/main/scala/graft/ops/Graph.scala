@@ -52,11 +52,11 @@ object Graph {
     * Each triangle a<b<c is found exactly once: wedges (a→b, b→c) from
     * the oriented edge set close iff (a→c) is also an edge — two
     * equi-joins, no candidate pair materialized twice. */
-  def triangleStats(edges: DataFrame): DataFrame = {
+  def triangleStats(e: DataFrame): DataFrame = {
     // five plan references to the edge list (three join legs + two
-    // tallies): materialize once so an expensive upstream edge build
-    // (join + support aggregate) doesn't re-run per branch
-    val e = Rounds.persist(edges)
+    // tallies): the caller pins it (graph_triangles passes the pinned
+    // coPurchaseEdges), so an expensive upstream edge build (join +
+    // support aggregate) doesn't re-run per branch
     val e1 = e.select(col("a").as("x"), col("b").as("y"))
     val e2 = e.select(col("a").as("y"), col("b").as("z"))
     val e3 = e.select(col("a").as("x"), col("b").as("z"))
@@ -75,8 +75,9 @@ object Graph {
     * triangle once; one explode credits its three corners, so T(v) is one
     * keyed count — no per-node neighborhood materialization. Integer
     * counts, one IEEE division → hash-gates. */
-  def clusteringCoefficient(edges: DataFrame): DataFrame = {
-    val e = Rounds.persist(edges)
+  def clusteringCoefficient(e: DataFrame): DataFrame = {
+    // five references to the edge list: the caller pins it, as for
+    // triangleStats
     val e1 = e.select(col("a").as("x"), col("b").as("y"))
     val e2 = e.select(col("a").as("y"), col("b").as("z"))
     val e3 = e.select(col("a").as("x"), col("b").as("z"))
@@ -130,7 +131,7 @@ object Graph {
     * (x→u, x→v) take u before v in (degree, id) order; the closing edge
     * u→v is then guaranteed to be oriented u→v, one equi-join away. */
   def triangleCountByDegree(edges: DataFrame): DataFrame = {
-    val o = Rounds.persist(orientByDegree(edges))
+    val o = Rounds.checkpoint(orientByDegree(edges), eager = false)
     val e1 = o.select(col("x"), col("y").as("u"), col("dy").as("du"))
     val e2 = o.select(col("x"), col("y").as("v"), col("dy").as("dv"))
     val wedges = e1.join(e2, "x")
@@ -158,10 +159,10 @@ object Graph {
     * small at any corpus size. */
   def randomWalks(edges: DataFrame, len: Int, seed: Long): DataFrame = {
     require(len >= 1 && len <= 16, "len in [1,16] (plan grows per step)")
-    val adj = Rounds.persist(edges.select(col("a").as("node"), col("b").as("nbr"))
+    val adj = Rounds.checkpoint(edges.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(edges.select(col("b").as("node"), col("a").as("nbr")))
       .groupBy(col("node"))
-      .agg(sort_array(collect_list(col("nbr"))).as("nbrs")))
+      .agg(sort_array(collect_list(col("nbr"))).as("nbrs")), eager = false)
     var walks = adj.select(col("node").as("start"), col("node").as("cur"),
       col("node").cast("string").as("path"))
     for (step <- 1 to len) {
@@ -208,8 +209,9 @@ object Graph {
     * keep lineage linear). */
   def bfsDistances(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
-    bfsOverSym(Rounds.persist(edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))), seeds, rounds)
+    bfsOverSym(Rounds.checkpoint(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))), eager = false),
+      seeds, rounds)
   }
 
   /** [[bfsDistances]] over an already-symmetrized (and ideally
@@ -415,8 +417,8 @@ object Graph {
     * bounded recurrence either way). Output is one row of exact
     * integers: (start_node, far_node, diameter_lb, n_reached). */
   def diameterDoubleSweep(edges: DataFrame, rounds: Int): DataFrame = {
-    val sym = Rounds.persist(edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))))
+    val sym = Rounds.checkpoint(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))), eager = false)
     val u = edges.agg(least(min(col("a")), min(col("b"))).as("node"))
     val d1 = bfsOverSym(sym, u, rounds)
     // farthest node, tie to the smallest id: max over (dist, -node)
@@ -458,8 +460,8 @@ object Graph {
   def closenessBounded(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 10, "rounds in [1,10]")
-    val sym = Rounds.persist(edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))))
+    val sym = Rounds.checkpoint(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))), eager = false)
     perSeedDistances(sym, seeds, rounds).groupBy(col("seed"))
       .agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("sum_dist"))
       .select(col("seed"), col("n_reached"), col("sum_dist"),
@@ -484,8 +486,8 @@ object Graph {
     * no per-source sequential pass, no all-pairs. Seeds bound total cost
     * linearly (the sampling IS the estimator); depth bounds the ball. */
   def betweennessBounded(edges: DataFrame, seeds: DataFrame): DataFrame = {
-    val sym = Rounds.persist(edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))))
+    val sym = Rounds.checkpoint(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))), eager = false)
     // localCheckpoint (not persist) on every per-round frame: each σ/δ
     // round stacks joins on the previous round's lineage, and persist
     // alone leaves the optimizer re-analyzing the whole chain at every
@@ -583,7 +585,7 @@ object Graph {
     require(k >= 3 && k <= 16, "k in [3,16]")
     require(rounds >= 1 && rounds <= 8, "rounds in [1,8]")
     def support(e: DataFrame): DataFrame = {
-      val o = Rounds.persist(orientByDegree(e))
+      val o = Rounds.checkpoint(orientByDegree(e), eager = false)
       val e1 = o.select(col("x"), col("y").as("u"), col("dy").as("du"))
       val e2 = o.select(col("x"), col("y").as("v"), col("dy").as("dv"))
       val tri = e1.join(e2, "x")
@@ -627,9 +629,9 @@ object Graph {
     * before anything leaves the aggregate. */
   def neighborJaccard(edges: DataFrame, minCommon: Long = 2,
       minJaccard: Double = 0.25): DataFrame = {
-    val sym = Rounds.persist(edges.select(col("a").as("n"), col("b").as("m"))
-      .unionAll(edges.select(col("b").as("n"), col("a").as("m"))))
-    val deg = Rounds.persist(sym.groupBy(col("n")).agg(count(lit(1)).as("d")))
+    val sym = Rounds.checkpoint(edges.select(col("a").as("n"), col("b").as("m"))
+      .unionAll(edges.select(col("b").as("n"), col("a").as("m"))), eager = false)
+    val deg = Rounds.checkpoint(sym.groupBy(col("n")).agg(count(lit(1)).as("d")), eager = false)
     val common = sym.select(col("n"), col("m").as("x"))
       .join(sym.select(col("n").as("n2"), col("m").as("y")), col("n") === col("n2"))
       .filter(col("x") < col("y"))
@@ -666,8 +668,8 @@ object Graph {
     * assignment [[labelPropagation]] aggregates and [[modularity]]
     * scores. */
   def labelPropagationNodes(edges: DataFrame, rounds: Int): DataFrame = {
-    val sym = Rounds.persist(edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))))
+    val sym = Rounds.checkpoint(edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))), eager = false)
     val nodes = sym.select(col("src").as("node")).distinct()
     minLabelRounds(sym, nodes, rounds)
   }
@@ -1144,18 +1146,19 @@ object Graph {
     * state. */
   def sccBounded(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
-    val e = Rounds.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nodes = Rounds.persist(e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct())
+    val e = Rounds.checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      eager = false)
+    val nodes = Rounds.checkpoint(e.select(col("src").as("node"))
+      .unionAll(e.select(col("dst").as("node"))).distinct(), eager = false)
     val adj = e.select(lit(0).as("t"), col("src"), col("dst"))
       .unionAll(e.select(lit(1).as("t"),
         col("dst").as("src"), col("src").as("dst")))
     val tagged = nodes.select(lit(0).as("t"), col("node"))
       .unionAll(nodes.select(lit(1).as("t"), col("node")))
-    val joined = Rounds.persist(minLabelRounds(adj, tagged, rounds, tags = Seq("t"))
+    val joined = Rounds.checkpoint(minLabelRounds(adj, tagged, rounds, tags = Seq("t"))
       .groupBy(col("node"))
       .agg(min(when(col("t") === 0, col("lbl"))).as("f"),
-        min(when(col("t") === 1, col("lbl"))).as("b")))
+        min(when(col("t") === 1, col("lbl"))).as("b")), eager = false)
     val unresolved = broadcast(joined.filter(col("f") =!= col("b"))
       .agg(count(lit(1)).as("n_unresolved")))
     joined.filter(col("f") === col("b"))
@@ -1281,7 +1284,7 @@ object Graph {
     * window. Returns (community, l_c, d_c, contrib, q_total). */
   def modularity(edges: DataFrame, nodeLabels: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lbl = Rounds.persist(nodeLabels)
+    val lbl = Rounds.checkpoint(nodeLabels, eager = false)
     val labeled = edges
       .join(lbl.select(col("node").as("a"), col("lbl").as("la")), Seq("a"))
       .join(lbl.select(col("node").as("b"), col("lbl").as("lb")), Seq("b"))
@@ -1343,7 +1346,8 @@ object Graph {
   def louvainMoveLabels(edges: DataFrame): DataFrame = {
     val sym = edges.select(col("a").as("i"), col("b").as("j"))
       .unionAll(edges.select(col("b").as("i"), col("a").as("j")))
-    val deg = Rounds.persist(sym.groupBy(col("i").as("node")).agg(count(lit(1)).as("d")))
+    val deg = Rounds.checkpoint(sym.groupBy(col("i").as("node")).agg(count(lit(1)).as("d")),
+      eager = false)
     val mRow = broadcast(edges.agg(count(lit(1)).as("__m")))
     val gains = sym
       .join(deg.select(col("node").as("i"), col("d").as("di")), Seq("i"))
@@ -1451,20 +1455,20 @@ object Graph {
       : (DataFrame, DataFrame, DataFrame) = {
     val d38 = "decimal(38,0)"
     val l1 = louvainMoveLabels(edges)
-    val le = Rounds.persist(edges
+    val le = Rounds.checkpoint(edges
       .join(l1.select(col("node").as("a"), col("lbl").as("la")), Seq("a"))
       .join(l1.select(col("node").as("b"), col("lbl").as("lb")), Seq("b"))
       .select(least(col("la"), col("lb")).as("ca"),
         greatest(col("la"), col("lb")).as("cb"))
-      .groupBy(col("ca"), col("cb")).agg(count(lit(1)).as("w")))
+      .groupBy(col("ca"), col("cb")).agg(count(lit(1)).as("w")), eager = false)
     val mRow = broadcast(edges.agg(count(lit(1)).as("__m")))
     val cross = le.filter(col("ca") =!= col("cb"))
     val symW = cross.select(col("ca").as("i"), col("cb").as("j"), col("w"))
       .unionAll(cross.select(col("cb").as("i"), col("ca").as("j"), col("w")))
-    val degW = Rounds.persist(symW.select(col("i"), col("w"))
+    val degW = Rounds.checkpoint(symW.select(col("i"), col("w"))
       .unionAll(le.filter(col("ca") === col("cb"))
         .select(col("ca").as("i"), (col("w") * 2).as("w")))
-      .groupBy(col("i").as("snode")).agg(sum(col("w")).as("d")))
+      .groupBy(col("i").as("snode")).agg(sum(col("w")).as("d")), eager = false)
     val gains = symW
       .join(degW.select(col("snode").as("i"), col("d").as("di")), Seq("i"))
       .join(degW.select(col("snode").as("j"), col("d").as("dj")), Seq("j"))
@@ -1523,16 +1527,17 @@ object Graph {
     * and one left join relabels. Returns (node, lbl, d) — the
     * [[louvainTwoLevelLabels]] shape, so [[louvainRollup]] and
     * [[modularity]] compose unchanged. */
-  def leidenRefineLabels(edges0: DataFrame, maxRounds: Int = 24,
+  def leidenRefineLabels(edges: DataFrame, maxRounds: Int = 24,
       edgesCanonical: Boolean = false): DataFrame = {
-    // Pin the edge frame once: the Louvain chain plus the refinement
-    // references it ~6 times (symmetrization, m, coarse build, the
-    // within-community restriction, the rollup's two label attaches),
-    // and an UPSTREAM edge build — often itself a join+aggregate — would
-    // re-run per reference (the pagerank 82s -> 3s lesson; measured here
-    // 24.6 s -> mid-teens at sf0.1 on the co-purchase build).
-    val edges = Rounds.persist(edges0)
-    // localCheckpoint, not just the chain's internal persists: the
+    // The caller pins the edge frame (the graph queries pass the pinned
+    // coPurchaseEdges): the Louvain chain plus the refinement references
+    // it ~6 times (symmetrization, m, coarse build, the within-community
+    // restriction, the rollup's two label attaches), and an UPSTREAM
+    // edge build — often itself a join+aggregate — would re-run per
+    // reference (the pagerank 82s -> 3s lesson; measured here 24.6 s ->
+    // mid-teens at sf0.1 on the co-purchase build).
+    //
+    // The labels come checkpointed, not just over the chain's pins: the
     // refinement fires MANY actions (the within restriction, each star
     // round, the final attaches) and every one re-OPTIMIZES the full
     // Louvain logical tree (~5 s of driver time per action at sf0.1,
@@ -1586,9 +1591,9 @@ object Graph {
     * label of either endpoint, counts them. Edge-scale work becomes
     * within-frame-scale; the oracle recomputes the rollup from scratch
     * and stays green. */
-  def leidenRefine(edges0: DataFrame, maxRounds: Int = 24,
+  def leidenRefine(edges: DataFrame, maxRounds: Int = 24,
       edgesCanonical: Boolean = false): DataFrame = {
-    val edges = Rounds.persist(edges0)
+    // `edges` comes pinned, as for leidenRefineLabels
     val l = louvainTwoLevelLabels(edges) // returns localCheckpoint'ed
     val (labels, within) = leidenCore(edges, l, maxRounds, pinWithin = true,
       edgesCanonical = edgesCanonical)
@@ -1628,9 +1633,9 @@ object Graph {
     * row. Returns (n_comm_louvain, n_comm_leiden, n_disconnected,
     * all_connected, q_scaled_louvain, q_scaled_leiden,
     * q_non_decrease). */
-  def leidenQuality(edges0: DataFrame, maxRounds: Int = 24,
+  def leidenQuality(edges: DataFrame, maxRounds: Int = 24,
       edgesCanonical: Boolean = false): DataFrame = {
-    val edges = Rounds.persist(edges0)
+    // `edges` comes pinned, as for leidenRefineLabels
     val lou = louvainTwoLevelLabels(edges) // returns localCheckpoint'ed
     def withinOf(lf: DataFrame): DataFrame = edges
       .join(lf.select(col("node").as("a"), col("lbl").as("la")), Seq("a"))
@@ -1697,17 +1702,14 @@ object Graph {
     }
     val q1 = qScaled(withinLou, lou, "q_scaled_louvain", "n_comm_louvain")
     val q2 = qScaled(withinLei, leiden, "q_scaled_leiden", "n_comm_leiden")
-    val out = Rounds.checkpoint(q1.crossJoin(q2).crossJoin(broadcast(disc))
+    q1.crossJoin(q2).crossJoin(broadcast(disc))
       .select(col("n_comm_louvain"), col("n_comm_leiden"),
         col("n_disconnected").cast("long").as("n_disconnected"),
         (col("n_disconnected") === 0).as("all_connected"),
         col("q_scaled_louvain").cast("long").as("q_scaled_louvain"),
         col("q_scaled_leiden").cast("long").as("q_scaled_leiden"),
         (col("q_scaled_leiden") >= col("q_scaled_louvain"))
-          .as("q_non_decrease")))
-    // the result is ONE row, pinned above: the edge cache is dead
-    Rounds.free(edges)
-    out
+          .as("q_non_decrease"))
   }
 
   def pagerank(edges: DataFrame, srcCol: String, dstCol: String,
@@ -1718,15 +1720,14 @@ object Graph {
     // the node list in every rank rebuild: WITHOUT materialization the
     // upstream edge construction (often a join+aggregate itself) re-runs
     // for every reference — measured 82 s → 3 s at sf0.1 from these three
-    // persists alone. MEMORY_AND_DISK keeps lineage (recomputable on
-    // executor loss, unlike a checkpoint — the trade in the Rounds
-    // scaladoc); the query's scope frees them.
-    val ed = Rounds.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nodes = Rounds.persist(ed.select(col("src").as("node_id"))
-      .unionAll(ed.select(col("dst").as("node_id"))).distinct())
+    // pins alone; the query's scope frees them.
+    val ed = Rounds.checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      eager = false)
+    val nodes = Rounds.checkpoint(ed.select(col("src").as("node_id"))
+      .unionAll(ed.select(col("dst").as("node_id"))).distinct(), eager = false)
     val n1 = broadcast(nodes.agg(count(lit(1)).cast("double").as("__n")))
-    val outdeg = Rounds.persist(ed.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("__od")))
+    val outdeg = Rounds.checkpoint(ed.groupBy(col("src"))
+      .agg(count(lit(1)).cast("double").as("__od")), eager = false)
     val base = 1.0 - damping // same IEEE op as the oracle's (1 - d)
     var pr = nodes.crossJoin(n1)
       .select(col("node_id"), (lit(1.0) / col("__n")).as("pr"))
@@ -1774,13 +1775,13 @@ object Graph {
   def pagerankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iters: Int, damping: Double): DataFrame = {
     require(iters >= 1 && iters <= 10, "iters in [1,10] (plan size grows per iter)")
-    val ed = Rounds.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("double").as("__w")))
-    val nodes = Rounds.persist(ed.select(col("src").as("node_id"))
-      .unionAll(ed.select(col("dst").as("node_id"))).distinct())
+    val ed = Rounds.checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+        col(weightCol).cast("double").as("__w")), eager = false)
+    val nodes = Rounds.checkpoint(ed.select(col("src").as("node_id"))
+      .unionAll(ed.select(col("dst").as("node_id"))).distinct(), eager = false)
     val n1 = broadcast(nodes.agg(count(lit(1)).cast("double").as("__n")))
-    val outw = Rounds.persist(ed.groupBy(col("src"))
-      .agg(sum(col("__w")).as("__ow")))
+    val outw = Rounds.checkpoint(ed.groupBy(col("src"))
+      .agg(sum(col("__w")).as("__ow")), eager = false)
     val base = 1.0 - damping
     var pr = nodes.crossJoin(n1)
       .select(col("node_id"), (lit(1.0) / col("__n")).as("pr"))
@@ -1814,20 +1815,21 @@ object Graph {
   def personalizedPagerank(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, iters: Int, damping: Double): DataFrame = {
     require(iters >= 1 && iters <= 10, "iters in [1,10] (plan size grows per iter)")
-    val ed = Rounds.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nodes = Rounds.persist(ed.select(col("src").as("node_id"))
-      .unionAll(ed.select(col("dst").as("node_id"))).distinct())
-    val sg = Rounds.persist(nodes
-      .join(seeds.select(col("node").as("node_id")).distinct(), Seq("node_id")))
+    val ed = Rounds.checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      eager = false)
+    val nodes = Rounds.checkpoint(ed.select(col("src").as("node_id"))
+      .unionAll(ed.select(col("dst").as("node_id"))).distinct(), eager = false)
+    val sg = Rounds.checkpoint(nodes
+      .join(seeds.select(col("node").as("node_id")).distinct(), Seq("node_id")), eager = false)
     val sn = broadcast(sg.agg(count(lit(1)).cast("double").as("__sn")))
-    val restart = Rounds.persist(nodes
+    val restart = Rounds.checkpoint(nodes
       .join(sg.withColumn("__isSeed", lit(1)), Seq("node_id"), "left")
       .crossJoin(sn)
       .select(col("node_id"),
         when(col("__isSeed").isNotNull, lit(1.0) / col("__sn"))
-          .otherwise(lit(0.0)).as("r")))
-    val outdeg = Rounds.persist(ed.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("__od")))
+          .otherwise(lit(0.0)).as("r")), eager = false)
+    val outdeg = Rounds.checkpoint(ed.groupBy(col("src"))
+      .agg(count(lit(1)).cast("double").as("__od")), eager = false)
     val base = 1.0 - damping
     var pr = restart.select(col("node_id"), col("r").as("pr"))
     for (_ <- 1 to iters) {
@@ -1863,20 +1865,16 @@ object Graph {
     * (all norms are positive scalings).
     *
     * Same materialization discipline as pagerank: the edge frame and the
-    * per-side contribution frames persist; the iteration frames are
+    * per-side contribution frames are pinned; the iteration frames are
     * referenced twice each (next side's join + normalizer) and stay
     * plan-bounded because iters ≤ 10. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, edgesDistinct: Boolean = false): DataFrame = {
+      iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 10, "iters in [1,10] (plan size grows per iter)")
-    // edgesDistinct = the caller guarantees the (src, dst) stream is
-    // already duplicate-free, so the dedup exchange+aggregate here would
-    // re-shuffle the edge frame to remove nothing (r16: the graph_hits
-    // site feeds an injective rename of an already-distinct pair frame).
-    val ed0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ed = Rounds.persist(if (edgesDistinct) ed0 else ed0.distinct())
-    val nodes = Rounds.persist(ed.select(col("src").as("node_id"))
-      .unionAll(ed.select(col("dst").as("node_id"))).distinct())
+    val ed = Rounds.checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .distinct(), eager = false)
+    val nodes = Rounds.checkpoint(ed.select(col("src").as("node_id"))
+      .unionAll(ed.select(col("dst").as("node_id"))).distinct(), eager = false)
     var hub = nodes.select(col("node_id"), lit(1.0).as("hub"))
     var auth = nodes.select(col("node_id"), lit(1.0).as("auth"))
     // localCheckpoint each half-round (the kCorePeel pattern): with

@@ -511,13 +511,17 @@ object Multimodal {
     // the same ascii() code point.
     val px = (0 until 64).map(i => ascii(expr(
       s"CAST(substr(media, 1 + ($i * n_bytes) div 64, 1) AS STRING)"))
-      .cast("long").as(s"__p$i"))
+      .cast("double"))
     val grid = media.filter(col("n_bytes") > 0)
-      .select(Seq(col("media_id")) ++ px: _*)
-    val coeffs = (0 until 16).map { k =>
-      (0 until 64).map(i => col(s"__p$i") * lit(w(k)(i))).reduce(_ + _)
-        .as(s"__f$k")
-    }
+      .select(col("media_id"), array(px: _*).as("__px"))
+    // Each coefficient is one codegen'd left-to-right dot product (16
+    // spelled-out 64-term `+` chains in one projection failed whole-stage
+    // codegen's compile and ran interpreted). Its doubles are the chain's
+    // bits: it adds the same products in the same order, and its 0.0 seed
+    // changes nothing, since the first product p0·w0 is never -0.0 (the
+    // (0, 0) cell's DCT weight is positive in every coefficient).
+    val coeffs = (0 until 16).map(k =>
+      graft.functions.native.dot_product(col("__px"), typedLit(w(k))).as(s"__f$k"))
     val withF = grid.select(Seq(col("media_id")) ++ coeffs: _*)
     // Threshold on 6-decimal-quantized coefficients: the weight-literal
     // sums carry ±1e-14 folding residue (a CONSTANT grid's non-DC

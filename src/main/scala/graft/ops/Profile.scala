@@ -207,19 +207,18 @@ object Profile {
     * expressions from those integers (identical bits on both engines),
     * and the χ² total accumulates in DECIMAL before one final cast —
     * the psiDrift/modularity gating pattern. Plan: one keyed count over
-    * the pair, two broadcast marginal joins, a |cells|-frame window —
-    * everything after the first aggregate is cells-scale.
+    * the pair, two broadcast marginal joins, and the total as a 1-row
+    * aggregate crossed back — everything after the first aggregate is
+    * cells-scale, and no step gathers the cells into one task.
     * Returns (a, b, o, e, contrib, chi2_total, dof). */
   def chi2(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = Rounds.persist(df.groupBy(col(aCol).as("a"), col(bCol).as("b"))
-      .agg(count(lit(1)).as("o")))
+    val cells = Rounds.checkpoint(df.groupBy(col(aCol).as("a"), col(bCol).as("b"))
+      .agg(count(lit(1)).as("o")), eager = false)
     val rowT = cells.groupBy(col("a")).agg(sum(col("o")).as("ra"))
     val colT = cells.groupBy(col("b")).agg(sum(col("o")).as("cb"))
     val tot = broadcast(cells.agg(sum(col("o")).as("n"),
       countDistinct(col("a")).as("na"), countDistinct(col("b")).as("nb")))
-    val all = Window.partitionBy(lit(1))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cells.join(broadcast(rowT), Seq("a")).join(broadcast(colT), Seq("b"))
+    val scored = cells.join(broadcast(rowT), Seq("a")).join(broadcast(colT), Seq("b"))
       .crossJoin(tot)
       // ra·cb grows as N² — exact DECIMAL product, ONE rounding to
       // double, then the IEEE division (oracle: HUGEINT product).
@@ -228,8 +227,9 @@ object Profile {
           col("n").cast("double"))
       .withColumn("contrib",
         (col("o") - col("e")) * (col("o") - col("e")) / col("e"))
-      .withColumn("chi2_total",
-        sum(col("contrib").cast("decimal(28,12)")).over(all).cast("double"))
+    val total = scored
+      .agg(sum(col("contrib").cast("decimal(28,12)")).cast("double").as("chi2_total"))
+    scored.crossJoin(broadcast(total))
       .select(col("a"), col("b"), col("o"), col("e"), col("contrib"),
         col("chi2_total"),
         ((col("na") - 1) * (col("nb") - 1)).as("dof"))
@@ -804,9 +804,9 @@ object Profile {
   def decileLift(df: DataFrame, keyCol: String, valueCol: Column,
       n: Int = 10): DataFrame = {
     require(n >= 2 && n <= 1000, "n in [2,1000]")
-    val v = Rounds.persist(df.select(col(keyCol).as("__k"),
+    val v = Rounds.checkpoint(df.select(col(keyCol).as("__k"),
       round(valueCol * 100).cast("long").as("__c"))
-      .withColumn("__negc", -col("__c")))
+      .withColumn("__negc", -col("__c")), eager = false)
     val ranked = TwoLevelRank.rank(v, Nil, Seq("__negc"),
       expr("__k div 4096"), Seq("__k"), "__i")
     val tot = v.agg(count(lit(1)).as("__n"),

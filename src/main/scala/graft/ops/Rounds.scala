@@ -1,65 +1,50 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{CachedData, LogicalRDD}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
-/** The one owner of pinned storage: every cached frame ([[persist]]) and
-  * every local checkpoint ([[checkpoint]], [[checkpointWith]]) the
-  * operators and queries make is pinned here, and only [[free]] and a
-  * closing [[scoped]] block release one. Two rules decide when:
+/** The one owner of pinned storage: every frame the operators and
+  * queries pin is a local checkpoint ([[checkpoint]], [[checkpointWith]])
+  * made here, and only [[free]] and a closing [[scoped]] block release
+  * one. A helper read more than once is pinned lazily (`eager = false`:
+  * written by the first action that reads it, MEMORY_AND_DISK); a
+  * round of a loop is pinned eagerly or by its convergence probe. Two
+  * rules decide when a pin is released:
   *  - '''Dead helpers are freed early.''' An operator frees a helper
   *    itself, through [[free]], once the helper's last consumer has run
   *    eagerly inside the operator: a round-loop's superseded round, a
-  *    frame only the construction-time loop read.
+  *    frame only the construction-time loop read. A freed checkpoint
+  *    cannot be recomputed, so a helper the lazy result still reads is
+  *    never freed early.
   *  - '''Helpers the lazy result reads live until the scope closes.'''
   *    [[scoped]] records every pin made on its thread while it is open
   *    and frees them on close. Outside any scope a pin is never released
-  *    here: a library caller keeps what the returned frame reads, as with
-  *    a plain `persist`. `graft.Harness.materialize` opens one scope per
-  *    query, so Bench, Verify, Explain and the test sweeps free exactly
-  *    what each query pinned.
+  *    here: a library caller keeps what the returned frame reads, and
+  *    the ContextCleaner frees it once no plan reaches it.
+  *    `graft.Harness.materialize` opens one scope per query, so Bench,
+  *    Verify, Explain and the test sweeps free exactly what each query
+  *    pinned.
   *
   * Why the scope is thread-confined: queries share one session, and
-  * Spark's cache manager and persistent-RDD registry are session-global.
-  * A session-global clear (`clearCache`) or a before/after diff of the
-  * registry would release another query's LIVE pins — a cached frame
-  * that reads a freed round cannot be recomputed
+  * Spark's persistent-RDD registry is session-global. A before/after
+  * diff of the registry would release another query's LIVE pins — a
+  * frame that reads a freed checkpoint cannot be recomputed
   * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, the r16 parallel test sweeps). A
   * query is built and run on one driver thread, so a `ThreadLocal` scope
   * records exactly that query's pins; a thread pool running queries side
-  * by side gives each run its own scope. Such runs still share cache
-  * entries, in two ways, and [[free]] keeps both safe:
-  *  - '''One entry per plan.''' A second [[persist]] of a plan another
-  *    query cached returns a frame that reads the first query's entry.
-  *    Each frame [[persist]] returns is a holder of its entry, and the
-  *    entry is uncached only when its last holder lets go, so a query
-  *    whose scope closes first leaves an entry the other query still
-  *    reads.
-  *  - '''An entry inside another.''' Uncaching an entry makes Spark
-  *    clear and re-plan every entry whose plan contains it and whose
-  *    buffers are not yet loaded, even while a job is writing them (two
-  *    plans match when they differ only in column names: a `src`/`dst`
-  *    edge union and an `i`/`j` one). So an entry with no holder left
-  *    waits, as an orphan, until no held entry that contains it is still
-  *    loading; a later [[free]] releases it.
-  * Either release, made early, shows as empty results in the 8-thread
-  * sweeps: an eager checkpoint written over a cleared entry holds no
-  * rows. A plan that
-  * reads an entry without holding it (the CacheManager substitutes an
-  * entry into any plan that contains its plan) and runs past the release
-  * rebuilds the released buffers, persisted and in no entry, so every
-  * scope close clears the buffers of released entries again; a released
-  * entry has no holder.
+  * by side gives each run its own scope.
   *
-  * Why localCheckpoint, not persist, for rounds: a recurrence that reads
-  * the previous round more than once per round grows its LOGICAL plan as
-  * refs^rounds under persist (the k-core peel, 3 refs/round, OOM'd
-  * explain at rounds=8); a checkpointed frame's plan is one
-  * [[LogicalRDD]] leaf.
+  * Why a checkpoint and never a cache: a checkpoint belongs to the frame
+  * that made it. A cache entry is session-global and matched by plan, so
+  * two queries that cache one plan read one entry, and releasing an
+  * entry re-plans every entry that contains it (both showed as empty
+  * results in the 8-thread sweeps). A checkpointed frame's plan is also
+  * one [[LogicalRDD]] leaf, so a recurrence that reads the previous
+  * round more than once per round keeps a small LOGICAL plan; under a
+  * cache it grows as refs^rounds (the k-core peel, 3 refs/round, OOM'd
+  * explain at rounds=8).
   *
   * The trade: checkpoint blocks live on executor-local storage with
   * lineage TRUNCATED. They are leak-free in a long-lived session (the
@@ -68,10 +53,8 @@ import scala.jdk.CollectionConverters._
   * decommission — fails the job unrecoverably: there is no lineage to
   * recompute the lost blocks from. Right for local runs and clusters
   * with static, reliable executors; on dynamic-allocation clusters run
-  * such loops with `spark.checkpoint` to reliable storage instead, or
-  * accept the restart. The same trade holds for the lazy checkpoints
-  * operators use as composition boundaries (the MinHash signature frame
-  * in [[Dedup]]).
+  * such operators with `spark.checkpoint` to reliable storage instead,
+  * or accept the restart.
   *
   * Freeing a checkpoint: localCheckpoint registers its blocks as
   * persistent RDDs outside the cache manager, so `DataFrame.unpersist`
@@ -79,37 +62,24 @@ import scala.jdk.CollectionConverters._
   * and releases each through `GraftBridge.freeRdd`. */
 private[graft] object Rounds {
 
-  /** The pins one scope recorded, in pin order. */
+  /** What one scope recorded, in pin order. */
   private final class Scope {
-    val caches = ArrayBuffer.empty[DataFrame]
-    val checkpoints = ArrayBuffer.empty[DataFrame]
+    val pins = ArrayBuffer.empty[DataFrame]
+    /** The frames the lazy pins were made from, held (never freed) until
+      * the scope closes. A lazy pin's first readers report SQL metrics to
+      * its source's physical plan, and once one job writes the pin Spark
+      * drops the pin's lineage, so a reader still running in a concurrent
+      * stage (AQE runs them side by side) would report to metrics the GC
+      * may have taken: an ERROR "attempted to access non-existent
+      * accumulator" per metric. */
+    val sources = ArrayBuffer.empty[DataFrame]
   }
 
   private val current = new ThreadLocal[Scope]
 
-  /** Every frame [[persist]] returned, held weakly (a Dataset's equality
-    * is its identity, and a frame no longer reachable holds nothing),
-    * with the cache entry it holds, or [[Released]] once [[free]] let it
-    * go: how [[free]] tells a cache from a checkpoint and counts an
-    * entry's holders. Guarded by its own lock, as are [[orphans]] and
-    * [[retired]]. */
-  private val caches = new java.util.WeakHashMap[DataFrame, AnyRef]
-
-  /** The [[caches]] value of a freed frame. */
-  private val Released = new Object
-
-  /** Entries whose last holder let go while a loading held entry
-    * contained them, each with a frame of its plan, oldest first. */
-  private val orphans = ArrayBuffer.empty[(DataFrame, CachedData)]
-
-  /** Buffer builders of released cache entries (see the object doc). */
-  private val retired = ArrayBuffer.empty[java.lang.ref.WeakReference[AnyRef]]
-
-  /** Runs `body` in a fresh scope on this thread and releases what it
-    * pinned when `body` returns or throws: cache entries first, newest
-    * first (a cached frame may read an older one or a checkpoint), then
-    * checkpoint blocks. Non-blocking. A nested scope releases only its
-    * own pins. */
+  /** Runs `body` in a fresh scope on this thread and frees what it
+    * pinned when `body` returns or throws. Non-blocking. A nested scope
+    * frees only its own pins, so an outer pin of the same plan stays. */
   def scoped[T](body: => T): T = {
     val outer = current.get
     val scope = new Scope
@@ -117,37 +87,18 @@ private[graft] object Rounds {
     try body
     finally {
       current.set(outer)
-      scope.caches.reverseIterator.foreach(free)
-      scope.checkpoints.foreach(freeCheckpoints)
-      caches.synchronized {
-        retired.filterInPlace(_.get != null)
-        retired.foreach(b => Option(b.get).foreach(GraftBridge.clearBuffers))
-      }
+      scope.pins.foreach(free)
     }
-  }
-
-  /** Cache `df` (MEMORY_AND_DISK): for a frame read more than once whose
-    * plan stays small. The returned frame holds the plan's cache entry,
-    * a new one or the one another frame already holds, until it is freed. */
-  def persist(df: DataFrame): DataFrame = {
-    val out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    caches.synchronized {
-      // the entry's last holder may have released it since the persist
-      val entry = GraftBridge.cacheEntry(out).getOrElse {
-        out.persist(StorageLevel.MEMORY_AND_DISK)
-        GraftBridge.cacheEntry(out).orNull
-      }
-      caches.put(out, entry)
-    }
-    Option(current.get).foreach(_.caches += out)
-    out
   }
 
   /** Pin `df` as a localCheckpoint: eager by default, or lazy (written
     * by the first action that reads it). */
   def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
     val out = df.localCheckpoint(eager)
-    Option(current.get).foreach(_.checkpoints += out)
+    Option(current.get).foreach { scope =>
+      scope.pins += out
+      if (!eager) scope.sources += df
+    }
     out
   }
 
@@ -165,45 +116,11 @@ private[graft] object Rounds {
     (out, probe(out))
   }
 
-  /** Release `frame` now. When [[persist]] returned it, the frame lets
-    * go of its cache entry, and the entry is uncached once no frame holds
-    * it and no loading held entry contains it (see the object doc);
-    * otherwise the checkpoint blocks its plan reads are freed — so call
-    * it on a checkpointed frame or a projection of one, never on a cached
-    * frame's derivative. Freeing a frame twice is a no-op: the second
-    * call finds it already let go. */
-  def free(frame: DataFrame): Unit = caches.synchronized {
-    if (caches.containsKey(frame)) caches.put(frame, Released) match {
-      case entry: CachedData =>
-        orphans += frame -> entry
-        releaseOrphans()
-      case _ =>
-    } else freeCheckpoints(frame)
-  }
-
-  /** Uncaches each orphan, newest first, that no frame holds and no held
-    * entry still loading contains; drops an orphan a frame holds again. */
-  private def releaseOrphans(): Unit = {
-    val held = caches.values.asScala.collect { case e: CachedData => e }.toSeq
-    def holds(b: AnyRef) = held.exists(GraftBridge.builder(_) eq b)
-    orphans.reverseIterator.toList.foreach { case orphan @ (frame, entry) =>
-      val builder = GraftBridge.builder(entry)
-      if (holds(builder)) orphans -= orphan
-      else if (!held.exists(h => !GraftBridge.loaded(h) && h.plan.exists(_.sameResult(entry.plan)))) {
-        orphans -= orphan
-        retired += new java.lang.ref.WeakReference(builder)
-        // the plan's entry now: this one, or a re-planned copy no frame holds
-        GraftBridge.cacheEntry(frame).map(GraftBridge.builder)
-          .filterNot(holds).foreach { current =>
-            retired += new java.lang.ref.WeakReference(current)
-            frame.unpersist(blocking = false)
-          }
-      }
-    }
-  }
-
-  /** Unpersists the checkpoint blocks `frame`'s plan reads. */
-  private def freeCheckpoints(frame: DataFrame): Unit = {
+  /** Release `frame` now: unpersists the checkpoint blocks its plan
+    * reads, so call it on a checkpointed frame or a projection of one,
+    * once nothing that still runs reads it. Freeing a frame twice is a
+    * no-op: the second call finds no live blocks. */
+  def free(frame: DataFrame): Unit = {
     val sc = frame.sparkSession.sparkContext
     val live = sc.getPersistentRDDs
     ckptIds(frame).filter(live.contains).foreach(GraftBridge.freeRdd(sc, _))

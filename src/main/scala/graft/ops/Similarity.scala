@@ -691,8 +691,8 @@ object Similarity {
     // groupBy(node, cand).max pre-pass — one candidate-sized exchange
     // per round (plus one at init) retired with identical output.
     val topk = udaf(new TopKDistinctAggregator(k))
-    val emb = Rounds.persist(vectors.select(col("vec_id").cast("long").as("node"),
-      col("embedding").cast("array<double>").as("v")))
+    val emb = Rounds.checkpoint(vectors.select(col("vec_id").cast("long").as("node"),
+      col("embedding").cast("array<double>").as("v")), eager = false)
     // aggregated graph shape: (node, top: array<struct<id,score>>), k-bounded
     def topkAgg(scored: DataFrame): DataFrame =
       scored.groupBy(col("node")).agg(topk(col("cand"), col("sim")).as("top"))
@@ -727,8 +727,8 @@ object Similarity {
       // reverse-cap aggregation (its own exchange) from the checkpoint
       // (r15 perf pass; the frame is the already-k-bounded edge list,
       // N·2k rows, so caching it is strictly cheaper than re-aggregating)
-      val und = Rounds.persist(cur.select(col("node"), col("cand"))
-        .unionAll(rev.select(col("node"), col("cand"))))
+      val und = Rounds.checkpoint(cur.select(col("node"), col("cand"))
+        .unionAll(rev.select(col("node"), col("cand"))), eager = false)
       // distinct() is KEPT deliberately (r15, measured): retiring it in
       // favor of aggregator-side dedupe alone read 2.8 s faster at sf0.1
       // (pure exchange overhead at fixture scale) but the candidate
@@ -793,7 +793,7 @@ object Similarity {
         .as(Seq("sub", "sqv")))
     def d2(a: Column, b: Column): Column =
       graft.functions.native.squared_distance(a, b)
-    val subs = Rounds.persist(subSplit(quant(candidates)))
+    val subs = Rounds.checkpoint(subSplit(quant(candidates)), eager = false)
     val init = subs.filter(col("vec_id") < codebook)
       .select(col("sub"), col("vec_id").as("cid"), col("sqv").as("cv"))
     def assign(cents: DataFrame): DataFrame =
@@ -813,7 +813,8 @@ object Similarity {
           x => x("cval")).as("cv"))
     // codebooks feed both the corpus encode and the query distance
     // table — persist the nSub·codebook-row frame
-    val cb = Rounds.persist((1 to iters).foldLeft(init)((c, _) => update(assign(c))))
+    val cb = Rounds.checkpoint((1 to iters).foldLeft(init)((c, _) => update(assign(c))),
+      eager = false)
     val codes = assign(cb).select(col("vec_id"), col("sub"), col("cid"))
     val qsubs = subSplit(quant(queries))
       .select(col("vec_id").as("query_id"), col("sub"), col("sqv"))
@@ -858,7 +859,7 @@ object Similarity {
           .quantize_int8(col("embedding").cast("array<double>")).as("qv"))
     def d2(a: Column, b: Column): Column =
       graft.functions.native.squared_distance(a, b)
-    val base = Rounds.persist(quant(candidates))
+    val base = Rounds.checkpoint(quant(candidates), eager = false)
     // coarse cells: 1-round Lloyd over the full quantized vector
     val cellInit = base.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("ccid"), col("qv").as("ccv"))
@@ -871,14 +872,14 @@ object Similarity {
         .groupBy(col("vec_id"), col("qv"))
         .agg(min(struct(col("cdist"), col("ccid"))).as("m"))
         .select(col("vec_id"), col("qv"), col("m.ccid").as("cell"))
-    val cellCb = Rounds.persist(cellAssign(cellInit)
+    val cellCb = Rounds.checkpoint(cellAssign(cellInit)
       .select(col("cell"), posexplode(col("qv")))
       .groupBy(col("cell"), col("pos"))
       .agg((round(avg(col("col"))) + lit(0.0)).as("cval"))
       .groupBy(col("cell"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cval")))),
         x => x("cval")).as("ccv"))
-      .select(col("cell").as("ccid"), col("ccv")))
+      .select(col("cell").as("ccid"), col("ccv")), eager = false)
     val cellOf = cellAssign(cellCb).select(col("vec_id"), col("cell"))
     val route = cellDists(quant(queries), cellCb)
       .withColumn("rk", row_number().over(Window.partitionBy(col("vec_id"))
@@ -890,7 +891,7 @@ object Similarity {
       df.select(col("vec_id"), posexplode(array(
           (0 until nSub).map(s => slice(col("qv"), s * subDim + 1, subDim)): _*))
         .as(Seq("sub", "sqv")))
-    val subs = Rounds.persist(subSplit(base))
+    val subs = Rounds.checkpoint(subSplit(base), eager = false)
     val pqInit = subs.filter(col("vec_id") < codebook)
       .select(col("sub"), col("vec_id").as("cid"), col("sqv").as("cv"))
     def pqAssign(cents: DataFrame): DataFrame =
@@ -900,13 +901,13 @@ object Similarity {
         .groupBy(col("vec_id"), col("sub"), col("sqv"))
         .agg(min(struct(col("dist"), col("cid"))).as("m"))
         .select(col("vec_id"), col("sub"), col("sqv"), col("m.cid").as("cid"))
-    val pqCb = Rounds.persist(pqAssign(pqInit)
+    val pqCb = Rounds.checkpoint(pqAssign(pqInit)
       .select(col("sub"), col("cid"), posexplode(col("sqv")))
       .groupBy(col("sub"), col("cid"), col("pos"))
       .agg((round(avg(col("col"))) + lit(0.0)).as("cval"))
       .groupBy(col("sub"), col("cid"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cval")))),
-        x => x("cval")).as("cv")))
+        x => x("cval")).as("cv")), eager = false)
     val codes = pqAssign(pqCb).select(col("vec_id"), col("sub"), col("cid"))
     val dtable = subSplit(quant(queries))
       .select(col("vec_id").as("query_id"), col("sub"), col("sqv"))
@@ -975,9 +976,9 @@ object Similarity {
 
   private def kmeansCore(vecs: DataFrame, k: Int,
       iters: Int): (DataFrame, DataFrame) = {
-    val base = Rounds.persist(vecs.select(col("vec_id"),
+    val base = Rounds.checkpoint(vecs.select(col("vec_id"),
         graft.functions.vectornative
-          .quantize_int8(col("embedding").cast("array<double>")).as("qv")))
+          .quantize_int8(col("embedding").cast("array<double>")).as("qv")), eager = false)
     val initCentroids = base.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("qv").as("cv"))
 
@@ -1012,7 +1013,8 @@ object Similarity {
     // referenced by the final assignment AND the output join — persist
     // the K-row frame so the iteration chain executes once
     val finalCentroids =
-      Rounds.persist((1 to iters).foldLeft(initCentroids)((c, _) => update(assign(c))))
+      Rounds.checkpoint((1 to iters).foldLeft(initCentroids)((c, _) => update(assign(c))),
+        eager = false)
     (assign(finalCentroids), finalCentroids)
   }
 
@@ -1043,23 +1045,23 @@ object Similarity {
     val q = vecs.select(col("vec_id"),
       graft.functions.vectornative
         .quantize_int8(col("embedding").cast("array<double>")).as("qv"))
-    val g = Rounds.persist(q.select(col("qv"), posexplode(col("qv")))
+    val g = Rounds.checkpoint(q.select(col("qv"), posexplode(col("qv")))
       .select(col("qv"), col("pos").as("i"), col("col").as("xi"))
       .select(col("i"), col("xi"), posexplode(col("qv")))
       .select(col("i"), col("pos").as("j"), (col("xi") * col("col")).as("p"))
-      .groupBy(col("i"), col("j")).agg(sum(col("p")).as("g")))
+      .groupBy(col("i"), col("j")).agg(sum(col("p")).as("g")), eager = false)
     val v0 = g.select(col("i").as("j")).distinct()
       .select(col("j"), lit(1000000.0).as("v"))
     val vFin = (1 to iters).foldLeft(v0) { (v, _) =>
-      val w = Rounds.persist(g.join(v, Seq("j"))
-        .groupBy(col("i")).agg(sum(col("g") * col("v")).as("w")))
+      val w = Rounds.checkpoint(g.join(v, Seq("j"))
+        .groupBy(col("i")).agg(sum(col("g") * col("v")).as("w")), eager = false)
       val mx = w.agg(max(abs(col("w"))).as("mx"))
-      Rounds.persist(w.crossJoin(broadcast(mx))
+      Rounds.checkpoint(w.crossJoin(broadcast(mx))
         .select(col("i").as("j"),
           // mx = 0 (an all-zero corpus) would otherwise yield NaN and
           // poison every later round silently
           when(col("mx") > 0, round(col("w") / col("mx") * 1000000.0, 0))
-            .otherwise(lit(0.0)).as("v")))
+            .otherwise(lit(0.0)).as("v")), eager = false)
     }
     val nrm = vFin.agg(sum(col("v") * col("v")).as("ss"))
     vFin.crossJoin(broadcast(nrm))
@@ -1128,9 +1130,9 @@ object Similarity {
     * (sel_order, center_id, picked_dist, radius, sum_mind, n_points). */
   def kCenterQuantized(vecs: DataFrame, k: Int): DataFrame = {
     require(k >= 2 && k <= 16, "k in [2,16] (one unrolled round per center)")
-    val base = Rounds.persist(vecs.select(col("vec_id"),
+    val base = Rounds.checkpoint(vecs.select(col("vec_id"),
         graft.functions.vectornative
-          .quantize_int8(col("embedding").cast("array<double>")).as("qv")))
+          .quantize_int8(col("embedding").cast("array<double>")).as("qv")), eager = false)
     def d2(a: Column, b: Column): Column =
       graft.functions.native.squared_distance(a, b)
     // seed = lowest id; vec_id is unique so the struct-min never
@@ -1294,8 +1296,8 @@ object Similarity {
       maxRounds: Int = 24): DataFrame = {
     require(eps >= 1, "eps >= 1")
     require(minPts >= 1, "minPts >= 1")
-    val p = Rounds.persist(points.select(col("id"),
-      col("x").cast("long").as("x"), col("y").cast("long").as("y")))
+    val p = Rounds.checkpoint(points.select(col("id"),
+      col("x").cast("long").as("x"), col("y").cast("long").as("y")), eager = false)
     def cell(c: Column): Column = (c - pmod(c, lit(eps))) / lit(eps)
     val offs = array((-1L to 1L).map(lit): _*)
     val probes = p
@@ -1311,13 +1313,13 @@ object Similarity {
     // probes it iff the cells differ by <= 1 per axis, which any pair
     // within eps satisfies; the self pair (dx = dy = 0) stays IN so the
     // neighbor count includes the point itself (the standard convention)
-    val pairs = Rounds.persist(probes.join(home, Seq("cx", "cy"))
+    val pairs = Rounds.checkpoint(probes.join(home, Seq("cx", "cy"))
       .filter((col("xa") - col("xb")) * (col("xa") - col("xb")) +
         (col("ya") - col("yb")) * (col("ya") - col("yb")) <= lit(eps * eps))
-      .select(col("ia"), col("ib")))
-    val core = Rounds.persist(pairs.groupBy(col("ia").as("id"))
+      .select(col("ia"), col("ib")), eager = false)
+    val core = Rounds.checkpoint(pairs.groupBy(col("ia").as("id"))
       .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") >= minPts).select(col("id")))
+      .filter(col("__n") >= minPts).select(col("id")), eager = false)
     val ccEdges = pairs.filter(col("ia") < col("ib"))
       .join(core.select(col("id").as("ia")), Seq("ia"), "left_semi")
       .join(core.select(col("id").as("ib")), Seq("ib"), "left_semi")
@@ -1328,9 +1330,9 @@ object Similarity {
     // canonicalization pass (r16)
     val comp = Graph.ccTwoStarsNodes(ccEdges, maxRounds,
       edgesCanonical = true)
-    val coreLbl = Rounds.persist(core
+    val coreLbl = Rounds.checkpoint(core
       .join(comp.select(col("node").as("id"), col("lbl")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster")))
+      .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster")), eager = false)
     val border = pairs.filter(col("ia") =!= col("ib"))
       .join(coreLbl.select(col("id").as("ib"), col("cluster")), Seq("ib"))
       .join(core.select(col("id").as("ia")), Seq("ia"), "left_anti")

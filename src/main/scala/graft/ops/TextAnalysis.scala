@@ -191,11 +191,11 @@ object TextAnalysis {
     // forfeits the map-side combine (raw token rows shuffle), which the
     // saved corpus-sized window exchange outweighs here (0.90 → 0.61 s
     // at sf0.1) — see tokenEntropy for the counter-case.
-    val tf = Rounds.persist(df.select(col(idCol).as("doc_id"),
+    val tf = Rounds.checkpoint(df.select(col(idCol).as("doc_id"),
         explode(tokens(col(textCol))).as("term"))
       .repartition(col("doc_id"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf")))
+      .agg(count(lit(1)).as("tf")), eager = false)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("tf").desc, col("term"))
@@ -228,13 +228,13 @@ object TextAnalysis {
     // and the scored join) — without materialization the tokenize →
     // explode → groupBy over the whole corpus re-runs per reference,
     // tripling the operator's dominant cost (the same hazard
-    // Graph.pagerank persists against; driver r5 measured text_bm25 at
-    // 4.6× text_term_stats over the same statistics). MEMORY_AND_DISK
-    // keeps lineage; the query's scope frees the blocks (Rounds).
-    val tf = Rounds.persist(df.select(col(idCol).as("doc_id"),
+    // Graph.pagerank pins against; the r5 bench measured text_bm25 at
+    // 4.6× text_term_stats over the same statistics). A lazy checkpoint:
+    // the first reader writes it, the query's scope frees it (Rounds).
+    val tf = Rounds.checkpoint(df.select(col(idCol).as("doc_id"),
         explode(tokens(col(textCol))).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf")))
+      .agg(count(lit(1)).as("tf")), eager = false)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // N and avgdl straight off the collapsed tf frame: sum(tf) and
     // countDistinct(doc) are exact integers, so the constants are
@@ -309,8 +309,8 @@ object TextAnalysis {
       textCol: String, topK: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(topK >= 1, "topK >= 1")
-    val dt = Rounds.persist(df.select(col(idCol).as("doc_id"),
-        explode(array_distinct(tokens(col(textCol)))).as("term")))
+    val dt = Rounds.checkpoint(df.select(col(idCol).as("doc_id"),
+        explode(array_distinct(tokens(col(textCol)))).as("term")), eager = false)
     val corpus = dt.agg(countDistinct(col("doc_id")).cast("double").as("n_docs"))
     val dfreq = dt.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val idfScaled = round(log(lit(1.0) +
@@ -453,13 +453,13 @@ object TextAnalysis {
   def collocationLlr(df: DataFrame, textCol: String = "text"): DataFrame = {
     val toks = col("__toks")
     val pairs = bigramPairs(toks)
-    val bi = Rounds.persist(df
+    val bi = Rounds.checkpoint(df
       .select(tokens(col(textCol)).as("__toks"))
       .filter(size(toks) >= 2)
       .select(explode(pairs).as("p"))
       .select(col("p.w1"), col("p.w2"))
       .groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c")))
+      .agg(count(lit(1)).as("c")), eager = false)
     val fwd = bi.groupBy(col("w1")).agg(sum(col("c")).as("cw1"))
     val bwd = bi.groupBy(col("w2")).agg(sum(col("c")).as("cw2"))
     val tot = bi.agg(sum(col("c")).as("n"))
@@ -494,13 +494,13 @@ object TextAnalysis {
       idCol: String = "doc_id"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    val tf = Rounds.persist(df
+    val tf = Rounds.checkpoint(df
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
       // doc-only partitioning: valid for the (doc, term) group, and when
       // the vocabulary-sized df join broadcasts, the ranking window
       // inherits it and skips its own corpus re-shuffle
       .repartition(col(idCol))
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")))
+      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")), eager = false)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = tf.agg(countDistinct(col(idCol)).as("n_docs"))
     val w = Window.partitionBy(col(idCol))
@@ -535,13 +535,13 @@ object TextAnalysis {
       s"absolute discount must be in (0,1), got $discount")
     val toks = col("__toks")
     val pairs = bigramPairs(toks)
-    val bi = Rounds.persist(df
+    val bi = Rounds.checkpoint(df
       .select(tokens(col(textCol)).as("__toks"))
       .filter(size(toks) >= 2)
       .select(explode(pairs).as("p"))
       .select(col("p.w1"), col("p.w2"))
       .groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c")))
+      .agg(count(lit(1)).as("c")), eager = false)
     val fwd = bi.groupBy(col("w1"))
       .agg(sum(col("c")).as("cw1"), count(lit(1)).as("n1_fwd"))
     val bwd = bi.groupBy(col("w2")).agg(count(lit(1)).as("n1_bwd"))
@@ -609,13 +609,13 @@ object TextAnalysis {
     // partition ⇒ same triple co-located), so the FINAL per-document
     // logprob aggregate reuses this exchange instead of re-shuffling
     // the corpus a second time when the model join broadcasts.
-    val dbc = Rounds.persist(df
+    val dbc = Rounds.checkpoint(df
       .select(col("doc_id"), tokens(col(textCol)).as("__toks"))
       .filter(size(toks) >= 2)
       .select(col("doc_id"), explode(pairs).as("p"))
       .repartition(col("doc_id"))
       .groupBy(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .agg(count(lit(1)).as("n")))
+      .agg(count(lit(1)).as("n")), eager = false)
     // Head totals via hash-agg + a vocab-sized equi-join on w1 — both
     // frames here are bounded by the bigram vocabulary, and hash
     // aggregation beats the sort a window over w1 would force.
@@ -666,9 +666,9 @@ object TextAnalysis {
     // referenced by the bucket-bounds chain AND the final labeling join:
     // persist, or the whole perplexity corpus pass runs twice (the bm25
     // lesson; before/after in BASELINE.md)
-    val scored = Rounds.persist(perplexity(df, textCol, alpha)
+    val scored = Rounds.checkpoint(perplexity(df, textCol, alpha)
       .join(df.select(col("doc_id"), col(langCol)), Seq("doc_id"))
-      .withColumn("__bin", floor(col("ppl") * 8).cast("long")))
+      .withColumn("__bin", floor(col("ppl") * 8).cast("long")), eager = false)
     val bins = scored.groupBy(col(langCol), col("__bin"))
       .agg(count(lit(1)).as("__c"))
     val w = Window.partitionBy(col(langCol)).orderBy(col("__bin"))
@@ -825,7 +825,7 @@ object TextAnalysis {
       iterations: Int): (Seq[DataFrame], DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val byWord = Window.partitionBy(col("word")).orderBy(col("pos"))
-    var toks = Rounds.persist(toks0)
+    var toks = Rounds.checkpoint(toks0, eager = false)
     val outs = Seq.newBuilder[DataFrame]
     for (it <- 1 to iterations) {
       // EAGER localCheckpoint (1 row): the round's merge table must
@@ -855,15 +855,14 @@ object TextAnalysis {
       // checkpointed block is not recomputable from lineage (an executor
       // loss fails the job instead of recomputing) — acceptable for a
       // bounded 5-round vocab-scale loop; superseded rounds' blocks are
-      // freed below so executor storage stays O(1) in iterations (round
-      // 1 supersedes the persisted toks0, which is not a checkpoint).
+      // freed below so executor storage stays O(1) in iterations.
       val next = Rounds.checkpoint(
         sel.filter(!coalesce(col("prev_sel"), lit(false)))
           .withColumn("tok", when(coalesce(col("sel"), lit(false)),
             concat(col("tok"), col("mb"))).otherwise(col("tok")))
           .withColumn("pos", row_number().over(byWord).cast("long"))
           .select(col("word"), col("freq"), col("pos"), col("tok")))
-      if (it > 1) Rounds.free(toks)
+      Rounds.free(toks)
       toks = next
     }
     (outs.result(), toks)
@@ -897,9 +896,9 @@ object TextAnalysis {
   def maxMatchTokenize(docs: DataFrame, textCol: String = "text",
       topWords: Int = 24, topGrams: Int = 16, gramLen: Int = 4,
       maxTokLen: Int = 12, rounds: Int = 16): DataFrame = {
-    val wf = Rounds.persist(docs.select(explode(tokens(col(textCol))).as("word"))
+    val wf = Rounds.checkpoint(docs.select(explode(tokens(col(textCol))).as("word"))
       .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("freq")))
+      .groupBy(col("word")).agg(count(lit(1)).as("freq")), eager = false)
     val wtop = wf.orderBy(col("freq").desc, col("word")).limit(topWords)
       .select(col("word").as("tok"))
     val gtop = wf.filter(length(col("word")) >= gramLen)
@@ -924,11 +923,11 @@ object TextAnalysis {
           least(lit(maxTokLen), length(col("word")) - col("pos")))).as("tl"))
       .select(col("word"), col("pos"), col("tl"),
         col("word").substr(col("pos") + 1, col("tl")).as("sub"))
-    val bm = Rounds.persist(cand.join(broadcast(vocab), col("sub") === col("tok"))
+    val bm = Rounds.checkpoint(cand.join(broadcast(vocab), col("sub") === col("tok"))
       .groupBy(col("word"), col("pos"))
       .agg(max(struct(col("tl"), col("tok"))).as("m"))
       .select(col("word"), col("pos"), col("m.tok").as("tok"),
-        col("m.tl").as("tl")))
+        col("m.tl").as("tl")), eager = false)
     // the greedy walk: one state row per not-yet-finished word
     var st = Rounds.checkpoint(wf.select(col("word"), length(col("word")).as("len"),
       lit(0).as("pos")))
@@ -1012,9 +1011,9 @@ object TextAnalysis {
       maxTokLen: Int = 6, topSubs: Int = 24, rounds: Int = 8): DataFrame = {
     require(rounds >= 1 && rounds <= 24, "rounds in [1,24] (jobs grow per round)")
     val sep = "\u001f"
-    val wf = Rounds.persist(docs.select(explode(tokens(col(textCol))).as("word"))
+    val wf = Rounds.checkpoint(docs.select(explode(tokens(col(textCol))).as("word"))
       .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("freq")))
+      .groupBy(col("word")).agg(count(lit(1)).as("freq")), eager = false)
     // candidate pieces: all chars + top multi-char substrings by weight
     val chars = wf
       .select(col("word"), col("freq"),
@@ -1030,32 +1029,31 @@ object TextAnalysis {
       .select(col("word").substr(col("i"), col("l")).as("tok"), col("freq"))
       .groupBy(col("tok")).agg(sum(col("freq")).as("sfreq"))
       .orderBy(col("sfreq").desc, col("tok")).limit(topSubs)
-    val vocab0 = Rounds.persist(chars.unionAll(subs))
+    val vocab0 = Rounds.checkpoint(chars.unionAll(subs), eager = false)
     // all (word, prefix-consumed, piece) match positions — lp-independent,
     // shared by both Viterbi passes
-    val cand = Rounds.persist(wf.select(col("word"),
+    val cand = Rounds.checkpoint(wf.select(col("word"),
         explode(sequence(lit(0), length(col("word")) - 1)).as("fpos"))
       .select(col("word"), col("fpos"),
         explode(sequence(lit(1),
           least(lit(maxTokLen), length(col("word")) - col("fpos")))).as("tl"))
       .select(col("word"), col("fpos"), (col("fpos") + col("tl")).as("tpos"),
-        col("word").substr(col("fpos") + 1, col("tl")).as("sub")))
+        col("word").substr(col("fpos") + 1, col("tl")).as("sub")), eager = false)
     // pinned helpers the result does not read (it reads wf and the second
     // pass's final state), freed once the second pass has run
     val spent = scala.collection.mutable.ArrayBuffer(vocab0, cand)
     // one Viterbi pass under `lp`: (segmentation, final state)
     def viterbi(lp: DataFrame): (DataFrame, DataFrame) = {
-      // (r16 receipt: e as localCheckpoint instead of persist — the
-      // bpeLoop lineage-truncation move, motivated by Prof's 3.3-7.1 s
-      // driver gap on text_unigram_encode — was tried and measured FLAT
+      // (r16 receipt, from when this frame was a cache: pinning e as a
+      // checkpoint, the bpeLoop lineage-truncation move motivated by
+      // Prof's 3.3-7.1 s driver gap on text_unigram_encode, measured FLAT
       // to slightly worse, solo min-of-3 at sf0.1: encode 5.52 → 5.52,
-      // lm 4.91 → 5.47. cand is already persisted, so each round's
-      // re-planned tree is mostly leaves; the gap is per-action
-      // analysis/AQE overhead the truncation cannot remove. persist
-      // stays.)
-      val e = Rounds.persist(cand.join(broadcast(lp), col("sub") === col("tok"))
+      // lm 4.91 → 5.47. cand is pinned too, so each round's re-planned
+      // tree is mostly leaves; the gap is per-action analysis/AQE
+      // overhead the truncation cannot remove.)
+      val e = Rounds.checkpoint(cand.join(broadcast(lp), col("sub") === col("tok"))
         .select(col("word"), col("fpos").as("pos"), col("tpos"),
-          col("tok"), col("lp")))
+          col("tok"), col("lp")), eager = false)
       spent += e
       var st = Rounds.checkpoint(wf.select(col("word"), lit(0).as("pos"),
         lit(0.0).as("score"), lit("").as("path")))
@@ -1088,7 +1086,7 @@ object TextAnalysis {
       // than `rounds` pieces never reaches pos == length and would SILENTLY
       // vanish from the token stream (and the oracle, replaying the same
       // truncation, would stay green over the loss). Both frames are
-      // word-vocabulary scale and already materialized (wf persisted, st
+      // word-vocabulary scale and already materialized (wf and st both
       // localCheckpoint'ed), so the two counts are cheap driver probes.
       val nWords = wf.count()
       val nSegged = segged.count()
@@ -1109,8 +1107,8 @@ object TextAnalysis {
     val usage = segged0
       .select(col("freq"), explode(split(col("path"), sep)).as("tok"))
       .groupBy(col("tok")).agg(sum(col("freq")).as("u"))
-    val v1 = Rounds.persist(vocab0.join(usage, Seq("tok"), "left")
-      .select(col("tok"), (coalesce(col("u"), lit(0L)) + 1L).as("uf")))
+    val v1 = Rounds.checkpoint(vocab0.join(usage, Seq("tok"), "left")
+      .select(col("tok"), (coalesce(col("u"), lit(0L)) + 1L).as("uf")), eager = false)
     val t1 = broadcast(v1.agg(sum(col("uf")).as("tt")))
     val lp1 = v1.crossJoin(t1)
       .select(col("tok"),
@@ -1149,7 +1147,7 @@ object TextAnalysis {
       minPairN: Long = 20): DataFrame = {
     val toks = col("__toks")
     val pairs = bigramPairs(toks)
-    val tokArr = Rounds.persist(df.select(tokens(col(textCol)).as("__toks")))
+    val tokArr = Rounds.checkpoint(df.select(tokens(col(textCol)).as("__toks")), eager = false)
     val px = tokArr.filter(size(toks) >= 2)
       .select(explode(pairs).as("p"))
       .select(col("p.w1"), col("p.w2"))

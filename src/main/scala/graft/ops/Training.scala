@@ -66,7 +66,7 @@ object Training {
     * The bucket-totals branch re-scans the (pruned) id+text columns and
     * re-tokenizes — two passes over the corpus. At 100 TB, materialize
     * the tokenized `(id, bucket, n_tokens)` frame once (24 bytes/doc;
-    * persist or localCheckpoint — the executor-loss trade in the
+    * a checkpoint — the executor-loss trade in the
     * [[Rounds]] scaladoc applies verbatim) and feed both branches from
     * it. Left unmaterialized here so the operator has no storage side
     * effects by default. */
@@ -112,9 +112,9 @@ object Training {
   def packShelves(df: DataFrame, idCol: String, textCol: String,
       capacity: Int = 512, bucketSize: Long = 4096L): DataFrame = {
     require(capacity >= 1, "capacity must be >= 1")
-    val base = Rounds.persist(df.select(
+    val base = Rounds.checkpoint(df.select(
         col(idCol).as("doc_id"),
-        size(split(trim(col(textCol)), "\\s+")).cast("long").as("__L")))
+        size(split(trim(col(textCol)), "\\s+")).cast("long").as("__L")), eager = false)
     // rank within the L class: two-level bucketed prefix count
     // (TwoLevelRank — the stripe prefix is NOT broadcast: its worst case,
     // many distinct lengths per stripe, approaches the corpus; the join
@@ -245,12 +245,12 @@ object Training {
       fpp: Double = 0.01): DataFrame = {
     def keyLong(k: Column): Column =
       conv(substring(k, 1, 15), 16, 10).cast("long")
-    val benchKeys = Rounds.persist(ngramKeys(bench, idCol, textCol, n)
-      .select(col("__k")).distinct())
+    val benchKeys = Rounds.checkpoint(ngramKeys(bench, idCol, textCol, n)
+      .select(col("__k")).distinct(), eager = false)
     val bloom = benchKeys
       .select(keyLong(col("__k")).as("__kl"))
       .stat.bloomFilter("__kl", expectedItems, fpp)
-    val ck = Rounds.persist(ngramKeys(corpus, idCol, textCol, n))
+    val ck = Rounds.checkpoint(ngramKeys(corpus, idCol, textCol, n), eager = false)
     val totals = ck.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_ngrams"))
     val hits = ck
@@ -440,7 +440,7 @@ object Training {
       .select(keyCols :+ bucketOf(col("__bg")).as("b"): _*)
       .groupBy(keyCols :+ col("b"): _*)
       .agg(count(lit(1)).as("n"))
-    val dbk = Rounds.persist(bucketCounts(corpus, Seq(col(idCol).as("doc_id"))))
+    val dbk = Rounds.checkpoint(bucketCounts(corpus, Seq(col(idCol).as("doc_id"))), eager = false)
     val cb = dbk.groupBy(col("b")).agg(sum(col("n")).as("cn"))
     val tb = bucketCounts(target, Seq.empty)
       .select(col("b"), col("n").as("tn"))

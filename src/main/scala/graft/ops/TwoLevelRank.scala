@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * interleaves stripes in the total order and the rank is wrong.
   *
   * The input is referenced twice (raw rows + stripe totals); callers
-  * that persist `df` get cache reuse on both branches — left
-  * unpersisted here so the operator has no storage side effects.
+  * that pin `df` (a checkpoint) get reuse on both branches — left
+  * unpinned here so the operator has no storage side effects.
   *
   * Call sites: Training.packSequences / packShelves / epochShuffle,
   * Multimodal.shardManifest, SparkEntry rel_key_skew /

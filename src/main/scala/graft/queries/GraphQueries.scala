@@ -29,7 +29,7 @@ object GraphQueries {
     * frame item-item CF scores over (⟨v_a, v_b⟩ = Σ_orders cnt_a·cnt_b,
     * exactly the pair count this build sums). One-shot, unpersisted:
     * its single consumer aggregates it immediately. */
-  private def coPurchaseWeighted(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def coPurchaseWeighted(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     // Pair formation is PER ORDER over the sorted raw part list — ONE
@@ -73,22 +73,25 @@ object GraphQueries {
   // consumers pass edgesCanonical = true so their within-frame closures
   // skip the dedup exchange; the DIRECT closure consumers
   // (graph_cc_twostars, graph_bipartite) measured +11 %/+25 % with the
-  // skip and keep the default: this cached frame is 32-partitioned, so
-  // without the dedup's AQE-sized exchange the closure's round-0
-  // checkpoint lands as 32/96 fixture-tiny partitions (tools/PartProbe,
-  // source at commit b627139: 96 vs 1 on the bipartite union) and the
-  // per-round scheduling overhead outweighs the saved shuffle at the
-  // measured scale (r16 receipt).
+  // skip and keep the default (r16 receipt). That receipt read this
+  // frame as a cache of 32 shuffle partitions, so without the dedup's
+  // AQE-sized exchange the closure's round-0 checkpoint landed as 32/96
+  // fixture-tiny partitions (tools/PartProbe, source at commit b627139:
+  // 96 vs 1 on the bipartite union) and the per-round scheduling
+  // overhead outweighed the saved shuffle. The frame is now a lazy
+  // checkpoint whose partitions AQE coalesces, so that cause is gone;
+  // the skip has not been re-measured since.
   private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    // Persisted at the edge frame itself (not only the symmetrized
-    // copies the Graph ops persist internally): every graph_* query
-    // ALSO derives an aux frame from it (seed set, node list, degree
-    // frame), and without this the aux materialization re-executes
-    // the whole build — graph_bfs paid it 2-3× per sample. The
-    // support-2 edge list is the frame the docstring argues stays
-    // small at any scale, so the cache is a few thousand rows.
-    Rounds.persist(coPurchaseWeighted(s, dir)
-      .select(col("a"), col("b")))
+    // Pinned at the edge frame itself (not only the symmetrized
+    // copies the Graph ops pin internally): every graph_* query ALSO
+    // derives an aux frame from it (seed set, node list, degree frame),
+    // and without this the aux materialization re-executes the whole
+    // build — graph_bfs paid it 2-3× per sample. The triangle,
+    // clustering and Leiden ops read it several times and do not pin
+    // it again. The support-2 edge list is the frame the docstring
+    // argues stays small at any scale, so the pin is a few thousand rows.
+    Rounds.checkpoint(coPurchaseWeighted(s, dir)
+      .select(col("a"), col("b")), eager = false)
 
   /** Unrolled Luby-MIS oracle: `rounds` blocks of (winner = beats every
     * active neighbor under the same deterministic (π, id) order) →
@@ -694,10 +697,8 @@ object GraphQueries {
     // term for term.
     Case("graph_hits", { (s, dir) =>
       val e = tradePairs(s, dir)
-      // tradePairs is already distinct over (c, su) and the orientation
-      // map is injective, so the op-level dedup pass is skipped (r16)
       Graph.hits(e.select(col("c").as("src"), (-col("su") - 1).as("dst")),
-        "src", "dst", iters = 3, edgesDistinct = true)
+        "src", "dst", iters = 3)
     },
       Some(hitsOracleSql)),
 
@@ -713,7 +714,7 @@ object GraphQueries {
     // the same exact value, so the final IEEE expression (with sy/syy
     // substituted by their provably-equal twins) is bit-identical.
     Case("graph_assortativity", { (s, dir) =>
-      val e = coPurchaseEdges(s, dir) // already persisted at the op
+      val e = coPurchaseEdges(s, dir) // already pinned at the op
       val deg = e.select(col("a").as("node"))
         .unionAll(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -891,8 +892,9 @@ object GraphQueries {
       // persisted: the relaxation joins this frame once per round (and
       // the seed set derives from it) — without the cache each round
       // re-runs the orders⋈lineitem build (the bfsDistances discipline)
-      val adj = Rounds.persist(e.select(col("c").as("src"), (-col("su") - 1).as("dst"), col("w"))
-        .unionAll(e.select((-col("su") - 1).as("src"), col("c").as("dst"), col("w"))))
+      val adj = Rounds.checkpoint(e.select(col("c").as("src"), (-col("su") - 1).as("dst"), col("w"))
+        .unionAll(e.select((-col("su") - 1).as("src"), col("c").as("dst"), col("w"))),
+        eager = false)
       val seeds = adj.select(col("src").as("node")).distinct()
         .filter(col("node") >= 0 && col("node") % 97 === 0)
       Graph.ssspBounded(adj, seeds, rounds = 3)
@@ -1124,7 +1126,7 @@ object GraphQueries {
     // Partition quality of the 3-round label-prop communities: Newman
     // modularity from integer counts, total decimal-summed.
     Case("graph_modularity", { (s, dir) =>
-      val ed = coPurchaseEdges(s, dir) // already persisted at the op
+      val ed = coPurchaseEdges(s, dir) // already pinned at the op
       Graph.modularity(ed, Graph.labelPropagationNodes(ed, rounds = 3))
     },
       // Same l3 label recurrence, then Q = Σ_c [L_c/m − (d_c/2m)²].

@@ -1494,20 +1494,33 @@ object RelQueries {
     // Integer sums, two single divisions → hash-gates.
     Case("rel_key_skew", { (s, dir) =>
       val stripeWidth = 4096L
-      // persisted: the collapsed key frame feeds the intra-bucket rank,
+      // pinned: the collapsed key frame feeds the intra-bucket rank,
       // the bucket-prefix branch, and the totals — one corpus aggregate,
       // not three (the bm25 lesson). The prefix side is NOT broadcast:
       // its worst case (diverse counts within a stripe) approaches the
       // key frame — the join keys match the intra window's partitioning,
       // so only the small side exchanges; AQE may still broadcast it at
       // runtime when it IS small.
-      val cnt = Rounds.persist(t(s, dir, "orders").groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("x")))
+      val cnt = Rounds.checkpoint(t(s, dir, "orders").groupBy(col("o_custkey"))
+        .agg(count(lit(1)).as("x")), eager = false)
       val ranked = TwoLevelRank.rank(cnt, Nil, Seq("x"),
           expr(s"o_custkey div $stripeWidth"), Seq("o_custkey"), "i")
         .select(col("o_custkey"), col("x"), col("i"))
-      val tot = ranked.agg(sum(col("x")).as("sx"), count(lit(1)).as("nk"),
-        sum(col("i") * col("x")).as("six"))
+      // The totals come from the key-count histogram, not from `ranked`:
+      // the c_v keys with x = v hold the consecutive ranks after the
+      // n_<v smaller keys, so Σ i·x = Σ_v v·(c_v·(n_<v + 1) + c_v(c_v − 1)/2)
+      // exactly. An aggregate of `ranked` itself would run the whole
+      // rank a second time: a self-join copies the `cnt` checkpoint
+      // leaf, and Spark's exchange reuse does not match the two copies
+      // (the leaf's output partitioning keeps its attribute ids when
+      // canonicalized).
+      val below = Window.orderBy(col("x"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val tot = cnt.groupBy(col("x")).agg(count(lit(1)).as("c"))
+        .withColumn("lt", coalesce(sum(col("c")).over(below), lit(0L)))
+        .agg(sum(col("x") * col("c")).as("sx"), sum(col("c")).as("nk"),
+          sum(col("x") * (col("c") * (col("lt") + 1) + expr("c * (c - 1) div 2")))
+            .as("six"))
       ranked.crossJoin(broadcast(tot))
         .filter(col("i") > col("nk") - 5)
         .select(col("o_custkey"), col("x").as("n_orders"),

@@ -480,9 +480,9 @@ object SampleQueries {
     // `ntile(8).over(Window.orderBy(len, doc_id))` computes the same
     // buckets but serializes EVERY document through one task.
     Case("sample_length_bucket", { (s, dir) =>
-      val len = Rounds.persist(t(s, dir, "documents")
+      val len = Rounds.checkpoint(t(s, dir, "documents")
         .select(col("doc_id"),
-          size(TextAnalysis.tokens(col("text"))).cast("long").as("len")))
+          size(TextAnalysis.tokens(col("text"))).cast("long").as("len")), eager = false)
       val ranked = TwoLevelRank.rank(len, Nil, Seq("len"),
         expr("doc_id div 4096"), Seq("doc_id"), "__i")
       val tot = len.agg(count(lit(1)).as("__n"))

@@ -334,7 +334,8 @@ object TsQueries {
     // screen. The decomposed frame is persisted: med/MAD broadcasts and
     // the final join are three references.
     Case("ts_decompose_anomaly", { (s, dir) =>
-      val d = Rounds.persist(TimeSeries.decompose(t(s, dir, "events"), "ts", "event_type"))
+      val d = Rounds.checkpoint(TimeSeries.decompose(t(s, dir, "events"), "ts", "event_type"),
+        eager = false)
       TimeSeries.madOutliers(d, keyCol = "event_type", idCol = "bucket",
         valueCol = "residual", threshold = 3.0)
     },

@@ -146,9 +146,12 @@ object ScaleProbe {
     report("DBSCAN grid (eps=30)")(
       graft.ops.Similarity.dbscanGrid(dbPts(embS()), eps = 30L, minPts = 4).count())(
       graft.ops.Similarity.dbscanGrid(dbPts(embB()), eps = 30L, minPts = 4).count())
+    // the Leiden ops read their edge frame ~6 times and expect it pinned
+    def pinnedWedges(li: DataFrame): DataFrame =
+      graft.ops.Rounds.checkpoint(wedges(li).select(col("a"), col("b")), eager = false)
     report("Leiden refinement")(
-      graft.ops.Graph.leidenRefine(wedges(liS()).select(col("a"), col("b"))).count())(
-      graft.ops.Graph.leidenRefine(wedges(liB()).select(col("a"), col("b"))).count())
+      graft.ops.Graph.leidenRefine(pinnedWedges(liS())).count())(
+      graft.ops.Graph.leidenRefine(pinnedWedges(liB())).count())
     def qmerge(li: DataFrame): Long = {
       val cents = li.select(round(col("l_extendedprice") * 100)
         .cast("long").as("v"))
@@ -174,10 +177,8 @@ object ScaleProbe {
     }
     report("log quantile sketch + read")(qlog(liS()))(qlog(liB()))
     report("Leiden guarantees (1-row)")(
-      graft.ops.Graph.leidenQuality(wedges(liS()).select(col("a"), col("b")))
-        .count())(
-      graft.ops.Graph.leidenQuality(wedges(liB()).select(col("a"), col("b")))
-        .count())
+      graft.ops.Graph.leidenQuality(pinnedWedges(liS())).count())(
+      graft.ops.Graph.leidenQuality(pinnedWedges(liB())).count())
     // Holt scan: replicate events with per-replica key suffixes → 10×
     // SERIES, flat series length — the scaling regime (rounds grow with
     // log of the LONGEST series, frames with series count).

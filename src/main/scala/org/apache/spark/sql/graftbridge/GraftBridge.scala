@@ -1,12 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.CachedData
-import org.apache.spark.sql.execution.columnar.CachedRDDBuilder
 
 /** Re-exposes the few `private[sql]`/`private[spark]` members graft
   * needs; the object lives under `org.apache.spark.sql` for that reason
@@ -38,22 +36,4 @@ object GraftBridge {
     * a later read finds no blocks and fails in the checkpoint RDD, and no
     * live plan reads a freed round. A second call removes nothing. */
   def freeRdd(sc: SparkContext, id: Int): Unit = sc.unpersistRDD(id, blocking = false)
-
-  /** The cache entry `df`'s plan matches. */
-  def cacheEntry(df: DataFrame): Option[CachedData] =
-    df.sparkSession.sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
-
-  /** An entry's buffer builder: the object every plan that reads the
-    * entry holds. */
-  def builder(entry: CachedData): AnyRef = entry.cachedRepresentation.cacheBuilder
-
-  /** Whether every partition of an entry's buffers is written. */
-  def loaded(entry: CachedData): Boolean =
-    entry.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded
-
-  /** Unpersists a [[builder]]'s buffers, non-blocking; a plan that reads
-    * them again rebuilds them. */
-  def clearBuffers(builder: AnyRef): Unit =
-    builder.asInstanceOf[CachedRDDBuilder].clearCache(blocking = false)
 }

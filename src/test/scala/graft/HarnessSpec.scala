@@ -31,14 +31,19 @@ class HarnessSpec extends SparkSuite {
       assert(filesWith(n, Seq("src/main/scala")) ==
         Seq("src/main/scala/graft/ops/Rounds.scala"), n)
     // And one owner for every storage pin: only ops/Rounds (and the
-    // bridge it frees checkpoints through) caches, checkpoints or
-    // releases a frame, or clears the session's cache. The owner's own
-    // calls, `Rounds.persist(...)`, are how everything else pins.
-    val pin = """(?<!Rounds)\.(persist|localCheckpoint)\(|\.cache\(\)|unpersist\(|clearCache""".r
+    // bridge it frees checkpoints through) checkpoints or releases a
+    // frame. The owner's own calls, `Rounds.checkpoint(...)`, are how
+    // everything else pins.
+    val pin = """\.localCheckpoint\(|unpersist\(|clearCache""".r
     val owners = Set("src/main/scala/graft/ops/Rounds.scala",
       "src/main/scala/org/apache/spark/sql/graftbridge/GraftBridge.scala")
     val pinning = filesMatching(Seq("src/main/scala"))(pin.findFirstIn(_).isDefined)
     assert(pinning.nonEmpty && pinning.forall(owners), pinning)
+    // And one kind of pin, the local checkpoint: no program file, the
+    // owner included, caches a frame or reads the session's cache entries.
+    val cache = """\.persist\(|\.cache\(\)|cacheManager|CachedData""".r
+    val caching = filesMatching(Seq("src/main/scala"))(cache.findFirstIn(_).isDefined)
+    assert(caching.isEmpty, caching)
   }
 
   test("Harness.session(k): master local[k], k shuffle partitions, UTC") {

@@ -49,57 +49,36 @@ class OperatorSpec extends SparkSuite {
     assert(differ.isEmpty, s"concurrent result differs from sequential: $differ")
   }
 
-  /** The cache entry `df`'s plan matches, as the CacheManager finds it. */
-  private def cacheEntry(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
-    .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-
-  test("Rounds.free: a shared cache entry stays until its last holder lets go") {
-    // The CacheManager keeps one entry per plan, so two queries that
-    // persist one plan (a query run twice at once, coPurchaseEdges under
-    // two graph queries) read one entry. Here on one thread: the nested
-    // scope stands for the query that ends first.
-    val cm = spark.sharedState.cacheManager
-    def cached(df: org.apache.spark.sql.DataFrame) = cacheEntry(df).isDefined
+  test("Rounds.free: a nested scope's pin of one plan leaves the outer pin") {
+    // Every pin is a local checkpoint, private to the frame that made it:
+    // two queries that pin one plan (a query run twice at once,
+    // coPurchaseEdges under two graph queries) hold two pins, and one
+    // query's release never reaches the other's. Here on one thread: the
+    // nested scope stands for the query that ends first.
+    import org.apache.spark.sql.execution.LogicalRDD
     def plan = spark.range(0, 5000).select(($"id" % 97).as("k"), ($"id" * 3).as("v"))
-    val expected = plan.filter($"k" < 10).count() // nothing cached yet
-    Rounds.scoped {
-      val outer = Rounds.persist(plan)
+    val expected = plan.filter($"k" < 10).count()
+    val outerRdd = Rounds.scoped {
+      val outer = Rounds.checkpoint(plan, eager = false)
       val result = outer.filter($"k" < 10)
       assert(result.count() == expected)
+      val Seq(id) = outer.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+      def live = spark.sparkContext.getPersistentRDDs.contains(id)
       val inner = Rounds.scoped {
-        val f = Rounds.persist(plan)
+        val f = Rounds.checkpoint(plan, eager = false)
         f.count()
         f
       }
-      assert(cached(outer), "the inner scope released the shared entry")
+      assert(live, "the inner scope released the outer pin")
       assert(result.count() == expected)
       Rounds.free(inner)
       Rounds.free(inner)
-      assert(cached(outer), "freeing the inner frame again released the entry")
+      assert(live, "freeing the inner frame again released the outer pin")
       assert(result.count() == expected)
+      id
     }
-    assert(cm.isEmpty, "the entry outlived its last holder")
-  }
-
-  test("Rounds.free: an entry waits while a held entry that contains it loads") {
-    // Uncaching an entry makes Spark clear and re-plan every entry that
-    // contains its plan and is not loaded yet, under any job writing it.
-    def plan = spark.range(0, 5000).select(($"id" % 97).as("k"), ($"id" * 3).as("v"))
-    def builder(df: org.apache.spark.sql.DataFrame) =
-      cacheEntry(df).map(_.cachedRepresentation.cacheBuilder)
-    Rounds.scoped {
-      val outer = Rounds.persist(plan.groupBy($"k").count())
-      val before = builder(outer)
-      val inner = Rounds.persist(plan)
-      inner.count()
-      Rounds.free(inner)
-      assert(builder(outer).exists(b => before.exists(_ eq b)), "a release re-planned a held entry")
-      assert(builder(inner).isDefined, "the contained entry went before its container loaded")
-      assert(outer.count() == 97)
-      Rounds.free(Rounds.persist(spark.range(1).toDF())) // any later free releases the waiting entry
-      assert(builder(inner).isEmpty, "the contained entry outlived its container's load")
-    }
-    assert(spark.sharedState.cacheManager.isEmpty, "an entry outlived its holders")
+    assert(!spark.sparkContext.getPersistentRDDs.contains(outerRdd),
+      "the outer pin outlived its scope")
   }
 
   test("entry flagship returns rows") {
@@ -2061,11 +2040,8 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("plan guards: wave 7/8 scale claims hold in the executed plans") {
-    // Plan-shape assertions are only well-defined against a clean cache:
-    // CacheManager substitutes any canonically-equal cached subtree, which
-    // changes where InMemoryTableScan nodes land and how many Generate
-    // occurrences the plan STRING prints. Each test's scope (SparkSuite)
-    // frees what earlier tests pinned, so this one starts clean.
+    // Every pin is a local checkpoint, which no other plan matches, so
+    // these shapes do not depend on what earlier tests pinned.
     withoutAqe {
       // EWMA: all k lag terms ride ONE ordered window pass — one key
       // exchange, one Window node
@@ -2086,24 +2062,22 @@ class OperatorSpec extends SparkSuite {
         .findAllIn(cdc.queryExecution.executedPlan.toString).size <= 1,
         "cdc apply should need a single Window pass")
       // PageRank: the shared edge/node/outdeg frames are materialized —
-      // the unrolled iterations read the cache, not the upstream join
+      // the unrolled iterations read the pinned checkpoints (`Scan
+      // ExistingRDD` leaves), not the upstream join
       val pr = SparkEntry.queries("graph_pagerank")(spark, sfDir)
-      assert(pr.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
-        "pagerank must read its persisted frames")
+      assert(pr.queryExecution.executedPlan.toString.contains("Scan ExistingRDD"),
+        "pagerank must read its pinned frames")
       // bm25: the corpus token explode is materialized ONCE — all three
       // downstream branches (df build, corpus constants, scoring) read
-      // the cached tf frame. The plan STRING prints the cached plan
-      // expanded under each InMemoryTableScan, so every Generate
-      // (explode) occurrence must be accounted for by a printed
-      // InMemoryRelation — an uncached branch would add a Generate
-      // without one.
+      // the pinned tf frame, a checkpoint leaf whose plan the string does
+      // not print, so an unpinned branch would add a Generate (explode)
       val bm = SparkEntry.queries("text_bm25")(spark, sfDir)
       val bmPlan = bm.queryExecution.executedPlan.toString
       def n(p: String, token: String) = token.r.findAllIn(p).size
-      assert(n(bmPlan, "InMemoryTableScan") == 3,
-        "bm25's three tf consumers must all read the persisted frame")
-      assert(n(bmPlan, "Generate") <= n(bmPlan, "InMemoryRelation"),
-        "bm25 re-runs the corpus explode outside the cache")
+      assert(n(bmPlan, "Scan ExistingRDD") == 3,
+        "bm25's three tf consumers must all read the pinned frame")
+      assert(n(bmPlan, "Generate") == 0,
+        "bm25 re-runs the corpus explode outside the pin")
       // snapshot diff: the join exchanges carry (key, md5) — never the
       // attribute payload
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -2150,12 +2124,12 @@ class OperatorSpec extends SparkSuite {
       assert(madPlan.contains("BroadcastHashJoin"), madPlan)
       assert(!madPlan.contains("Window"), "MAD must not plan a window")
       // PQ: the query distance table reaches the ADC join by broadcast;
-      // the codebook frame is persisted (read via InMemoryTableScan)
+      // the codebook frame is pinned (read via a Scan ExistingRDD leaf)
       val pq = SparkEntry.queries("ann_pq_topk")(spark, sfDir)
       val pqPlan = pq.queryExecution.executedPlan.toString
       assert(pqPlan.contains("BroadcastHashJoin"), pqPlan)
-      assert(pqPlan.contains("InMemoryTableScan"),
-        "PQ must read its persisted codebook/subvector frames")
+      assert(pqPlan.contains("Scan ExistingRDD"),
+        "PQ must read its pinned codebook/subvector frames")
     }
   }
 
@@ -2168,13 +2142,11 @@ class OperatorSpec extends SparkSuite {
       assert(silPlan.contains("BroadcastNestedLoopJoin") ||
         silPlan.contains("BroadcastHashJoin"), silPlan)
       // tfidf: the corpus explode materializes once — every reference to
-      // the (doc, term, tf) frame reads the cache (plan STRINGS repeat
-      // the lineage under each InMemoryRelation, so count cache scans,
-      // not Generate text)
+      // the (doc, term, tf) frame reads the pinned checkpoint
       val tf = SparkEntry.queries("text_tfidf_topk")(spark, sfDir)
       val tfPlan = tf.queryExecution.executedPlan.toString
-      assert("InMemoryTableScan".r.findAllIn(tfPlan).size >= 3,
-        s"tfidf must reuse the persisted type frame for tf/df/N:\n$tfPlan")
+      assert("Scan ExistingRDD".r.findAllIn(tfPlan).size >= 3,
+        s"tfidf must reuse the pinned type frame for tf/df/N:\n$tfPlan")
       // whitening: the PCA direction arrives as a 1-row broadcast; the
       // residual is the |q|^2 - proj^2 shortcut (no second vector pass,
       // so exactly the quantize projection + one broadcast join)
@@ -2189,12 +2161,12 @@ class OperatorSpec extends SparkSuite {
       assert("Generate".r.findAllIn(btPlan).size == 1, btPlan)
       assert(numShuffles(bt) == 1, btPlan)
       // decompose-anomaly: med/MAD moments broadcast back onto the
-      // persisted decomposed frame — no corpus-wide window for scoring
+      // pinned decomposed frame — no corpus-wide window for scoring
       val da = SparkEntry.queries("ts_decompose_anomaly")(spark, sfDir)
       val daPlan = da.queryExecution.executedPlan.toString
       assert(daPlan.contains("BroadcastHashJoin"), daPlan)
-      assert(daPlan.contains("InMemoryTableScan"),
-        "anomaly scoring must reuse the persisted decomposed frame")
+      assert(daPlan.contains("Scan ExistingRDD"),
+        "anomaly scoring must reuse the pinned decomposed frame")
     }
   }
 
@@ -3115,11 +3087,11 @@ class OperatorSpec extends SparkSuite {
       s"fused edge build diverged: ${got.take(5)}... vs ${expect.take(5)}...")
     // plan guard: exactly two corpus-keyed exchanges — the per-order
     // group and the pair-support aggregate; no self-join, no extra
-    // multiplicity stage (the build above freed its cached edge frame, so
-    // this plan is not a scan of it)
+    // multiplicity stage. Judged on the build coPurchaseEdges pins: the
+    // pinned frame's plan is one checkpoint leaf.
     withoutAqe {
-      val plan = Harness.materialize(GraphQueries.coPurchaseEdges(spark, sfDir))(
-        _.queryExecution.executedPlan.toString)
+      val plan = GraphQueries.coPurchaseWeighted(spark, sfDir).select($"a", $"b")
+        .queryExecution.executedPlan.toString
       val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).size
       assert(shuffles == 2,
         s"fused edge build must shuffle exactly twice, got $shuffles:\n" +
@@ -3943,10 +3915,6 @@ class OperatorSpec extends SparkSuite {
       // construction — constant-sized at any corpus scale
       case r: org.apache.spark.sql.execution.RangeExec
         if r.numElements <= BigInt(4096) => true
-      // a persisted frame (rel_chi2's cells) hides its plan behind an
-      // InMemoryTableScan leaf — judge the CACHED plan, not the leaf
-      case imts: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        collapsed(imts.relation.cachedPlan)
       // a reused exchange is a leaf that POINTS at the original exchange
       // (rel_quantile_merge's total row rides the sketch's single-
       // partition exchange twice) — judge the plan it reuses
@@ -5256,18 +5224,6 @@ class OperatorSpec extends SparkSuite {
     assert(old._2 == old._3 && old._5 == old._6, s"symmetry broken: $old")
     assert(neu == ((old._1, old._2, old._5, old._4)),
       s"folded moments drifted: $old vs $neu")
-  }
-
-  test("HITS edgesDistinct skips the dedup pass without changing scores") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7L)
-    val e = (1 to 120).map(_ => (rnd.nextInt(25).toLong, -rnd.nextInt(8) - 1L))
-      .distinct.toDF("src", "dst")
-    val base = Graph.hits(e, "src", "dst", iters = 3)
-      .as[(Long, Double, Double)].collect().sortBy(_._1).toSeq
-    val fast = Graph.hits(e, "src", "dst", iters = 3, edgesDistinct = true)
-      .as[(Long, Double, Double)].collect().sortBy(_._1).toSeq
-    assert(fast == base, s"scores drifted:\n$base\n$fast")
   }
 
   test("edgesCanonical closures equal the canonicalizing ones on canonical input") {
