@@ -940,7 +940,7 @@ object Dedup {
         .drop("__cn")
       val cellSizes = cells.groupBy(col("cid"), col("__sub"))
         .agg(count(lit(1)).as("__sn"))
-      // persisted: b, aSmall, and reps all read this frame — without it
+      // pinned: b, aSmall, and reps all read this frame — without it
       // the LSH projection + size join recompute once per branch (the
       // bm25 lesson this file already cites)
       val sized = Rounds.checkpoint(cells.join(cellSizes, Seq("cid", "__sub")), eager = false)

@@ -1579,7 +1579,7 @@ object Graph {
     * NOT persisted beyond the labels' internal pins: caching the refined
     * label frame for the rollup's three reads measured WORSE at sf0.1
     * (24.7 s -> 30.3 s — the extra materialization barrier outweighs
-    * three cheap joins over already-cached inputs; the same lesson
+    * three cheap joins over already-pinned inputs; the same lesson
     * SCALE.md records for the two-level Louvain rollup).
     *
     * Internal-edge leg from the WITHIN frame (r16): the generic rollup

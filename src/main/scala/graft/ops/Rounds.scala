@@ -46,11 +46,23 @@ import scala.collection.mutable.ArrayBuffer
   * cache it grows as refs^rounds (the k-core peel, 3 refs/round, OOM'd
   * explain at rounds=8).
   *
+  * Why a helper's leaf reports no partitioning: Spark's scan of a
+  * checkpoint leaf canonicalizes the attribute ids of its output
+  * partitioning and ordering as they are, so the two copies of one leaf
+  * a self-join makes never match, and an exchange over one copy is not
+  * reused for the other: the subtree above the pin runs twice. A leaf
+  * without partitioning is matched again, at the price of a shuffle
+  * where a consumer keys on the pin's old partitioning. A helper is
+  * pinned because several branches read it, so it takes that price; a
+  * round is read by the next round's join on the key it is partitioned
+  * by, so it keeps its partitioning.
+  *
   * The trade: checkpoint blocks live on executor-local storage with
   * lineage TRUNCATED. They are leak-free in a long-lived session (the
   * ContextCleaner frees them once the plan is unreachable), but an
   * executor loss — preemption, OOM kill, dynamic-allocation
-  * decommission — fails the job unrecoverably: there is no lineage to
+  * decommission — fails the job unrecoverably, for every pin alike,
+  * loop rounds and reused helpers: there is no lineage to
   * recompute the lost blocks from. Right for local runs and clusters
   * with static, reliable executors; on dynamic-allocation clusters run
   * such operators with `spark.checkpoint` to reliable storage instead,
@@ -91,16 +103,14 @@ private[graft] object Rounds {
     }
   }
 
-  /** Pin `df` as a localCheckpoint: eager by default, or lazy (written
-    * by the first action that reads it). */
-  def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val out = df.localCheckpoint(eager)
-    Option(current.get).foreach { scope =>
-      scope.pins += out
-      if (!eager) scope.sources += df
-    }
-    out
-  }
+  /** Pin `df` as a localCheckpoint: eager by default, for a loop's
+    * round, or lazy (written by the first action that reads it), for a
+    * reused helper. A lazy pin's leaf reports no output partitioning
+    * ([[GraftBridge.unpartitioned]]), so an exchange over one self-join
+    * copy of it is reused for the other; an eager round keeps its
+    * partitioning, which the next round joins on. */
+  def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame =
+    pin(df, eager, shared = !eager)
 
   /** [[checkpoint]] fused with the round's convergence probe: the
     * checkpoint is LAZY and the probe's aggregate is the action that
@@ -110,10 +120,20 @@ private[graft] object Rounds {
     * probe MUST run before the caller frees the previous round (a
     * lazily-checkpointed frame still reads its parent's blocks until its
     * own are written); returning the probe value enforces that order by
-    * construction. */
+    * construction. A round, so its leaf keeps its partitioning. */
   def checkpointWith[T](df: DataFrame)(probe: DataFrame => T): (DataFrame, T) = {
-    val out = checkpoint(df, eager = false)
+    val out = pin(df, eager = false, shared = false)
     (out, probe(out))
+  }
+
+  private def pin(df: DataFrame, eager: Boolean, shared: Boolean): DataFrame = {
+    val ckpt = df.localCheckpoint(eager)
+    val out = if (shared) GraftBridge.unpartitioned(ckpt) else ckpt
+    Option(current.get).foreach { scope =>
+      scope.pins += out
+      if (!eager) scope.sources += df
+    }
+    out
   }
 
   /** Release `frame` now: unpersists the checkpoint blocks its plan

@@ -722,11 +722,12 @@ object Similarity {
       val cur = edges(knn)
       val rev = edges(topkAgg(
         cur.select(col("cand").as("node"), col("node").as("cand"), col("sim"))))
-      // persisted: und feeds BOTH sides of the neighbor-of-neighbor
-      // self-join below — unpersisted, each side would recompute the
-      // reverse-cap aggregation (its own exchange) from the checkpoint
-      // (r15 perf pass; the frame is the already-k-bounded edge list,
-      // N·2k rows, so caching it is strictly cheaper than re-aggregating)
+      // pinned: und feeds BOTH sides of the neighbor-of-neighbor
+      // self-join below — unpinned, each side would recompute the
+      // reverse-cap aggregation (its own exchange) from the round's
+      // checkpoint (r15 perf pass; the frame is the already-k-bounded
+      // edge list, N·2k rows, so writing it once is cheaper than
+      // re-aggregating it per side)
       val und = Rounds.checkpoint(cur.select(col("node"), col("cand"))
         .unionAll(rev.select(col("node"), col("cand"))), eager = false)
       // distinct() is KEPT deliberately (r15, measured): retiring it in

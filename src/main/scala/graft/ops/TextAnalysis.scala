@@ -830,10 +830,9 @@ object TextAnalysis {
     for (it <- 1 to iterations) {
       // EAGER localCheckpoint (1 row): the round's merge table must
       // not keep a lineage reference to this round's toks — those
-      // blocks are freed next round, and a lazily-persisted m whose
-      // cache partition is later lost would recompute into a freed,
-      // lineage-truncated checkpoint and fail irrecoverably when
-      // bpeMerges finally evaluates `outs`.
+      // blocks are freed next round, and a lazy m not yet written
+      // when bpeMerges finally evaluates `outs` would read that freed
+      // checkpoint and fail irrecoverably.
       val m = Rounds.checkpoint(toks
         .withColumn("b", lead(col("tok"), 1).over(byWord))
         .filter(col("b").isNotNull && col("tok") =!= col("b"))
@@ -884,7 +883,7 @@ object TextAnalysis {
     * of a ≤|distinct words| state frame against the precomputed
     * best-match-per-(word,pos) frame; each round is localCheckpoint'ed
     * (every state frame is read twice: once as the next round's input,
-    * once in the final token union) and ALL rounds stay cached — total
+    * once in the final token union) and ALL rounds stay pinned — total
     * state is rounds × |distinct words| rows, vocab-scale by
     * construction. Words needing more than `rounds` tokens truncate
     * identically on both engines (the oracle's recursion carries the

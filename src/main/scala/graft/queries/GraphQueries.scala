@@ -883,15 +883,15 @@ object GraphQueries {
       // e pinned (r15 second pass): the union below references it twice
       // and exchange reuse does NOT collapse the duplicated
       // orders⋈lineitem aggregate across union legs (the graph_scc plan
-      // audit receipt) — so even adj's ONE persist materialization paid
+      // audit receipt) — so even adj's ONE pin materialization paid
       // the build twice.
       val e = Rounds.checkpoint(t(s, dir, "orders")
         .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("su"))
         .agg(count(lit(1)).as("w")))
-      // persisted: the relaxation joins this frame once per round (and
-      // the seed set derives from it) — without the cache each round
-      // re-runs the orders⋈lineitem build (the bfsDistances discipline)
+      // pinned: the relaxation joins this frame once per round (and
+      // the seed set derives from it) — unpinned, each round would
+      // re-run the union over `e` (the bfsDistances discipline)
       val adj = Rounds.checkpoint(e.select(col("c").as("src"), (-col("su") - 1).as("dst"), col("w"))
         .unionAll(e.select((-col("su") - 1).as("src"), col("c").as("dst"), col("w"))),
         eager = false)

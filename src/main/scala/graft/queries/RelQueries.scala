@@ -1506,21 +1506,8 @@ object RelQueries {
       val ranked = TwoLevelRank.rank(cnt, Nil, Seq("x"),
           expr(s"o_custkey div $stripeWidth"), Seq("o_custkey"), "i")
         .select(col("o_custkey"), col("x"), col("i"))
-      // The totals come from the key-count histogram, not from `ranked`:
-      // the c_v keys with x = v hold the consecutive ranks after the
-      // n_<v smaller keys, so Σ i·x = Σ_v v·(c_v·(n_<v + 1) + c_v(c_v − 1)/2)
-      // exactly. An aggregate of `ranked` itself would run the whole
-      // rank a second time: a self-join copies the `cnt` checkpoint
-      // leaf, and Spark's exchange reuse does not match the two copies
-      // (the leaf's output partitioning keeps its attribute ids when
-      // canonicalized).
-      val below = Window.orderBy(col("x"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val tot = cnt.groupBy(col("x")).agg(count(lit(1)).as("c"))
-        .withColumn("lt", coalesce(sum(col("c")).over(below), lit(0L)))
-        .agg(sum(col("x") * col("c")).as("sx"), sum(col("c")).as("nk"),
-          sum(col("x") * (col("c") * (col("lt") + 1) + expr("c * (c - 1) div 2")))
-            .as("six"))
+      val tot = ranked.agg(sum(col("x")).as("sx"), count(lit(1)).as("nk"),
+        sum(col("i") * col("x")).as("six"))
       ranked.crossJoin(broadcast(tot))
         .filter(col("i") > col("nk") - 5)
         .select(col("o_custkey"), col("x").as("n_orders"),

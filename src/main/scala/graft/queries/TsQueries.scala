@@ -331,7 +331,7 @@ object TsQueries {
     // Decomposition-residual anomalies: the residual channel of
     // ts_decompose scored with the robust median/MAD z (madOutliers) —
     // seasonality-aware anomaly detection, vs ts_mad_outliers' raw-value
-    // screen. The decomposed frame is persisted: med/MAD broadcasts and
+    // screen. The decomposed frame is pinned: med/MAD broadcasts and
     // the final join are three references.
     Case("ts_decompose_anomaly", { (s, dir) =>
       val d = Rounds.checkpoint(TimeSeries.decompose(t(s, dir, "events"), "ts", "event_type"),

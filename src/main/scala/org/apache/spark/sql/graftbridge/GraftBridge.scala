@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Re-exposes the few `private[sql]`/`private[spark]` members graft
   * needs; the object lives under `org.apache.spark.sql` for that reason
@@ -36,4 +38,19 @@ object GraftBridge {
     * a later read finds no blocks and fails in the checkpoint RDD, and no
     * live plan reads a freed round. A second call removes nothing. */
   def freeRdd(sc: SparkContext, id: Int): Unit = sc.unpersistRDD(id, blocking = false)
+
+  /** `ckpt`, a checkpointed frame, over a copy of its [[LogicalRDD]] leaf
+    * that reports no output partitioning or ordering; the leaf keeps its
+    * RDD and its statistics. `RDDScanExec` canonicalizes its output by
+    * position but leaves the attribute ids in its partitioning and
+    * ordering as they are, so the two copies of one leaf that a
+    * self-join makes never canonicalize alike, and Spark's exchange reuse
+    * never matches an exchange over one copy with the same exchange over
+    * the other. */
+  def unpartitioned(ckpt: DataFrame): DataFrame = ckpt.queryExecution.logical match {
+    case lr: LogicalRDD =>
+      val leaf = lr.makeCopy(Array(lr.output, lr.rdd, UnknownPartitioning(0), Nil,
+        Boolean.box(lr.isStreaming), lr.stream))
+      Dataset.ofRows(ckpt.sparkSession.asInstanceOf[ClassicSession], leaf)
+  }
 }

@@ -81,6 +81,23 @@ class OperatorSpec extends SparkSuite {
       "the outer pin outlived its scope")
   }
 
+  test("Rounds.checkpoint: an exchange over a lazy pin is reused across a self-join") {
+    // A leaf that kept the pin's hash partitioning on k would canonicalize
+    // with its own attribute ids, so the two copies the self-join makes
+    // would each shuffle the pin by n.
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    withoutAqe {
+      Rounds.scoped {
+        val pin = Rounds.checkpoint(spark.range(0, 1000)
+          .groupBy(($"id" % 97).as("k")).agg(count(lit(1)).as("n")), eager = false)
+        val byN = pin.groupBy($"n").agg(count(lit(1)).as("c"))
+        val plan = byN.join(byN.withColumnRenamed("c", "c2"), "n")
+          .queryExecution.executedPlan
+        assert(plan.collect { case r: ReusedExchangeExec => r }.nonEmpty, plan.toString)
+      }
+    }
+  }
+
   test("entry flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
