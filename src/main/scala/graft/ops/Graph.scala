@@ -708,17 +708,8 @@ object Graph {
     * Returns per-node labels (node, lbl); lbl = the component's minimum
     * node id — identical to what converged min-label produces, in
     * logarithmically many rounds instead of linearly many. */
-  def ccTwoStarsNodes(edges: DataFrame, maxRounds: Int = 24,
-      edgesCanonical: Boolean = false): DataFrame = {
-    // edgesCanonical = the caller guarantees a < b strictly on every row
-    // with no duplicates, so the canonicalization pass — and in
-    // particular its full edge-frame dedup exchange — would reorder and
-    // remove nothing (r16; the co-purchase build emits exactly this
-    // shape, and the leiden/bipartite derived frames provably preserve
-    // it — see each call site). The loop's own converged-shape
-    // verification below still guards the result loudly.
-    val canon = if (edgesCanonical) edges
-    else edges.filter(col("a") =!= col("b"))
+  def ccTwoStarsNodes(edges: DataFrame, maxRounds: Int = 24): DataFrame = {
+    val canon = edges.filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct()
@@ -1034,8 +1025,7 @@ object Graph {
     * cover labels — nothing new beyond the gated CC machinery. Ids must
     * stay below 2⁶²; ANSI mode makes an overflow loud.
     * Returns (node, component, color ∈ {0,1} or NULL, is_bipartite). */
-  def bipartiteColor(edges: DataFrame, maxRounds: Int = 24,
-      edgesCanonical: Boolean = false): DataFrame = {
+  def bipartiteColor(edges: DataFrame, maxRounds: Int = 24): DataFrame = {
     // ONE closure over the disjoint union of the original graph and its
     // double cover, id-encoded into disjoint spaces (original v → 4v+2,
     // cover (v, parity) → 4v+parity): the two component structures never
@@ -1047,16 +1037,11 @@ object Graph {
     // containing (c, 0) labels 4c (every other member 4v+p ≥ 4(c+1) >
     // 4c), and its partner — when bipartite — labels 4c+1 (members are
     // 4v+1 with v > c, all > 4c+1).
-    val e = if (edgesCanonical) edges else edges.filter(col("a") =!= col("b"))
-    // Canonicity survives the cover encoding: with a < b strictly,
-    // 4a+2 < 4b+2, 4a < 4b+1 and 4a+1 < 4b, and the three legs live in
-    // disjoint (mod 4, mod 4) code spaces, so a canonical distinct input
-    // yields a canonical distinct union — the closure may skip its own
-    // canonicalization pass exactly when the caller's input allows it.
+    val e = edges.filter(col("a") =!= col("b"))
     val union = e.select((col("a") * 4 + 2).as("a"), (col("b") * 4 + 2).as("b"))
       .unionAll(e.select((col("a") * 4).as("a"), (col("b") * 4 + 1).as("b")))
       .unionAll(e.select((col("a") * 4 + 1).as("a"), (col("b") * 4).as("b")))
-    val lbls = ccTwoStarsNodes(union, maxRounds, edgesCanonical)
+    val lbls = ccTwoStarsNodes(union, maxRounds)
     // Decode with exact integer division (div): Spark's `/` on longs is
     // DOUBLE division, which silently rounds node ids above ~2^51 —
     // `div` keeps the full 2^62-id headroom the encoding promises.
@@ -1090,9 +1075,8 @@ object Graph {
   /** [[ccTwoStarsNodes]] aggregated to one row per component —
     * (component, n_nodes, max_node), the [[labelPropagation]] output
     * shape with TRUE component minima as labels (not k-hop minima). */
-  def ccTwoStars(edges: DataFrame, maxRounds: Int = 24,
-      edgesCanonical: Boolean = false): DataFrame =
-    ccTwoStarsNodes(edges, maxRounds, edgesCanonical)
+  def ccTwoStars(edges: DataFrame, maxRounds: Int = 24): DataFrame =
+    ccTwoStarsNodes(edges, maxRounds)
       .groupBy(col("lbl"))
       .agg(count(lit(1)).as("n_nodes"), max(col("node")).as("max_node"))
       .select(col("lbl").as("component"), col("n_nodes"), col("max_node"))
@@ -1279,9 +1263,9 @@ object Graph {
     * 0.3–0.7: strong). All inputs are integer counts (within-community
     * edges, degree sums, m), so every per-community contribution is a
     * deterministic double and the total sums in DECIMAL — exactly the
-    * psiDrift gating trick. Plan: two broadcast-sized label joins over
-    * the edge list, two keyed aggregates, and a |communities|-row
-    * window. Returns (community, l_c, d_c, contrib, q_total). */
+    * psiDrift gating trick. Plan: label joins over the edge list and
+    * over its endpoint stream, two keyed aggregates, and a
+    * |communities|-row window. Returns (community, l_c, d_c, contrib, q_total). */
   def modularity(edges: DataFrame, nodeLabels: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val lbl = Rounds.checkpoint(nodeLabels, eager = false)
@@ -1291,15 +1275,11 @@ object Graph {
     val mRow = broadcast(edges.agg(count(lit(1)).cast("double").as("__m")))
     val within = labeled.filter(col("la") === col("lb"))
       .groupBy(col("la").as("community")).agg(count(lit(1)).as("l_c"))
-    // d_c = Σ_{v∈c} deg(v): aggregate the symmetrized endpoint stream to
-    // a node-scale degree frame FIRST, then join the labels onto |V|
-    // rows instead of 2|E| (r16; the per-community count of labeled
-    // endpoint rows it replaces is the same exact BIGINT).
+    // d_c = Σ_{v∈c} deg(v): the labeled endpoint rows per community
     val degSum = edges.select(col("a").as("node"))
       .unionAll(edges.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("__d"))
       .join(lbl, Seq("node"))
-      .groupBy(col("lbl").as("community")).agg(sum(col("__d")).as("d_c"))
+      .groupBy(col("lbl").as("community")).agg(count(lit(1)).as("d_c"))
     val all = Window.partitionBy(lit(1))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     degSum.join(within, Seq("community"), "left")
@@ -1408,51 +1388,16 @@ object Graph {
     *
     * Plan shape: the coarse frame is |communities|-scale — one keyed
     * count over the labeled edges — and everything at level 2 runs at
-    * that scale; the only original-graph-sized work is the level-1 pass
-    * and the node-keyed members aggregate (the internal-edge rollup
-    * derives from the coarse frame too — see below). Returns the
+    * that scale; the original-graph-sized work is the level-1 pass and
+    * the [[louvainRollup]] over the composed labels. Returns the
     * [[louvainLocalMove]] output shape over the composed communities. */
-  def louvainTwoLevel(edges: DataFrame): DataFrame = {
-    val (labels, le, l2) = twoLevelCore(edges)
-    val members = labels.groupBy(col("lbl").as("community"))
-      .agg(count(lit(1)).as("n_members"), min(col("node")).as("min_node"),
-        sum(col("d")).as("deg_sum"))
-    // Internal edges from the COARSE frame (r16; guide §2.3/§2.4): an
-    // original edge is internal to the COMPOSED partition iff its
-    // endpoints' level-1 communities map to the same level-2 label, so
-    // summing le.w over pairs with l2(ca) = l2(cb), grouped by that
-    // label, counts exactly the original within-community edges
-    // (coarse self-loops ca = cb are trivially internal, as their
-    // endpoints share the composed label). That replaces the generic
-    // rollup's two label joins over the FULL edge list with two
-    // community-scale joins — at 100 TB, edge-scale work becomes
-    // |communities|-scale. (The r9 "labeled-edge reuse measured worse"
-    // receipt was about re-using the labeled PRE-aggregate; the per-leg
-    // coarse frame le did not exist then.)
-    val internal = le
-      .join(l2.select(col("snode").as("ca"), col("lbl2").as("fa")), Seq("ca"))
-      .join(l2.select(col("snode").as("cb"), col("lbl2").as("fb")), Seq("cb"))
-      .filter(col("fa") === col("fb"))
-      .groupBy(col("fa").as("community"))
-      .agg(sum(col("w")).as("internal_edges"))
-    members.join(internal, Seq("community"), "left")
-      .select(col("community"), col("n_members"), col("min_node"),
-        col("deg_sum"),
-        coalesce(col("internal_edges"), lit(0L)).as("internal_edges"))
-  }
+  def louvainTwoLevel(edges: DataFrame): DataFrame =
+    louvainRollup(edges, louvainTwoLevelLabels(edges))
 
   /** The composed (node, lbl, d) assignment of [[louvainTwoLevel]] —
-    * exposed so partition quality is scorable via [[modularity]]. */
-  def louvainTwoLevelLabels(edges: DataFrame): DataFrame =
-    twoLevelCore(edges)._1
-
-  /** The two-level chain with its coarse intermediates exposed:
-    * (composed labels — checkpointed, coarse weighted edges le —
-    * persisted, coarse assignment l2 — lazily checkpointed, |C| rows).
-    * [[louvainTwoLevel]] derives its internal-edge rollup from le/l2
-    * instead of re-joining the full edge list. */
-  private def twoLevelCore(edges: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
+    * exposed so partition quality is scorable via [[modularity]].
+    * Checkpointed: callers must not checkpoint it again. */
+  def louvainTwoLevelLabels(edges: DataFrame): DataFrame = {
     val d38 = "decimal(38,0)"
     val l1 = louvainMoveLabels(edges)
     val le = Rounds.checkpoint(edges
@@ -1480,13 +1425,9 @@ object Graph {
       .groupBy(col("i"))
       .agg(max(struct(col("g"), (-col("j")).as("nj"))).as("m"))
       .select(col("i").as("snode"), (-col("m.nj")).as("lbl2"))
-    // lazy checkpoint: the labels checkpoint below materializes it as
-    // part of its own job, and louvainTwoLevel's internal-edge legs then
-    // read the pinned |C|-row frame instead of re-running the coarse
-    // gain chain per reference
-    val l2 = Rounds.checkpoint(degW.select(col("snode"))
+    val l2 = degW.select(col("snode"))
       .join(best, Seq("snode"), "left")
-      .select(col("snode"), coalesce(col("lbl2"), col("snode")).as("lbl2")), eager = false)
+      .select(col("snode"), coalesce(col("lbl2"), col("snode")).as("lbl2"))
     // localCheckpoint, not persist (r14 perf pass): the rollup reads
     // this frame three times, so with a lazy persist every downstream
     // plan still carries the FULL two-level logical tree and AQE
@@ -1494,12 +1435,10 @@ object Graph {
     // measured 14.9 s for graph_louvain_multilevel at sf0.1; truncating
     // the lineage here makes every rollup reference a leaf scan and
     // took the same query to 9.1 s on the same host (the
-    // leidenRefineLabels lesson applied one level down). Callers get a
-    // checkpointed frame — do NOT re-checkpoint it.
-    val labels = Rounds.checkpoint(l1
+    // leidenRefineLabels lesson applied one level down).
+    Rounds.checkpoint(l1
       .join(l2.select(col("snode").as("lbl"), col("lbl2")), Seq("lbl"))
       .select(col("node"), col("lbl2").as("lbl"), col("d")))
-    (labels, le, l2)
   }
 
   /** Leiden-style refinement of the two-level Louvain partition (Traag,
@@ -1527,8 +1466,7 @@ object Graph {
     * and one left join relabels. Returns (node, lbl, d) — the
     * [[louvainTwoLevelLabels]] shape, so [[louvainRollup]] and
     * [[modularity]] compose unchanged. */
-  def leidenRefineLabels(edges: DataFrame, maxRounds: Int = 24,
-      edgesCanonical: Boolean = false): DataFrame = {
+  def leidenRefineLabels(edges: DataFrame, maxRounds: Int = 24): DataFrame = {
     // The caller pins the edge frame (the graph queries pass the pinned
     // coPurchaseEdges): the Louvain chain plus the refinement references
     // it ~6 times (symmetrization, m, coarse build, the within-community
@@ -1546,69 +1484,26 @@ object Graph {
     // Truncating the lineage makes every downstream plan a leaf scan —
     // the bpeLoop/graph_hits lesson applied at the composition boundary.
     val l = louvainTwoLevelLabels(edges) // returns localCheckpoint'ed
-    val (labels, _) = leidenCore(edges, l, maxRounds,
-      edgesCanonical = edgesCanonical)
-    labels
-  }
-
-  /** The refinement step shared by [[leidenRefineLabels]] and
-    * [[leidenRefine]]: returns (refined labels, within-community edge
-    * frame — checkpointed when reused downstream). */
-  private def leidenCore(edges: DataFrame, l: DataFrame, maxRounds: Int,
-      pinWithin: Boolean = false,
-      edgesCanonical: Boolean = false): (DataFrame, DataFrame) = {
-    // the within frame is a row-subset of `edges` (two label joins, one
-    // per-edge filter, no reshaping), so it inherits the caller's
-    // canonical-distinct guarantee and the closure may skip its dedup
-    val within0 = edges
+    val within = edges
       .join(l.select(col("node").as("a"), col("lbl").as("la")), Seq("a"))
       .join(l.select(col("node").as("b"), col("lbl").as("lb")), Seq("b"))
       .filter(col("la") === col("lb"))
       .select(col("a"), col("b"))
-    val within = if (pinWithin) Rounds.checkpoint(within0) else within0
-    val comp = ccTwoStarsNodes(within, maxRounds, edgesCanonical)
-    val labels = l
-      .join(comp.select(col("node"), col("lbl").as("__c")), Seq("node"), "left")
+    val comp = ccTwoStarsNodes(within, maxRounds)
+    l.join(comp.select(col("node"), col("lbl").as("__c")), Seq("node"), "left")
       .select(col("node"), coalesce(col("__c"), col("node")).as("lbl"),
         col("d"))
-    (labels, within)
   }
 
   /** [[leidenRefineLabels]] rolled up to the [[louvainTwoLevel]] output
     * shape: (community, n_members, min_node, deg_sum, internal_edges).
-    * NOT persisted beyond the labels' internal pins: caching the refined
+    * NOT pinned beyond the labels' internal pins: caching the refined
     * label frame for the rollup's three reads measured WORSE at sf0.1
     * (24.7 s -> 30.3 s — the extra materialization barrier outweighs
-    * three cheap joins over already-pinned inputs; the same lesson
-    * SCALE.md records for the two-level Louvain rollup).
-    *
-    * Internal-edge leg from the WITHIN frame (r16): the generic rollup
-    * re-joined the full edge list against the refined labels twice, but
-    * by the [[leidenQuality]] within-edge-set identity the edges whose
-    * endpoints share a REFINED label are exactly the within-Louvain
-    * edges, each inside one refined community — so one relabel join of
-    * the (already checkpointed) within frame, grouped by the refined
-    * label of either endpoint, counts them. Edge-scale work becomes
-    * within-frame-scale; the oracle recomputes the rollup from scratch
-    * and stays green. */
-  def leidenRefine(edges: DataFrame, maxRounds: Int = 24,
-      edgesCanonical: Boolean = false): DataFrame = {
-    // `edges` comes pinned, as for leidenRefineLabels
-    val l = louvainTwoLevelLabels(edges) // returns localCheckpoint'ed
-    val (labels, within) = leidenCore(edges, l, maxRounds, pinWithin = true,
-      edgesCanonical = edgesCanonical)
-    val members = labels.groupBy(col("lbl").as("community"))
-      .agg(count(lit(1)).as("n_members"), min(col("node")).as("min_node"),
-        sum(col("d")).as("deg_sum"))
-    val internal = within.select(col("a"))
-      .join(labels.select(col("node").as("a"), col("lbl").as("fa")), Seq("a"))
-      .groupBy(col("fa").as("community"))
-      .agg(count(lit(1)).as("internal_edges"))
-    members.join(internal, Seq("community"), "left")
-      .select(col("community"), col("n_members"), col("min_node"),
-        col("deg_sum"),
-        coalesce(col("internal_edges"), lit(0L)).as("internal_edges"))
-  }
+    * three cheap joins over already-pinned inputs). The caller pins
+    * `edges`, as for [[leidenRefineLabels]]. */
+  def leidenRefine(edges: DataFrame, maxRounds: Int = 24): DataFrame =
+    louvainRollup(edges, leidenRefineLabels(edges, maxRounds))
 
   /** The Leiden GUARANTEES as one gated row — the two invariants Traag
     * et al. 2019 prove for the refinement, recomputed over the full
@@ -1633,8 +1528,7 @@ object Graph {
     * row. Returns (n_comm_louvain, n_comm_leiden, n_disconnected,
     * all_connected, q_scaled_louvain, q_scaled_leiden,
     * q_non_decrease). */
-  def leidenQuality(edges: DataFrame, maxRounds: Int = 24,
-      edgesCanonical: Boolean = false): DataFrame = {
+  def leidenQuality(edges: DataFrame, maxRounds: Int = 24): DataFrame = {
     // `edges` comes pinned, as for leidenRefineLabels
     val lou = louvainTwoLevelLabels(edges) // returns localCheckpoint'ed
     def withinOf(lf: DataFrame): DataFrame = edges
@@ -1645,10 +1539,7 @@ object Graph {
     // l_c modularity aggregate: pin it once instead of re-running the two
     // label joins per consumer (r15 optimization, second pass).
     val withinLou = Rounds.checkpoint(withinOf(lou))
-    // withinOf is a row-subset of `edges` (the leidenCore argument), so
-    // the canonical-distinct guarantee propagates to the closure input
-    val comp = ccTwoStarsNodes(withinLou.select(col("a"), col("b")),
-      maxRounds, edgesCanonical)
+    val comp = ccTwoStarsNodes(withinLou.select(col("a"), col("b")), maxRounds)
     val leiden = Rounds.checkpoint(lou
       .join(comp.select(col("node"), col("lbl").as("__c")), Seq("node"), "left")
       .select(col("node"), coalesce(col("__c"), col("node")).as("lbl"),

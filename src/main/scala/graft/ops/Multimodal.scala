@@ -718,9 +718,7 @@ object Multimodal {
       .filter(col("a") < col("b") &&
         bit_count(col("a").bitwiseXOR(col("b"))) <= hammingD)
       .select(col("a"), col("b")).distinct()
-    // a < b strictly and the line above dedups, so the closure may skip
-    // its own canonicalization pass (r16)
-    val comp = Graph.ccTwoStarsNodes(edges, edgesCanonical = true)
+    val comp = Graph.ccTwoStarsNodes(edges)
       .select(col("node").as("phash"), col("lbl").as("__g"))
     // singleton hashes have no edge → no component row → own group
     val withG = hashed

@@ -1325,12 +1325,7 @@ object Similarity {
       .join(core.select(col("id").as("ia")), Seq("ia"), "left_semi")
       .join(core.select(col("id").as("ib")), Seq("ib"), "left_semi")
       .select(col("ia").as("a"), col("ib").as("b"))
-    // each (ia, ib) pair lands exactly once (b's home cell is unique and
-    // a probes each neighbor cell once), ia < ib strictly, and semi-joins
-    // never duplicate — canonical distinct, so the closure may skip its
-    // canonicalization pass (r16)
-    val comp = Graph.ccTwoStarsNodes(ccEdges, maxRounds,
-      edgesCanonical = true)
+    val comp = Graph.ccTwoStarsNodes(ccEdges, maxRounds)
     val coreLbl = Rounds.checkpoint(core
       .join(comp.select(col("node").as("id"), col("lbl")), Seq("id"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster")), eager = false)

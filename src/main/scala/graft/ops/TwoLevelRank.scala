@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   *      one parallel shuffle, no single task sees more than a stripe;
   *   2. stripe totals collapse to one row per (partCols, orderCols,
   *      stripe); their ordered prefix sum is the only partition-less
-  *      window, over a frame stripe-width× smaller than the input
-  *      (recurse another level if even that is too wide);
+  *      window, over a frame stripe-width× smaller than the input;
   *   3. the prefix rejoins on the stripe keys — matching the intra
   *      window's partitioning, so only the collapsed side exchanges
   *      (set `broadcastPrefix` when the collapsed frame is provably
@@ -41,36 +40,26 @@ object TwoLevelRank {
 
   /** 1-based global rank (row_number semantics — ties broken by
     * tieCols) over the order (orderCols..., tieCols...) within each
-    * (partCols) group, as `out` (long).
-    *
-    * `levels` (default 2) is the prefix-pyramid depth: at 2, the
-    * collapsed (partCols, orderCols, stripe) frame crosses ONE ordered
-    * window per part group; at 3+, that frame's own prefix is computed
-    * by recursing with a 4096×-coarser stripe (`g div 4096` — requires
-    * a NUMERIC stripe), so each extra level divides the single-task
-    * frame by another 4096×. Two levels cover most corpora (a 10⁹-doc
-    * corpus striped by 4096 collapses to ≤ 244k rows × order-value
-    * cardinality); reach for 3 when orderCols are high-cardinality. */
+    * (partCols) group, as `out` (long). */
   def rank(df: DataFrame, partCols: Seq[String], orderCols: Seq[String],
       stripe: Column, tieCols: Seq[String], out: String,
-      broadcastPrefix: Boolean = false, levels: Int = 2): DataFrame =
+      broadcastPrefix: Boolean = false): DataFrame =
     compute(df, partCols, orderCols, stripe, tieCols, lit(1L), out,
-      broadcastPrefix, rankMode = true, levels)
+      broadcastPrefix, rankMode = true)
 
   /** EXCLUSIVE prefix sum of `value` (Σ over rows strictly preceding
-    * in the order) as `out` (long). `levels` as in [[rank]]. */
+    * in the order) as `out` (long). */
   def prefixSum(df: DataFrame, partCols: Seq[String], orderCols: Seq[String],
       stripe: Column, tieCols: Seq[String], value: Column, out: String,
-      broadcastPrefix: Boolean = false, levels: Int = 2): DataFrame =
+      broadcastPrefix: Boolean = false): DataFrame =
     compute(df, partCols, orderCols, stripe, tieCols, value, out,
-      broadcastPrefix, rankMode = false, levels)
+      broadcastPrefix, rankMode = false)
 
   private def compute(df: DataFrame, partCols: Seq[String],
       orderCols: Seq[String], stripe: Column, tieCols: Seq[String],
       value: Column, out: String, broadcastPrefix: Boolean,
-      rankMode: Boolean, levels: Int): DataFrame = {
+      rankMode: Boolean): DataFrame = {
     require(tieCols.nonEmpty, "tieCols must order rows within a stripe")
-    require(levels >= 2, "levels >= 2 (2 = one collapsed ordered window)")
     // __g is also the name the key-skew plan-shape spec pins on the
     // windowspecdefinition — keep it stable.
     val g = "__g"
@@ -84,24 +73,9 @@ object TwoLevelRank {
       .rowsBetween(Window.unboundedPreceding, -1)
     val collapsed = base.groupBy(keys.map(col): _*)
       .agg(sum(value).as("__tlr_tot"))
-    val prefix0 =
-      if (levels <= 2)
-        collapsed.select((keys.map(col) :+
-          coalesce(sum(col("__tlr_tot")).over(bucketW), lit(0L))
-            .as("__tlr_before")): _*)
-      else {
-        // recurse: the collapsed frame's own ordered prefix is two-level
-        // again, striped 4096× coarser — its rows are unique per
-        // (part, order, stripe), so the exclusive prefix sum over
-        // (orderCols, stripe) IS the before-cells total
-        val c2 = collapsed.withColumnRenamed(g, "__g0")
-        compute(c2, partCols, orderCols, expr("__g0 div 4096"),
-            Seq("__g0"), col("__tlr_tot"), "__tlr_rec",
-            broadcastPrefix = false, rankMode = false, levels - 1)
-          .withColumnRenamed("__g0", g)
-          .select((keys.map(col) :+
-            col("__tlr_rec").as("__tlr_before")): _*)
-      }
+    val prefix0 = collapsed.select((keys.map(col) :+
+      coalesce(sum(col("__tlr_tot")).over(bucketW), lit(0L))
+        .as("__tlr_before")): _*)
     val prefix = if (broadcastPrefix) broadcast(prefix0) else prefix0
     val intra =
       if (rankMode) row_number().over(intraW).cast("long")

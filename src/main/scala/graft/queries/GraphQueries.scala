@@ -69,18 +69,7 @@ object GraphQueries {
     * because random pairs rarely repeat. Real co-purchase analytics
     * always mine ABOVE a support floor for exactly this reason. */
   // Emits strictly-canonical distinct edges (a < b, one row per pair —
-  // the groupBy(a,b) output under the a < b pair filter). The leiden
-  // consumers pass edgesCanonical = true so their within-frame closures
-  // skip the dedup exchange; the DIRECT closure consumers
-  // (graph_cc_twostars, graph_bipartite) measured +11 %/+25 % with the
-  // skip and keep the default (r16 receipt). That receipt read this
-  // frame as a cache of 32 shuffle partitions, so without the dedup's
-  // AQE-sized exchange the closure's round-0 checkpoint landed as 32/96
-  // fixture-tiny partitions (tools/PartProbe, source at commit b627139:
-  // 96 vs 1 on the bipartite union) and the per-round scheduling
-  // overhead outweighed the saved shuffle. The frame is now a lazy
-  // checkpoint whose partitions AQE coalesces, so that cause is gone;
-  // the skip has not been re-measured since.
+  // the groupBy(a,b) output under the a < b pair filter).
   private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
     // Pinned at the edge frame itself (not only the symmetrized
     // copies the Graph ops pin internally): every graph_* query ALSO
@@ -704,31 +693,23 @@ object GraphQueries {
 
     // Degree assortativity (Newman 2002): Pearson r of endpoint degrees
     // over both edge orientations — every moment sum is an exact long,
-    // one IEEE expression at the end. r16: every moment over the
-    // SYMMETRIZED list folds onto one orientation — sym holds each edge
-    // (a,b) as both (a,b) and (b,a), so count(sym) = 2·|e|,
-    // Σ_sym du = Σ_e (d_a + d_b), Σ_sym du² = Σ_e (d_a² + d_b²),
-    // Σ_sym du·dv = 2·Σ_e d_a·d_b, and sy/syy equal sx/sxx by the same
-    // symmetry. ONE deg join pass over |E| rows and ONE grouped-free
-    // aggregate replace two joins over 2|E| rows; every BIGINT lands on
-    // the same exact value, so the final IEEE expression (with sy/syy
-    // substituted by their provably-equal twins) is bit-identical.
+    // one IEEE expression at the end.
     Case("graph_assortativity", { (s, dir) =>
       val e = coPurchaseEdges(s, dir) // already pinned at the op
-      val deg = e.select(col("a").as("node"))
-        .unionAll(e.select(col("b").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      val p = e
-        .join(deg.select(col("node").as("a"), col("d").as("da")), Seq("a"))
-        .join(deg.select(col("node").as("b"), col("d").as("db")), Seq("b"))
-      val m = p.agg((lit(2L) * count(lit(1))).as("m"),
-        sum(col("da") + col("db")).as("sx"),
-        sum(col("da") * col("da") + col("db") * col("db")).as("sxx"),
-        (lit(2L) * sum(col("da") * col("db"))).as("sxy"))
+      val sym = e.select(col("a").as("u"), col("b").as("v"))
+        .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+      val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
+      val m = sym
+        .join(deg.select(col("node").as("u"), col("d").as("du")), Seq("u"))
+        .join(deg.select(col("node").as("v"), col("d").as("dv")), Seq("v"))
+        .agg(count(lit(1)).as("m"), sum(col("du")).as("sx"),
+          sum(col("dv")).as("sy"), sum(col("du") * col("dv")).as("sxy"),
+          sum(col("du") * col("du")).as("sxx"),
+          sum(col("dv") * col("dv")).as("syy"))
       m.select(col("m"),
-        ((col("m") * col("sxy") - col("sx") * col("sx")).cast("double") /
+        ((col("m") * col("sxy") - col("sx") * col("sy")).cast("double") /
           sqrt((col("m") * col("sxx") - col("sx") * col("sx")).cast("double") *
-            (col("m") * col("sxx") - col("sx") * col("sx")).cast("double")))
+            (col("m") * col("syy") - col("sy") * col("sy")).cast("double")))
           .as("assortativity"))
     },
       Some(s"""WITH $coPurchaseCte,
@@ -1219,7 +1200,7 @@ object GraphQueries {
     // identical Louvain chain, then closes components with an independent
     // recursive transitive closure.
     Case("graph_leiden", (s, dir) =>
-      Graph.leidenRefine(coPurchaseEdges(s, dir), edgesCanonical = true),
+      Graph.leidenRefine(coPurchaseEdges(s, dir)),
       // Leiden-style connectivity refinement: replay the identical
       // two-level Louvain chain, then split each community into the
       // connected components of its OWN induced subgraph (recursive
@@ -1250,7 +1231,7 @@ object GraphQueries {
     // (Q·4m² = Σ 4m·l_c − d_c², a BIGINT comparison). The oracle
     // recomputes both invariants with its own recursive closures.
     Case("graph_leiden_quality", (s, dir) =>
-      Graph.leidenQuality(coPurchaseEdges(s, dir), edgesCanonical = true),
+      Graph.leidenQuality(coPurchaseEdges(s, dir)),
       // Same chain, then BOTH Leiden invariants recomputed independently:
       // a second recursive closure over the within-REFINED edges for
       // connectivity, and the exact scaled-integer modularity

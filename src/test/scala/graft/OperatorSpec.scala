@@ -3245,28 +3245,6 @@ class OperatorSpec extends SparkSuite {
     assert(gotSum == wantSum)
   }
 
-  test("TwoLevelRank levels=3: recursive prefix pyramid equals the flat forms") {
-    // ids spread over ~500k so stripe (id div 16) spans multiple
-    // 4096-wide COARSE buckets — the recursion actually branches
-    val rows = (0 until 500).map(i =>
-      (i * 997L, (i % 5).toLong, (i % 11).toLong)) // (id, v, w)
-    val df = rows.toDF("id", "v", "w")
-    val stripe = expr("id div 16")
-    val got3 = TwoLevelRank.rank(df, Nil, Seq("v"), stripe, Seq("id"), "r",
-        levels = 3)
-      .select($"id", $"r").as[(Long, Long)].collect().toMap
-    val want = rows.sortBy(r => (r._2, r._1)).zipWithIndex
-      .map { case (r, i) => r._1 -> (i + 1L) }.toMap
-    assert(got3 == want)
-    val got3s = TwoLevelRank.prefixSum(df, Nil, Seq("v"), stripe, Seq("id"),
-        $"w", "p", levels = 3)
-      .select($"id", $"p").as[(Long, Long)].collect().toMap
-    val sorted = rows.sortBy(r => (r._2, r._1))
-    val wantSum = sorted.zip(sorted.scanLeft(0L)(_ + _._3))
-      .map { case (r, pre) => r._1 -> pre }.toMap
-    assert(got3s == wantSum)
-  }
-
   test("TwoLevelRank.ntileFromRank matches ntile() for every N in 1..40") {
     // the exact SQL remainder convention, including N < n
     for (n <- Seq(1, 7, 8, 13, 40)) {
@@ -5208,62 +5186,28 @@ class OperatorSpec extends SparkSuite {
       got.toString)
   }
 
-  test("assortativity folded moments equal the symmetrized-join moments") {
+  test("two-star CC and bipartite: non-canonical input gives the canonical labels") {
     import spark.implicits._
-    // The r16 assortativity rewrite folds every moment of the
-    // symmetrized endpoint-degree stream onto ONE edge orientation:
-    // count(sym) = 2|e|, Σ_sym du = Σ_e (d_a+d_b),
-    // Σ_sym du² = Σ_e (d_a²+d_b²), Σ_sym du·dv = 2·Σ_e d_a·d_b, and
-    // sy/syy = sx/sxx by symmetry. Recompute both forms on a
-    // pseudorandom multi-component graph and assert the exact-BIGINT
-    // identities the rewrite relies on.
-    val rnd = new scala.util.Random(20160819L)
-    val e = (1 to 160).map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-      .filter { case (a, b) => a != b }
-      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .distinct.toDF("a", "b")
-    val deg = e.select($"a".as("node")).unionAll(e.select($"b".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("d"))
-    val sym = e.select($"a".as("u"), $"b".as("v"))
-      .unionAll(e.select($"b".as("u"), $"a".as("v")))
-    val old = sym
-      .join(deg.select($"node".as("u"), $"d".as("du")), Seq("u"))
-      .join(deg.select($"node".as("v"), $"d".as("dv")), Seq("v"))
-      .agg(count(lit(1)), sum($"du"), sum($"dv"), sum($"du" * $"dv"),
-        sum($"du" * $"du"), sum($"dv" * $"dv"))
-      .as[(Long, Long, Long, Long, Long, Long)].head()
-    val neu = e
-      .join(deg.select($"node".as("a"), $"d".as("da")), Seq("a"))
-      .join(deg.select($"node".as("b"), $"d".as("db")), Seq("b"))
-      .agg((lit(2L) * count(lit(1))), sum($"da" + $"db"),
-        sum($"da" * $"da" + $"db" * $"db"), lit(2L) * sum($"da" * $"db"))
-      .as[(Long, Long, Long, Long)].head()
-    assert(old._2 == old._3 && old._5 == old._6, s"symmetry broken: $old")
-    assert(neu == ((old._1, old._2, old._5, old._4)),
-      s"folded moments drifted: $old vs $neu")
-  }
-
-  test("edgesCanonical closures equal the canonicalizing ones on canonical input") {
-    import spark.implicits._
-    // The r16 edgesCanonical flag skips ccTwoStarsNodes' canonicalize+
-    // dedup pass when the caller guarantees strictly-canonical distinct
-    // edges. Assert label-for-label identity on a pseudorandom canonical
-    // multi-component graph, for the raw closure AND for the bipartite
-    // double cover (whose encoded union must preserve canonicity).
+    // Both closures canonicalize their own input: flipping orientations,
+    // repeating rows and adding a self-loop must leave every label as
+    // the strictly-canonical distinct edge list gives it.
     val rnd = new scala.util.Random(1608L)
-    val e = (1 to 150).map(_ => (rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+    val canon = (1 to 150).map(_ => (rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
       .filter { case (a, b) => a != b }
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .distinct.toDF("a", "b")
-    val base = Graph.ccTwoStarsNodes(e).as[(Long, Long)].collect().sorted.toSeq
-    val fast = Graph.ccTwoStarsNodes(e, edgesCanonical = true)
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(fast == base, "closure labels drifted under edgesCanonical")
-    val bBase = Graph.bipartiteColor(e)
+      .distinct
+    val messy = canon.zipWithIndex.flatMap { case ((a, b), i) =>
+      val row = if (i % 2 == 0) (b, a) else (a, b)
+      if (i % 3 == 0) Seq(row, (a, b), (b, a)) else Seq(row)
+    } :+ ((7L, 7L))
+    assert(messy.exists { case (a, b) => a > b } && messy.size > canon.size + 1)
+    val (e, m) = (canon.toDF("a", "b"), messy.toDF("a", "b"))
+    def cc(df: org.apache.spark.sql.DataFrame) =
+      Graph.ccTwoStarsNodes(df).as[(Long, Long)].collect().sorted.toSeq
+    assert(cc(m) == cc(e), "closure labels drifted on non-canonical input")
+    def bip(df: org.apache.spark.sql.DataFrame) = Graph.bipartiteColor(df)
       .as[(Long, Long, Option[Int], Boolean)].collect().sortBy(_._1).toSeq
-    val bFast = Graph.bipartiteColor(e, edgesCanonical = true)
-      .as[(Long, Long, Option[Int], Boolean)].collect().sortBy(_._1).toSeq
-    assert(bFast == bBase, "bipartite decode drifted under edgesCanonical")
+    assert(bip(m) == bip(e), "bipartite decode drifted on non-canonical input")
   }
 
   test("modularity d_c from the node-degree fold equals the endpoint count") {
@@ -5276,11 +5220,12 @@ class OperatorSpec extends SparkSuite {
     val nl = Graph.labelPropagationNodes(e, rounds = 2)
     val out = Graph.modularity(e, nl)
       .select($"community", $"d_c").as[(Long, Long)].collect().toMap
-    // the pre-r16 form: count labeled endpoint rows per community
-    val direct = e.select($"a".as("node")).unionAll(e.select($"b".as("node")))
-      .join(nl, Seq("node"))
-      .groupBy($"lbl").agg(count(lit(1)).as("d_c"))
-      .as[(Long, Long)].collect().toMap
-    assert(out == direct, s"d_c drifted: $direct vs $out")
+    // by hand: Σ deg(v) over each community's members
+    val deg = e.as[(Long, Long)].collect().toSeq
+      .flatMap { case (a, b) => Seq(a, b) }.groupBy(identity)
+      .map { case (v, ends) => v -> ends.size.toLong }
+    val byHand = nl.select($"node", $"lbl").as[(Long, Long)].collect().toSeq
+      .groupBy(_._2).map { case (c, ms) => c -> ms.map(m => deg(m._1)).sum }
+    assert(out == byHand, s"d_c drifted: $byHand vs $out")
   }
 }
